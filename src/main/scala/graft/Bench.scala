@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
   /** Between-queries hygiene: drop every cached block the previous
@@ -14,6 +14,38 @@ object Bench {
   private def hygiene(spark: SparkSession): Unit = {
     graft.core.Caches.releaseAll(spark)
     System.gc()
+  }
+
+  /** One pass over a set of gates: the wall seconds of every gate that
+    * completed, and the error of every gate that threw. A gate that
+    * throws gets no time, so it can neither look fast nor pull a total
+    * down.
+    */
+  private[graft] final case class Pass(
+      times: Map[String, Double], failed: Map[String, String])
+
+  /** Builds each gate and runs `action` on its frame, timing both;
+    * `cleanup` runs untimed after every gate, so the next one starts
+    * with a clean cache. Bench and Verify both drive their gates
+    * through this, so a throwing gate is recorded the same way in each.
+    */
+  private[graft] def runPass(spark: SparkSession, sfDir: String,
+      gates: Seq[(String, (SparkSession, String) => DataFrame)],
+      cleanup: SparkSession => Unit = hygiene)(
+      action: (String, DataFrame) => Unit): Pass = {
+    val times = Map.newBuilder[String, Double]
+    val failed = Map.newBuilder[String, String]
+    gates.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        action(name, fn(spark, sfDir))
+        times += name -> (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        failed += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
+      }
+      cleanup(spark)
+    }
+    Pass(times.result(), failed.result())
   }
 
   /** The round-1 bench battery (the 48 queries of BENCH_r01's
@@ -100,14 +132,9 @@ object Bench {
     }
     val q1Cold = q1Time()
     val q1Warm = q1Time()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        hygiene(spark) // untimed: next query starts with a clean cache
-        name -> dt
-    }.toMap
+    val gates = SparkEntry.queries.toSeq.sortBy(_._1)
+    val countPass = runPass(spark, sfDir, gates)((_, df) => df.count())
+    val results = countPass.times
     // Secondary FULL-evaluation pass through the noop sink: count()
     // lets Catalyst prune projection expressions and final sorts, so
     // it under-measures projection-heavy queries — and for gates
@@ -118,16 +145,12 @@ object Bench {
     // column. `value` stays count-based for comparability with
     // BASELINE's first recording; `full_total` is the honest
     // end-to-end throughput number — gate regression judgments on it.
-    val full = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        } catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        hygiene(spark)
-        name -> dt
-    }.toMap
+    val fullPass = runPass(spark, sfDir, gates)((_, df) =>
+      df.write.mode("overwrite").format("noop").save())
+    val full = fullPass.times
+    // every gate that threw in either pass, with its count-pass error
+    // when it threw in both
+    val failed = fullPass.failed ++ countPass.failed
     // leaked_rdds: persisted blocks still pinned after the final
     // hygiene pass — 0 proves no query ran against another's cache.
     val leaked = spark.sparkContext.getPersistentRDDs.size
@@ -196,7 +219,16 @@ object Bench {
         println(
           s"""{"metric":"per_query","queries":${js(chunk.toMap)}}""")
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","full_total":$fullTotal,"core_total":$coreTotal,"ext_total":$extTotal,"q1_cold":${r3(q1Cold)},"q1_warm":${r3(q1Warm)},"sf":"$sfDir"}""")
+    // failed gates by name on stdout (their errors go to stderr and
+    // BENCH_LOCAL.json), so the line stays small in the output tail
+    val failedNames = failed.keys.toSeq.sorted
+    val failedJs = failedNames
+      .map(n => jstr(n) + ":" + jstr(failed(n))).mkString("{", ",", "}")
+    failedNames.foreach(n =>
+      System.err.println(s"[bench] $n failed: ${failed(n)}"))
+    println(s"""{"metric":"failed","n_failed":${failed.size},""" +
+      s""""gates":${failedNames.map(jstr).mkString("[", ",", "]")}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","full_total":$fullTotal,"core_total":$coreTotal,"ext_total":$extTotal,"n_failed":${failed.size},"q1_cold":${r3(q1Cold)},"q1_warm":${r3(q1Warm)},"sf":"$sfDir"}""")
     // belt-and-braces: the machine-readable record also lands in a
     // file, immune to any stdout capture/prefix/truncation issues
     try java.nio.file.Files.write(
@@ -206,8 +238,10 @@ object Bench {
         s""""env":$env,""" +
         s""""core_total":$coreTotal,"core_full_total":$coreFullTotal,""" +
         s""""ext_total":$extTotal,"ext_full_total":$extFullTotal,""" +
-        s""""full_total":$fullTotal,"sf":"$sfDir"}""").getBytes("UTF-8"))
+        s""""full_total":$fullTotal,"n_failed":${failed.size},""" +
+        s""""failed":$failedJs,"sf":"$sfDir"}""").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

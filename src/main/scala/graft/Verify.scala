@@ -13,18 +13,14 @@ object Verify {
     }
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val gates = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // release the blocks operators staged for this query so the 70-
-      // query dump doesn't accumulate session-lifetime caches
-      graft.core.Caches.releaseAll(spark)
-    }
+    // cleanup releases the blocks operators staged for each query so
+    // the full dump doesn't accumulate session-lifetime caches
+    val failed = Bench.runPass(spark, sfDir, gates,
+      cleanup = graft.core.Caches.releaseAll) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.failed
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -41,5 +37,14 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a gate that threw has no output dir, and the oracle check only
+    // compares the dirs that exist: fail here so it cannot go unseen
+    if (failed.nonEmpty) {
+      failed.toSeq.sortBy(_._1).foreach { case (name, err) =>
+        System.err.println(s"[verify] $name failed: $err") }
+      System.err.println(s"[verify] ${failed.size} gate(s) failed: " +
+        failed.keys.toSeq.sorted.mkString(","))
+      sys.exit(1)
+    }
   }
 }

@@ -41,8 +41,10 @@ object QueryBridge {
       case KScalar =>
         carrier.select(to_json(d.col)).as[String].collect().toSeq
       case _ =>
+        // a NULL array collects as a null element: no rows
         carrier.select(transform(d.col, x => to_json(x)).as("j"))
-          .as[Seq[String]].collect().toSeq.flatten
+          .as[Seq[String]].collect().toSeq
+          .flatMap(Option(_).getOrElse(Seq.empty))
     }
     spark.read.json(json.toDS())
   }

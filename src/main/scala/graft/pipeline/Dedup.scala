@@ -74,15 +74,11 @@ object Dedup {
     * the RDD would physically plan the input a second time just to
     * count its splits. Unknown-stats plans (joins, huge default
     * sizeInBytes) estimate many splits and pass through unchanged,
-    * same as the many-split file case. `spark.graft.spread.partitions`
-    * overrides the decision explicitly (0 = auto, -1 = never spread).
+    * same as the many-split file case.
     */
   def spread(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val par = sess.sparkContext.defaultParallelism
-    val knob = sess.conf.get("spark.graft.spread.partitions", "0").toInt
-    if (knob > 0) return df.repartition(knob)
-    if (knob < 0) return df
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val split = org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(
@@ -699,6 +695,10 @@ object Dedup {
     * more than that many docs (the [[minhashCandidates]] skew guard —
     * a corpus-wide header would otherwise quadratically fan out its
     * bucket).
+    *
+    * Precondition: `idCol` is unique per row. Fingerprints are
+    * deduplicated per row, not per id, so two rows sharing an id
+    * count a shared fingerprint twice and inflate `n_shared`.
     */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 8, minShared: Int = 2,

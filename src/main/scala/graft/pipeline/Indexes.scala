@@ -370,7 +370,7 @@ object Indexes {
       // NB (round 18, measured and kept as-is): "share one token
       // exchange between the dfs aggregate and the postings write"
       // via a repartition(token)+persist was tried and is 2.5×
-      // SLOWER (PostingsWriteAb, interleaved medians 1.17 s vs
+      // SLOWER (OPTIMIZATION_r18.md, interleaved medians 1.17 s vs
       // 2.95 s, identical outputs) — the dfs groupBy partial-
       // aggregates map-side, so its exchange carries only the
       // distinct-token partials (KBs), while the "shared" layout
@@ -554,6 +554,10 @@ object Indexes {
     * (row-group min/max on h). Fingerprints are row-local, so the
     * append is merge-free and probe-equivalent to a rebuild (the
     * [[appendBinaryIndex]] argument).
+    *
+    * Precondition: `idCol` is unique per row. (id, h) is deduplicated
+    * per row, not across rows, so rows sharing an id store duplicate
+    * (id, h) entries and over-count shared fingerprints at probe time.
     */
   def writeWinnowIndex(corpus: DataFrame, idCol: String,
       textCol: String, path: String, k: Int = 4, w: Int = 8): Unit =
@@ -565,6 +569,10 @@ object Indexes {
   def openWinnowIndex(spark: SparkSession, path: String): DataFrame =
     openRecursive(spark, path)
 
+  /** Append a batch's fingerprints to a [[writeWinnowIndex]] artifact.
+    * Same precondition: `idCol` is unique per row, within the batch
+    * and against the ids already in the index.
+    */
   def appendWinnowIndex(batch: DataFrame, idCol: String,
       textCol: String, path: String, k: Int = 4, w: Int = 8): Unit =
     winnowFrame(batch, idCol, textCol, k, w)
@@ -716,7 +724,7 @@ object Indexes {
       // 4 keys per media row means batches cross into
       // giant-literal-In territory far sooner than winnow's sparse
       // fingerprints: measured at 20k keys the literal plan costs
-      // 2.8x the semi-join (tools/MediaProbeAb), so the literal path
+      // 2.8x the semi-join (recorded in commit a86ff8a), so the literal path
       // is reserved for genuinely small ingest batches
       maxProbeKeys: Int = 4096,
       excludeSameId: Boolean = true): DataFrame = {

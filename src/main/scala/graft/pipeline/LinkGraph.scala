@@ -48,8 +48,8 @@ object LinkGraph {
     // leaves the cache hash(src)-partitioned — exactly the layout the
     // per-round contrib join probes — so no explicit repartition is
     // needed here, unlike dupGroups/labelProp whose edge frames
-    // arrive unpartitioned (measured round 18, LayoutShuffleAb at
-    // sf1 under forced SMJ: per-round shuffle bytes identical with
+    // arrive unpartitioned (measured round 18, OPTIMIZATION_r18.md:
+    // at sf1 under forced SMJ, per-round shuffle bytes identical with
     // and without an explicit repartition(src))
     val e = graft.core.Caches.stage(e0.withColumn("out_w",
       sum("w").over(org.apache.spark.sql.expressions.Window

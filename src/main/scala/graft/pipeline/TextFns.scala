@@ -608,9 +608,10 @@ object TextFns {
     * the corpus-scan form (BpeNative tokenizes text and then works
     * word-by-word, so pairs-of(text) = ⋃ pairs-of(word) with
     * occurrence multiplicity = word count; TokenizerSpec pins
-    * equality against [[bpeTrainCorpusScan]], and graft.tools.BpeAb
-    * re-asserts it at scale). Measured A/B (BpeAb, warm medians,
-    * within-rep order alternated, BENCH_sf1_r12.json): sf1 4 merges
+    * equality against [[bpeTrainCorpusScan]]; the sf1 A/B recorded
+    * in BENCH_sf1_r12.json asserted trajectory equality at scale).
+    * Measured A/B (warm medians, within-rep order alternated,
+    * BENCH_sf1_r12.json `bpe_ab` records): sf1 4 merges
     * 1.96 → 0.52 s (3.8×), sf1 16 merges 8.07 → 1.66 s (4.9×) — the
     * gap widens with merge count exactly as the cost model predicts.
     *

@@ -170,8 +170,8 @@ object ExpressQueries {
     * reducers idle at the final aggregation, the worst key-distribution
     * shape for the cascade. The cascade stays safe because the inner
     * levels key on (status, priority, okey) prefixes that spread load;
-    * the measured alternative (single root-keyed shuffle, see
-    * tools/ExpressDeepExperiment + ROADMAP round-9 notes) would put
+    * the measured alternative (single root-keyed shuffle, recorded
+    * under ROADMAP "Settled by measurement", round 9) would put
     * ~1/3 of the corpus in ONE task's buffer. Orders are sampled
     * deterministically (okey % 100) to bound the leaf lists the gate
     * hash-compares; the 3-key skew shape is unaffected.

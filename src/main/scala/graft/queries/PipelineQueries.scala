@@ -1217,8 +1217,8 @@ object PipelineQueries {
     // train gram occurs in the eval suite (the guide-§3.2
     // selectivity precondition fails), so the filter dropped almost
     // nothing and its extra eval-side build action made the stage
-    // 1.6× SLOWER (CurateBloomAb, interleaved medians 1.73 s off vs
-    // 2.74 s on at sf0.1; identical 65-pair output). The flag stays
+    // 1.6× SLOWER (OPTIMIZATION_r18.md: interleaved medians 1.73 s
+    // off vs 2.74 s on at sf0.1; identical 65-pair output). The flag stays
     // for n = 8-class gram widths where train∩eval is sparse.
     val contaminated = graft.pipeline.Decontam.contamination(
         deduped, "doc_id", evalDocs, "doc_id", "text",
@@ -1664,7 +1664,7 @@ object PipelineQueries {
     // Partner counts vs a FIXED 500-doc probe set (the production
     // incremental-check shape, winnowPairsAgainst), NOT the all-pairs
     // self-join: on a shared-vocabulary corpus the self-join's true
-    // pair volume grows quadratically with SF (r10 WinnowProbe:
+    // pair volume grows quadratically with SF (BASELINE.md round 10:
     // 3.79 M pairs at sf10 — candidate volume IS the cost), so the
     // density-blind gate degraded every decade. The fixed-probe gate
     // measures the operator linearly (corpus fingerprint scan +
@@ -1794,7 +1794,8 @@ object PipelineQueries {
     * digit-word ≥ 2), entities via min-label components. maxBucket =
     * 100: the suffix keyspace is 15 values over 20k rows, and its
     * just-under-1000 buckets alone would fan out 1.2M junk
-    * candidates — the cap measurement that sized it is ErProbe. Oracle:
+    * candidates — the cap measurement that sized it is recorded in
+    * OPTIMIZATION_r17.md. Oracle:
     * the identical registry, blocking, cap and verify in SQL plus the
     * recursive-CTE transitive closure.
     */
@@ -1804,7 +1805,7 @@ object PipelineQueries {
     val digits = reverse(lpad(col("ck").cast("string"), 6, "0"))
     // digit-speller as a per-char word LOOKUP (round 18, guide §4):
     // bit-equal to the previous 10-deep chained regexp_replace
-    // (NmAb probe: 0 mismatches; words contain no digits so the
+    // (OPTIMIZATION_r18.md: 0 mismatches; words contain no digits so the
     // chain's replacements never interacted), ~30% cheaper warm and
     // a far smaller codegen unit
     val wordArr = array(words.map(lit): _*)

@@ -448,11 +448,17 @@ object Shred {
 
   /** Open a [[shredWrite]] artifact in canonical triple-column order
     * (partitionBy appends `a` to the raw read schema; queries and
-    * [[unshredPersisted]] both want (e,a,v,vt,vn)).
+    * [[unshredPersisted]] both want (e,a,v,vt,vn)). The read schema is
+    * explicit: when every attribute name looks like a number, date or
+    * boolean (`a=2024`), partition type inference would read `a` as a
+    * non-string column, which changes the triple frame's type and its
+    * row JSON, so [[auditPersisted]] would call an intact artifact
+    * tampered.
     */
   def openShred(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(path).select("e", "a", "v", "vt", "vn")
+    spark.read.schema(tripleSchema).parquet(path)
+      .select("e", "a", "v", "vt", "vn")
 
   /** [[unshredSource]] for PERSISTED shreds: a frame that is exactly
     * a fresh [[openShred]] read of a [[shredWrite]] artifact recovers

@@ -1,7 +1,7 @@
 package graft.tools
 
 /** Generic per-JOB wall-time attribution for any declared gate — the
-  * round-18 generalization of RmMixedProbe's listener half. Runs the
+  * round-18 generalization of the `q_rm_mixed` listener probe. Runs the
   * gate once unrecorded (codegen + IO cache), then once with a job
   * listener, and prints each job's wall ms labeled by its trigger
   * callsite (first stage name), plus totals. The fixed-job-overhead

@@ -13,6 +13,16 @@ class RMQuerySpec extends SparkSpec {
       s"""RM "$src" => $got, expected Some($expected)""")
   }
 
+  test("a literal NULL array bridges to an empty frame") {
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.types._
+    // an array of objects (dt is the element type), NULL as a whole
+    val obj = StructType(Seq(StructField("a", StringType)))
+    val nullArr = Compiler.CD(lit(null).cast(ArrayType(obj)), obj,
+      Compiler.KJson)
+    assert(QueryBridge.cdToDf(spark, nullArr).count() == 0)
+  }
+
   test("wildcard attribute query (query_test:104-110)") {
     val src =
       """( $data := [{'person_fname' : 'Peter', 'person_lname' : 'Dee'}];

@@ -404,7 +404,7 @@ class PipelineSpec extends SparkSpec {
       s"NFD must not waste more than doc order: $nfd vs $doc")
     // at a real context ratio (capacity = 4 windows) size-sorting is
     // a strict win — 11.3% → 3.8% padded tokens on this corpus
-    // (tools.WasteProbe sweeps the ratio; ROADMAP records the call)
+    // (COVERAGE.md records the capacity-ratio sweep)
     def waste128(bySize: Boolean): Double =
       TextFns.packingStats(TextFns.assembleBatchesStrict(d, "doc_id",
         "text", 32, 128, 8, bySize), 128)
@@ -1410,14 +1410,6 @@ class PipelineSpec extends SparkSpec {
     val one = spark.read.parquet(sf() + "/documents.parquet")
       .select($"doc_id", $"text")
     assert(Dedup.spread(one).rdd.getNumPartitions == par)
-    // explicit knob: fixed width, and -1 disables entirely
-    spark.conf.set("spark.graft.spread.partitions", "3")
-    try assert(Dedup.spread(one).rdd.getNumPartitions == 3)
-    finally spark.conf.set("spark.graft.spread.partitions", "0")
-    spark.conf.set("spark.graft.spread.partitions", "-1")
-    try assert(Dedup.spread(one).rdd.getNumPartitions ==
-      one.rdd.getNumPartitions)
-    finally spark.conf.unset("spark.graft.spread.partitions")
     // a wide (unknown-stats) plan passes through: no forced exchange
     val joined = one.as("a").join(one.as("b"), "doc_id")
     assert(Dedup.spread(joined) eq joined)

@@ -17,7 +17,7 @@ object AnalyticsProps extends Properties("graft.analytics") {
   private lazy val spark = graft.SparkSpec.session
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(4)
+    PropBudget(p, 4)
 
   private val Steps = Seq("s0", "s1", "s2")
   private val WinUs = 120L * 1000000L // = 2 min exactly

@@ -30,8 +30,7 @@ object DirectNativeProps extends Properties("graft.query.native") {
   private lazy val spark = graft.SparkSpec.session
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(
-      sys.env.get("GRAFT_PROP_N").map(_.toInt).getOrElse(24))
+    PropBudget(p, 24)
 
   private val dec2 = DecimalType(12, 2)
   private val dec0 = DecimalType(10, 0)

@@ -31,8 +31,7 @@ object EavRegroupProps extends Properties("graft.query.regroup") {
   private lazy val spark = graft.SparkSpec.session
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(
-      sys.env.get("GRAFT_PROP_N").map(_.toInt).getOrElse(24))
+    PropBudget(p, 24)
 
   private def valueGen(dt: DataType): Gen[Any] = {
     val g: Gen[Any] = dt match {

@@ -26,8 +26,7 @@ object EavTypedProps extends Properties("graft.query.eavtyped") {
   private lazy val spark = graft.SparkSpec.session
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(
-      sys.env.get("GRAFT_PROP_N").map(_.toInt).getOrElse(12))
+    PropBudget(p, 12)
 
   private val tripleSchema = StructType(Seq(
     StructField("e", StringType), StructField("a", StringType),

@@ -1,6 +1,6 @@
 package graft.props
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import graft.lang.RM
 
@@ -14,6 +14,9 @@ import graft.lang.RM
   * pin, so the model is ground truth, not a second guess.
   */
 object HeteroProps extends Properties("graft.lang.hetero") {
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    PropBudget(p)
 
   private lazy val spark = graft.SparkSpec.session
 

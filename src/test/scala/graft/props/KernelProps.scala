@@ -1,6 +1,6 @@
 package graft.props
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,6 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * brute-force references.
   */
 object KernelProps extends Properties("graft.kernels") {
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    PropBudget(p)
 
   private val word: Gen[String] =
     Gen.chooseNum(1, 10).flatMap(n =>

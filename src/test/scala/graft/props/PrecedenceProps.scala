@@ -1,6 +1,6 @@
 package graft.props
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import graft.lang.RM
 
@@ -11,6 +11,9 @@ import graft.lang.RM
   * `+ -`, all left-associative).
   */
 object PrecedenceProps extends Properties("graft.lang.precedence") {
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    PropBudget(p)
 
   private lazy val spark = graft.SparkSpec.session
 

@@ -1,6 +1,6 @@
 package graft.props
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import graft.core.Finalize
 import graft.core.Finalize.Container
@@ -10,6 +10,9 @@ import graft.functions.{DatePictures, NumberWords}
   * flattening rules and number/date codecs).
   */
 object PureProps extends Properties("graft.pure") {
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    PropBudget(p)
 
   // ---- jflatten laws (builtin_macros.cljc:49-98) ----
 

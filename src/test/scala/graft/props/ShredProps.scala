@@ -29,8 +29,7 @@ object ShredProps extends Properties("graft.shred") {
   private lazy val spark = graft.SparkSpec.session
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(
-      sys.env.get("GRAFT_PROP_N").map(_.toInt).getOrElse(5))
+    PropBudget(p, 5)
 
   // ---- random JSON documents ------------------------------------
 

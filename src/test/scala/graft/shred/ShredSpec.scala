@@ -222,4 +222,20 @@ class ShredSpec extends SparkSpec {
     assert(!Shred.auditPersisted(spark, s"$base/docs"))
   }
 
+  test("attribute names that look numeric reopen as string partitions") {
+    // every partition directory reads `a=<digits>`, so without the
+    // explicit read schema `a` would infer as an int column, changing
+    // the reopened frame's type and its row JSON
+    val base = "/tmp/graft_shred_spec_numeric_attr"
+    spark.read.json(Seq("""{"2023": "x", "2024": 1}""",
+        """{"2023": "y", "2024": 2}""").toDS())
+      .write.mode("overwrite").parquet(s"$base/docs")
+    Shred.shredWrite(spark, s"$base/docs", None, s"$base/triples")
+    val opened = Shred.openShred(spark, s"$base/triples")
+    assert(Shred.isTriplesFrame(opened), opened.schema.treeString)
+    assert(opened.filter($"a" === "2024").count() == 2)
+    assert(Shred.auditPersisted(spark, s"$base/triples"))
+    assert(Shred.unshredPersisted(opened).isDefined)
+  }
+
 }
