@@ -13,11 +13,11 @@ import org.apache.spark.sql.graftglue.ColumnGlue
   *   graft.GraftExtensions.registerFunctions(spark)
   * }}}
   *
-  * Injects the graft optimizer rule
-  * ([[graft.plans.SimplifyElementAtArray]]) and registers the
-  * pipeline's scalar functions in the session's FunctionRegistry so
-  * plain `spark.sql` — and therefore every SQL-speaking client of a
-  * cluster configured with the extension — can call them:
+  * Injects the graft optimizer rules ([[graft.Sessions.rules]]) and
+  * registers the pipeline's scalar functions in the session's
+  * FunctionRegistry so plain `spark.sql` — and therefore every
+  * SQL-speaking client of a cluster configured with the extension —
+  * can call them:
   *
   * {{{
   *   SELECT graft_simhash(text), graft_token_counts(text) FROM docs
@@ -28,8 +28,7 @@ import org.apache.spark.sql.graftglue.ColumnGlue
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => graft.plans.SimplifyElementAtArray)
-    ext.injectOptimizerRule(_ => graft.plans.UnshredEav)
+    graft.Sessions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
     GraftExtensions.functions.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         GraftExtensions.info(name, usage), builder))
@@ -481,12 +480,12 @@ object GraftExtensions {
         viaColumn(graft.functions.CurateSignals.apply)(args.head)
       }))
 
-  /** Register the same functions (and the optimizer rule) on an
+  /** Register the same functions (and the optimizer rules) on an
     * already-running session — the REPL/notebook path where
     * spark.sql.extensions wasn't set at startup.
     */
   def registerFunctions(spark: SparkSession): Unit = {
-    graft.plans.SimplifyElementAtArray.install(spark)
+    graft.Sessions.installRules(spark)
     val reg = spark.sessionState.functionRegistry
     functions.foreach { case (name, usage, builder) =>
       reg.registerFunction(FunctionIdentifier(name), info(name, usage),

@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** The one SparkSession construction path for every graft entry point
   * (Bench, Verify, the tools mains, specs via SparkSpec). Centralized
-  * so the graft plan rules — [[graft.plans.SimplifyElementAtArray]] —
-  * are installed EVERYWHERE: a session built without them explains and
+  * so the graft plan rules ([[installRules]]) are installed
+  * EVERYWHERE: a session built without them explains and
   * profiles different plans than the benched/verified ones.
   */
 object Sessions {
@@ -68,8 +70,22 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.SimplifyElementAtArray.install(spark)
-    graft.plans.UnshredEav.install(spark)
+    installRules(spark)
     spark
+  }
+
+  /** graft's plan rules: the one list every session runs, whether
+    * built here, by the specs, or configured with [[GraftExtensions]].
+    */
+  val rules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.SimplifyElementAtArray, graft.plans.UnshredEav)
+
+  /** Install [[rules]] on a running session (experimental batch),
+    * idempotently.
+    */
+  def installRules(spark: SparkSession): Unit = {
+    val cur = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      cur ++ rules.filterNot(cur.contains)
   }
 }

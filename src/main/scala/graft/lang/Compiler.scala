@@ -388,7 +388,7 @@ object Compiler {
     */
   private[lang] def constEval(c: Column): Option[Any] = {
     val spark = sparkCtx.value
-    if (spark == null) return None
+    if (spark == null || hasFreeLambdaVar(c)) return None
     try {
       // Dataset construction runs ANALYSIS only (no job); the session
       // converter resolves Spark 4's lazy ColumnNode wrappers, which
@@ -407,6 +407,26 @@ object Compiler {
         None
       else Some(pe.eval(org.apache.spark.sql.catalyst.InternalRow.empty))
     } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** Does `c` read a lambda variable outside the lambda that binds
+    * it (a higher-order function body compiled before its lambda
+    * wraps it)? Such a tree is row-bound and cannot be analyzed on
+    * its own: the failed analysis would surface as an ERROR from
+    * Spark's listener bus, not only as constEval's None.
+    */
+  private def hasFreeLambdaVar(c: Column): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression,
+      LambdaFunction, UnresolvedNamedLambdaVariable}
+    def free(e: Expression, bound: Set[Seq[String]]): Boolean = e match {
+      case LambdaFunction(body, args, _) =>
+        free(body, bound ++ args.collect {
+          case v: UnresolvedNamedLambdaVariable => v.nameParts })
+      case v: UnresolvedNamedLambdaVariable => !bound(v.nameParts)
+      case _ => e.children.exists(free(_, bound))
+    }
+    free(org.apache.spark.sql.graftglue.ColumnGlue.resolvedExpression(c),
+      Set.empty)
   }
 
   /** Driver-side literal of a (constant) scalar argument. Local

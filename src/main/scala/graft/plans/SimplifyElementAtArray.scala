@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{CreateArray, ElementAt, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -33,11 +32,4 @@ object SimplifyElementAtArray extends Rule[LogicalPlan] {
         val idx = if (i > 0) i - 1 else ca.children.size + i
         ca.children(idx)
     }
-
-  /** Idempotently register on a session (experimental batch). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
 }

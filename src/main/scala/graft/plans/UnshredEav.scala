@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
-import graft.shred.ShredGenerator
+import graft.shred.{Shred, ShredGenerator}
 
 /** EAV "unshredding" (SURVEY §4 item 7): collapse a triple-pattern
   * filter over a shredded document frame back into a narrow projection
@@ -26,22 +25,23 @@ import graft.shred.ShredGenerator
   * }}}
   *
   * which Catalyst then pushes into the scan: ReadSchema shrinks to the
-  * referenced column and the IsNotNull reaches PushedFilters. This is
-  * the rule form of `QueryCompiler.runDocs` — but it also covers the
-  * shapes runDocs refuses: attributes nested under ref-typed struct
-  * attrs (the sub-entity chain `[?e :addr ?a][?a :city ?c]` keeps its
-  * join, but each side becomes a narrow scan), and frames the user
-  * shredded explicitly.
+  * referenced column and the IsNotNull reaches PushedFilters. The
+  * compile-time regroup tier (`QueryCompiler.regroupShredded`) plans
+  * most constant-attribute `query{}`s over a shred before any filter
+  * exists; this rule serves what reaches the triple form anyway:
+  * queries the regroup tier declines (the typed-EAV tier then keeps
+  * its joins, but each side becomes a narrow scan) and filters users
+  * write over a shred themselves.
   *
   * Soundness rules (any miss ⇒ the plan is left alone):
   *  - the filter must pin `a` to a string literal; remaining conjuncts
   *    stay in a Filter above the rewrite;
   *  - every schema site of the attribute must be reconstructible: a
-  *    top-level or struct-nested field of string/numeric/boolean type,
-  *    or a struct (ref triple). Sites at or under arrays keep the
-  *    generator (element-indexed entity ids need the explode), and so
-  *    do types whose generator canon is not `cast(string)`
-  *    (date/timestamp/binary);
+  *    top-level or struct-nested field of a type the triple contract
+  *    renders like `Cast` (`Shred.rendersLikeCast`), or a struct (ref
+  *    triple). Sites at or under arrays keep the generator
+  *    (element-indexed entity ids need the explode), and so do binary
+  *    and TimestampNTZ fields;
   *  - the entity-id and row expressions must be deterministic (they
   *    get duplicated per site);
   *  - the Generate must not also forward child columns.
@@ -49,23 +49,18 @@ import graft.shred.ShredGenerator
   * Multiple sites of one attribute union their projections (first
   * branch keeps the generator's exprIds, so parent references bind
   * unchanged); an attribute provably absent from the schema rewrites
-  * to an empty relation.
-  *
-  * Controlled by `spark.graft.unshred.enabled` (default true).
+  * to an empty relation. The values come from the shared triple
+  * contract (`Shred.canonExpr`), so they are the generator's.
   */
 object UnshredEav extends Rule[LogicalPlan] with PredicateHelper {
 
-  val FLAG = "spark.graft.unshred.enabled"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString(FLAG, "true") != "true") return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case f @ Filter(cond, g: Generate)
           if g.generator.isInstanceOf[ShredGenerator] &&
             !g.outer && g.requiredChildOutput.isEmpty =>
         rewrite(f, cond, g).getOrElse(f)
     }
-  }
 
   /** One reconstructible schema occurrence of the attribute. */
   private final case class Site(
@@ -99,24 +94,7 @@ object UnshredEav extends Rule[LogicalPlan] with PredicateHelper {
     if (aNames.size != 1) return None
     val attrName = aNames.head
 
-    // generator child must be the analyzed struct(e, row) build
-    def strip(e: Expression): Expression = e match {
-      case a: Alias => strip(a.child)
-      case e => e
-    }
-    val (eExpr, rowEntries) = strip(gen.child) match {
-      case cns: CreateNamedStruct if cns.valExprs.size == 2 =>
-        strip(cns.valExprs(1)) match {
-          case row: CreateNamedStruct =>
-            val names = row.nameExprs.map {
-              case Literal(s, StringType) if s != null => s.toString
-              case _ => return None
-            }
-            (strip(cns.valExprs.head), names.zip(row.valExprs.map(strip)))
-          case _ => return None
-        }
-      case _ => return None
-    }
+    val (eExpr, rowEntries) = Shred.shredInput(gen).getOrElse(return None)
     if (!eExpr.deterministic || rowEntries.exists(!_._2.deterministic))
       return None
 
@@ -153,11 +131,11 @@ object UnshredEav extends Rule[LogicalPlan] with PredicateHelper {
         case at: ArrayType =>
           // element-indexed ids need the generator; bail if the
           // attribute is (or could hide) here
-          if (fname == name || containsField(at.elementType, name))
+          if (fname == name || Shred.nestedFieldNamed(at.elementType, name))
             return None
         case dt =>
           if (fname == name) {
-            if (!supportedScalar(dt)) return None
+            if (!Shred.rendersLikeCast(dt)) return None
             out += Site(parents, fexpr, isRef = false)
           }
       }
@@ -165,29 +143,9 @@ object UnshredEav extends Rule[LogicalPlan] with PredicateHelper {
     Some(out.result())
   }
 
-  private def containsField(dt: DataType, name: String): Boolean = dt match {
-    case st: StructType =>
-      st.fields.exists(f => f.name == name || containsField(f.dataType, name))
-    case ArrayType(et, _) => containsField(et, name)
-    case MapType(k, v, _) => containsField(k, name) || containsField(v, name)
-    case _ => false
-  }
-
-  /** Types whose ShredGenerator canon equals the expression-form canon
-    * (`Shred.canon`). Date/timestamp/binary render their *internal*
-    * value in the generator, which no Cast reproduces — keep those on
-    * the generator path.
-    */
-  private def supportedScalar(dt: DataType): Boolean = dt match {
-    case StringType | BooleanType => true
-    case _: NumericType => true
-    case _ => false
-  }
-
   /** One site's triples as a projection over the Generate's child. */
   private def branch(site: Site, name: String, eExpr: Expression,
       g: Generate, reuseIds: Boolean, outs: Seq[Attribute]): LogicalPlan = {
-    val str = StringType
     val entity: Expression =
       if (site.parents.isEmpty) eExpr
       else Concat(Seq(eExpr, Literal("/" + site.parents.mkString("/"))))
@@ -197,25 +155,9 @@ object UnshredEav extends Rule[LogicalPlan] with PredicateHelper {
           Literal(null, DoubleType))
       else {
         val dt = site.expr.dataType
-        val canonV = dt match {
-          case DoubleType | FloatType | _: DecimalType =>
-            val asLong = Cast(site.expr, LongType)
-            CaseWhen(
-              Seq((EqualTo(site.expr, Cast(asLong, dt)),
-                Cast(asLong, str))),
-              Cast(site.expr, str))
-          case _ => Cast(site.expr, str)
-        }
-        val vtName = dt match {
-          case _: NumericType => "num"
-          case BooleanType => "bool"
-          case _ => "str"
-        }
-        val vnExpr: Expression = dt match {
-          case _: NumericType => Cast(site.expr, DoubleType)
-          case _ => Literal(null, DoubleType)
-        }
-        (canonV, Literal(vtName), vnExpr)
+        // the analyzer's ResolveTimeZone has run: carry the zone here
+        (Shred.canonExpr(site.expr, dt, Some(conf.sessionLocalTimeZone)),
+          Literal(Shred.typeName(dt)), Shred.vnExpr(site.expr, dt))
       }
     // emit iff the generator would have walked here: the field chain
     // null-propagates ancestors, and a null entity id emits nothing
@@ -226,12 +168,5 @@ object UnshredEav extends Rule[LogicalPlan] with PredicateHelper {
       else Alias(value, out.name)()
     }
     Project(aliases, Filter(keep, g.child))
-  }
-
-  /** Idempotently register on a session (experimental batch). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this))
-      spark.experimental.extraOptimizations = cur :+ this
   }
 }

@@ -134,10 +134,11 @@ object EavQueries {
 
   /** Nested-document source: the customer's segment/balance moved into
     * a `profile` struct, so the query must chain through a ref-typed
-    * attribute (`[?c :profile ?p][?p :c_mktsegment ...]`) — the shape
-    * `runDocs` refuses. With [[graft.plans.UnshredEav]] each pattern
-    * still collapses to a narrow scan projection (no ShredGenerator in
-    * the optimized plan — pinned by UnshredEavSpec/PlanSpec).
+    * attribute (`[?c :profile ?p][?p :c_mktsegment ...]`). The regroup
+    * tier resolves the chain to the nested column paths and compiles
+    * the query over the documents (no ShredGenerator in the optimized
+    * plan, pinned by PlanSpec); [[graft.plans.UnshredEav]] never sees
+    * a triple filter here.
     */
   def qEavNested(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.customer(s, d).select(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
+import graft.shred.Shred
+
 /** The `query{}` Datalog compiler (SURVEY.md §2.8; reference semantics at
   * `builtin.cljc:1695-1838`, `rewrite.cljc:253-307`).
   *
@@ -219,10 +221,9 @@ object QueryCompiler {
     * plan-shape and non-null-id conditions); per pattern the attribute
     * must additionally be
     *
-    *  - among the shredded top-level names, of a scalar type whose
-    *    document canon equals the generator canon (string/boolean/
-    *    numeric — date/timestamp/binary render differently in the
-    *    generator, UnshredEav.supportedScalar's argument), and
+    *  - among the shredded top-level names, of a scalar type the
+    *    triple contract renders like `Cast` (Shred.rendersLikeCast —
+    *    the generator and the document read then agree), and
     *  - absent from every NESTED position of the schema: a name that
     *    also occurs under a struct matches sub-entity triples in the
     *    EAV form, which a top-level projection cannot see.
@@ -239,8 +240,7 @@ object QueryCompiler {
     import org.apache.spark.sql.types._
     if (!patterns.forall(_.a.isInstanceOf[C])) return None
     val det = sources.map { case (n, df) =>
-      n -> graft.shred.Shred.unshredSource(df)
-        .orElse(graft.shred.Shred.unshredPersisted(df))
+      n -> Shred.unshredSource(df).orElse(Shred.unshredPersisted(df))
     }
     if (det.values.exists(_.isEmpty)) return None
     val ent = "__graft_regroup_e"
@@ -255,8 +255,7 @@ object QueryCompiler {
       import org.apache.spark.sql.catalyst.expressions.{Cast,
         KnownNotNull}
       import org.apache.spark.sql.graftglue.ColumnGlue
-      val graft.shred.Shred.UnshredInfo(doc, eExpr, shredded, proven) =
-        d.get
+      val Shred.UnshredInfo(doc, eExpr, shredded, proven) = d.get
       if (doc.columns.contains(ent)) return None
       // keep the id native when the cast to the shred's string id is
       // the identity canon (integral inner) — the native path's
@@ -295,10 +294,9 @@ object QueryCompiler {
         idFunctional = proven || contentHashId(idExpr,
           doc.queryExecution.analyzed.output))
     }
-    runDocsNative(docs, patterns, predicates, keepDBid,
-        boxedPredicates, strictCanon = true)
+    runDocsNative(docs, patterns, predicates, keepDBid, boxedPredicates)
       .orElse(runDocsBoxedOpt(docs, patterns, predicates, keepDBid,
-        boxedPredicates, strictCanon = true))
+        boxedPredicates))
   }
 
   /** Is the shred's entity-id expression the content hash over the
@@ -316,10 +314,7 @@ object QueryCompiler {
       childOutput: Seq[org.apache.spark.sql.catalyst.expressions
         .Attribute]): Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
-    def strip(e: Expression): Expression = e match {
-      case a: Alias => strip(a.child)
-      case e => e
-    }
+    import Shred.{stripAlias => strip}
     strip(idExpr) match {
       case XxHash64(Seq(json), _) => strip(json) match {
         case StructsToJson(_, s, _) => strip(s) match {
@@ -442,35 +437,6 @@ object QueryCompiler {
   private def quoteName(n: String): String =
     "`" + n.replace("`", "``") + "`"
 
-  /** Value column types the direct path can canonicalize. Strict
-    * mode (the regroup tier) additionally excludes date/timestamp:
-    * their document canon (Cast's ISO rendering) differs from the
-    * shred GENERATOR's internal-value rendering, so a regrouped read
-    * would diverge from the EAV authority; the raw runDocs path has
-    * no generator on the other side and keeps them.
-    */
-  private def valueCanonSafe(dt: DataType, strict: Boolean): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType | BooleanType => true
-      case _: NumericType => true
-      case DateType | TimestampType => !strict
-      case _ => false
-    }
-  }
-
-  private def nestedFieldNamed(dt: DataType, name: String): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case st: StructType => st.fields.exists(f =>
-        f.name == name || nestedFieldNamed(f.dataType, name))
-      case ArrayType(et, _) => nestedFieldNamed(et, name)
-      case MapType(k, v, _) => nestedFieldNamed(k, name) ||
-        nestedFieldNamed(v, name)
-      case _ => false
-    }
-  }
-
   /** Are all field names safe for deterministic sub-entity id
     * strings? Shred sub-ids are `parent + "/" + name` (+ "/" + index
     * for array elements), so a name containing "/", an all-digit name
@@ -520,7 +486,7 @@ object QueryCompiler {
     case _: org.apache.spark.sql.types.StructType => "ref"
     case org.apache.spark.sql.types.ArrayType(
       _: org.apache.spark.sql.types.StructType, _) => "ref"
-    case _ => typeNameOf(dt)
+    case _ => Shred.typeName(dt)
   }
 
   /** A pattern resolved against its group's root document frame.
@@ -555,17 +521,16 @@ object QueryCompiler {
     * Declines: wildcard/non-constant attributes; a root-level
     * attribute that is missing, nested-shadowed (the EAV form would
     * match sub-entities a root projection can't see), or shadowed by
-    * a backticked name; value columns outside str/bool/numeric
-    * (date/timestamp/binary render differently in the shred
-    * generator; arrays/maps have per-element triple semantics) except
+    * a backticked name; value columns the triple contract does not
+    * render like `Cast` (Shred.rendersLikeCast: binary, TimestampNTZ;
+    * arrays/maps have per-element triple semantics) except
     * struct columns under C/W terms (statically empty / existence);
     * chain vars bound twice, crossing sources, or over schemas whose
     * field names could alias sub-id strings (chainSafeNames) or whose
     * id column isn't integral (a string id could itself contain "/").
     */
   private[query] def resolveGroups(sources: Map[String, DocSource],
-      patterns: Seq[Pattern], strictCanon: Boolean = false)
-      : Option[Seq[RGroup]] = {
+      patterns: Seq[Pattern]): Option[Seq[RGroup]] = {
     import org.apache.spark.sql.types._
     if (patterns.isEmpty) return None
     if (!patterns.forall(p => p.a.isInstanceOf[C] &&
@@ -677,7 +642,7 @@ object QueryCompiler {
       if (entSteps.isEmpty) {
         // root-level: top-level field, not shadowed anywhere nested
         if (!schema.fields.exists(_.name == a)) return None
-        if (schema.fields.exists(f => nestedFieldNamed(f.dataType, a)))
+        if (schema.fields.exists(f => Shred.nestedFieldNamed(f.dataType, a)))
           return None
         if (schema.fields.exists(_.name.contains("`"))) return None
       }
@@ -698,9 +663,9 @@ object QueryCompiler {
           case C(_) | W => (fdt, false) // ref-kind: false / has-element
           case V(_) => return None
         }
-        case ArrayType(et, _) if valueCanonSafe(et, strictCanon) =>
+        case ArrayType(et, _) if Shred.rendersLikeCast(et) =>
           (et, true) // cardinality-many scalar: one triple per element
-        case d if valueCanonSafe(d, strictCanon) => (d, false)
+        case d if Shred.rendersLikeCast(d) => (d, false)
         case _ => return None
       }
       RPat(entVar, entSteps, a, dt, multi, chainBind, p.v)
@@ -754,7 +719,7 @@ object QueryCompiler {
     def chain(subId: Column): Column =
       struct(subId.as("v"), lit("ref").as("vt"))
     def value(c: Column, dt: DataType, varName: String): Column =
-      struct(canonCol(c, dt).as("v"), lit(vtNameOf(dt)).as("vt"))
+      struct(Shred.canon(c, dt).as("v"), lit(vtNameOf(dt)).as("vt"))
   }
 
   private final class NativeBinder(travel: Map[String, DataType])
@@ -805,7 +770,8 @@ object QueryCompiler {
 
   private def buildGroup(src: DocSource, g: RGroup, bind: Binder)
       : (DataFrame, Boolean) = {
-    import org.apache.spark.sql.types.{ArrayType, StructType}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
+      StructType}
     val df = src.df
     val id = col(quoteName(src.idCol))
     val fuse = src.idFunctional || g.pats.size <= 1
@@ -883,7 +849,7 @@ object QueryCompiler {
                 val (cv, cvt) = canonConst(value)
                 f = if (vtNameOf(rp.dt) == cvt)
                   f.filter(exists(filter(c, _.isNotNull),
-                    e => canonCol(e, rp.dt) === cv))
+                    e => Shred.canon(e, rp.dt) === cv))
                 else f.filter(lit(false))
               case V(n) =>
                 val en = fresh("mval")
@@ -897,7 +863,7 @@ object QueryCompiler {
               case C(value) =>
                 val (cv, cvt) = canonConst(value)
                 f = if (vtNameOf(rp.dt) == cvt)
-                  f.filter(canonCol(c, rp.dt) === cv)
+                  f.filter(Shred.canon(c, rp.dt) === cv)
                 else f.filter(lit(false))
               case V(n) =>
                 f = f.filter(c.isNotNull)
@@ -968,7 +934,7 @@ object QueryCompiler {
               val (cv, cvt) = canonConst(value)
               if (vtNameOf(rp.dt) == cvt) {
                 aggs += max(exists(filter(c, _.isNotNull),
-                  e => canonCol(e, rp.dt) === cv)).as(s"${pfx}c$j")
+                  e => Shred.canon(e, rp.dt) === cv)).as(s"${pfx}c$j")
                 conds += s"${pfx}c$j"
               } else falseGroup = true
             case W =>
@@ -982,7 +948,7 @@ object QueryCompiler {
             case C(value) =>
               val (cv, cvt) = canonConst(value)
               if (vtNameOf(rp.dt) == cvt) {
-                aggs += max(canonCol(c, rp.dt) === cv).as(s"${pfx}c$j")
+                aggs += max(Shred.canon(c, rp.dt) === cv).as(s"${pfx}c$j")
                 conds += s"${pfx}c$j"
               } else falseGroup = true
             case V(n) =>
@@ -1025,7 +991,13 @@ object QueryCompiler {
       out = conds.result().foldLeft(out)((d, c) => d.filter(col(c)))
       setsOf.foreach { case (n, (ss, _)) =>
         val set = ss.map(col).reduceLeft(array_intersect)
-        out = out.withColumn(n, explode(set))
+        // collect_set keeps every NaN it meets; array_distinct counts
+        // NaN once, as the canonical "NaN" string does
+        val distinct = out.schema(ss.head).dataType match {
+          case ArrayType(DoubleType | FloatType, _) => array_distinct(set)
+          case _ => set
+        }
+        out = out.withColumn(n, explode(distinct))
       }
       val bindCols = binds.result().map {
         case EntB(n) => bind.ent(col(gk), n).as(n)
@@ -1106,12 +1078,10 @@ object QueryCompiler {
       patterns: Seq[Pattern],
       predicates: Seq[Map[String, Column] => Column] = Nil,
       keepDBid: Boolean = false,
-      boxedPredicates: Seq[Map[String, Column] => Column] = Nil,
-      strictCanon: Boolean = false)
+      boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
       : Option[DataFrame] = {
     require(patterns.nonEmpty, "query{} needs at least one pattern")
-    val groups = resolveGroups(sources, patterns, strictCanon)
-      .getOrElse(return None)
+    val groups = resolveGroups(sources, patterns).getOrElse(return None)
     // array hops / cardinality-many bindings need the fused (lateral
     // explode) build — licensed by row-functional ids or a single
     // pattern; otherwise the always-sound EAV plan serves the query
@@ -1162,8 +1132,10 @@ object QueryCompiler {
     *    strings join 5 with 5.0 exactly at any magnitude; a double
     *    coercion loses exactness past 2^53);
     *  - a qvar fed by two different non-integral types, BinaryType
-    *    (string reinterpretation is lossy), or any other type whose
-    *    value→canonical-string map isn't injective;
+    *    (string reinterpretation is lossy), TimestampType (two
+    *    instants of a DST fall-back hour render alike in the session
+    *    zone), or any other type whose value→canonical-string map
+    *    isn't injective;
     *  - a qvar appearing in BOTH entity and value position (boxed
     *    joins require equal vt tags, so "ref" never matches "num"/
     *    "str" — the boxed result is empty there and the fallback
@@ -1182,13 +1154,11 @@ object QueryCompiler {
       patterns: Seq[Pattern],
       predicates: Seq[Map[String, Column] => Column] = Nil,
       keepDBid: Boolean = false,
-      boxedPredicates: Seq[Map[String, Column] => Column] = Nil,
-      strictCanon: Boolean = false)
+      boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
       : Option[DataFrame] = {
     import org.apache.spark.sql.types._
     require(patterns.nonEmpty, "query{} needs at least one pattern")
-    val groups = resolveGroups(sources, patterns, strictCanon)
-      .getOrElse(return None)
+    val groups = resolveGroups(sources, patterns).getOrElse(return None)
     if (groups.exists(g => needsExplode(g) &&
       !(sources(g.src).idFunctional || g.pats.size <= 1))) return None
 
@@ -1216,7 +1186,7 @@ object QueryCompiler {
           // and string ids do (the canonical print IS the plain cast,
           // and non-nullability rules out the null==null join the
           // boxed struct would keep but a native key would drop).
-          // Fractional/date/timestamp ids would box via canonCol
+          // Fractional/date/timestamp ids would box via Shred.canon
           // ("5", not "5.0") — a silent divergence — so they fall
           // back to the boxed form.
           val idOk = (f.dataType match {
@@ -1247,7 +1217,7 @@ object QueryCompiler {
           if (dts.forall(integral)) LongType
           else if (dts.size == 1) dts.head match {
             case t @ (StringType | BooleanType | DoubleType | FloatType |
-                DateType | TimestampType) => t
+                DateType) => t
             case t: DecimalType => t
             case _ => return None
           }
@@ -1259,7 +1229,7 @@ object QueryCompiler {
             // "5.5"), so mixed scales would join natively where the
             // boxed form does not. Precision covers every member's
             // integer digits plus a long's 19, so the widening cast is
-            // exact (never rounds, never overflows) and canonCol on
+            // exact (never rounds, never overflows) and Shred.canon on
             // the travel type prints integral values without the
             // fractional part — the boxed encoding on every source.
             val decs = dts.toSeq.collect { case d: DecimalType => d }
@@ -1289,10 +1259,10 @@ object QueryCompiler {
     }).toSet
     def vtOf(n: String, dt: DataType) =
       if (entityVars.contains(n) || chainVars.contains(n)) "ref"
-      else typeNameOf(dt)
+      else Shred.typeName(dt)
     val boundBoxed: Map[String, Column] = joined.columns.map { n =>
       val dt = joined.schema(n).dataType
-      n -> struct(canonCol(joined(n), dt).as("v"),
+      n -> struct(Shred.canon(joined(n), dt).as("v"),
         lit(vtOf(n, dt)).as("vt"))
     }.toMap
     val bound: Map[String, Column] =
@@ -1309,7 +1279,7 @@ object QueryCompiler {
       .filter(c => keepDBid || !entityVars.contains(c))
     Some(distinctAll.select(out.map { c =>
       val dt = distinctAll.schema(c).dataType
-      struct(canonCol(distinctAll(c), dt).as("v"),
+      struct(Shred.canon(distinctAll(c), dt).as("v"),
         lit(vtOf(c, dt)).as("vt")).as(c)
     }: _*))
   }
@@ -1346,31 +1316,6 @@ object QueryCompiler {
           }
         }
         acc.toMap
-    }
-  }
-
-  /** Canonical string of a document column (must match Shred.canon).
-    * try_cast: an out-of-long-range value must take the plain-string
-    * branch (the generator form's semantics), not throw under ANSI.
-    */
-  private def canonCol(c: Column, dt: org.apache.spark.sql.types.DataType)
-      : Column = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case DoubleType | FloatType | _: DecimalType =>
-        when(c === c.try_cast(LongType).cast(dt),
-            c.try_cast(LongType).cast("string"))
-          .otherwise(c.cast("string"))
-      case _ => c.cast("string")
-    }
-  }
-
-  private def typeNameOf(dt: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case _: NumericType => "num"
-      case BooleanType => "bool"
-      case _ => "str"
     }
   }
 

@@ -1,7 +1,10 @@
 package graft.shred
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
+  CaseWhen, Cast, CreateNamedStruct, EqualTo, EvalMode, Expression, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ColumnGlue
 import org.apache.spark.sql.types._
 
 /** Document ⇄ EAV shredding (SURVEY.md §1.2, §2.8).
@@ -34,30 +37,111 @@ object Shred {
     StructField("v", StringType), StructField("vt", StringType),
     StructField("vn", DoubleType)))
 
-  /** Canonical string form: integral numbers print without ".0".
-    * try_cast: out-of-long-range values take the plain-string branch
-    * (the generator form's semantics), not an ANSI cast overflow.
+  // ---------- the triple contract ----------
+  // How one document value renders as (v, vt, vn). ShredGenerator is
+  // the runtime authority; these Catalyst forms reproduce it for every
+  // type `rendersLikeCast` admits, and are the one definition the
+  // expression shredder, QueryCompiler's document paths and
+  // plans.UnshredEav share (the rule builds resolved expressions
+  // after analysis, so the shared form is Catalyst, not Column).
+
+  /** Scalar types whose generator rendering a `Cast` reproduces.
+    * Binary (raw bytes, not injective as strings) and TimestampNTZ
+    * (the generator prints its internal micros) are not among them.
     */
-  private def canon(c: Column, dt: DataType): Column = dt match {
-    case DoubleType | FloatType | _: DecimalType =>
-      when(c === c.try_cast(LongType).cast(dt),
-          c.try_cast(LongType).cast("string"))
-        .otherwise(c.cast("string"))
-    case _ => c.cast("string")
+  private[graft] def rendersLikeCast(dt: DataType): Boolean = dt match {
+    case StringType | BooleanType | DateType | TimestampType => true
+    case _: NumericType => true
+    case _ => false
   }
 
-  private def typeName(dt: DataType): String = dt match {
+  /** Canonical `v` of a scalar: whole numbers print without ".0"
+    * (JSONata `$string`), whole decimals without their scale. Try-mode
+    * casts: a value outside the long range takes the plain-string
+    * branch, as in the generator, instead of an ANSI overflow. `tz`:
+    * None lets the analyzer resolve the zone; a rule building the
+    * expression after analysis must pass the session zone.
+    */
+  private[graft] def canonExpr(c: Expression, dt: DataType,
+      tz: Option[String]): Expression = {
+    def render(whole: Expression): Expression = CaseWhen(
+      Seq(EqualTo(c, Cast(whole, dt, tz, EvalMode.TRY)) ->
+        Cast(whole, StringType, tz)),
+      Cast(c, StringType, tz))
+    dt match {
+      case StringType => c
+      case DoubleType | FloatType =>
+        render(Cast(c, LongType, tz, EvalMode.TRY))
+      case d: DecimalType =>
+        // rounding to scale 0 never overflows with one spare digit
+        render(Cast(c, DecimalType(
+          math.min(DecimalType.MAX_PRECISION, d.precision - d.scale + 1),
+          0), tz))
+      case _ => Cast(c, StringType, tz)
+    }
+  }
+
+  /** Column form of [[canonExpr]]. */
+  private[graft] def canon(c: Column, dt: DataType): Column =
+    ColumnGlue.column(canonExpr(ColumnGlue.expression(c), dt, None))
+
+  /** The `vt` tag of a scalar (reference boxing, `util.cljc:299-322`). */
+  private[graft] def typeName(dt: DataType): String = dt match {
     case _: NumericType => "num"
     case BooleanType => "bool"
     case _ => "str"
   }
 
+  /** The `vn` numeric view: the double value of numbers, else null. */
+  private[graft] def vnExpr(c: Expression, dt: DataType): Expression =
+    dt match {
+      case _: NumericType => Cast(c, DoubleType)
+      case _ => Literal(null, DoubleType)
+    }
+
+  /** Does a field called `name` occur anywhere under `dt`? Its
+    * triples then carry that attribute on a sub-entity, which a
+    * top-level read of the same name cannot see.
+    */
+  private[graft] def nestedFieldNamed(dt: DataType, name: String)
+      : Boolean = dt match {
+    case st: StructType => st.fields.exists(f =>
+      f.name == name || nestedFieldNamed(f.dataType, name))
+    case ArrayType(et, _) => nestedFieldNamed(et, name)
+    case MapType(k, v, _) =>
+      nestedFieldNamed(k, name) || nestedFieldNamed(v, name)
+    case _ => false
+  }
+
+  private[graft] def stripAlias(e: Expression): Expression = e match {
+    case a: Alias => stripAlias(a.child)
+    case e => e
+  }
+
+  /** What a ShredGenerator walks, read from its analyzed
+    * `struct(e, row)` child: the entity-id expression and the row's
+    * (field name, value expression) entries. None for any other shape.
+    */
+  private[graft] def shredInput(gen: ShredGenerator)
+      : Option[(Expression, Seq[(String, Expression)])] =
+    stripAlias(gen.child) match {
+      case cns: CreateNamedStruct if cns.valExprs.size == 2 =>
+        stripAlias(cns.valExprs(1)) match {
+          case row: CreateNamedStruct =>
+            val names = row.nameExprs.map {
+              case Literal(n, StringType) if n != null => n.toString
+              case _ => return None
+            }
+            Some((stripAlias(cns.valExprs.head),
+              names.zip(row.valExprs.map(stripAlias))))
+          case _ => None
+        }
+      case _ => None
+    }
+
   private def scalarTriple(e: Column, name: String, c: Column,
       dt: DataType): Column = {
-    val vn = dt match {
-      case _: NumericType => c.cast("double")
-      case _ => lit(null).cast("double")
-    }
+    val vn = ColumnGlue.column(vnExpr(ColumnGlue.expression(c), dt))
     struct(e.as("e"), lit(name).as("a"), canon(c, dt).as("v"),
       lit(typeName(dt)).as("vt"), vn.as("vn"))
   }
@@ -127,8 +211,9 @@ object Shred {
       df.schema.fields.zip(tripleSchema.fields).forall { case (a, b) =>
         a.name == b.name && a.dataType == b.dataType }
 
-  /** Expression-form shredder (array-build + one explode) — kept for
-    * plan comparison; `shred` uses the generator form.
+  /** Expression-form shredder (array-build + one explode) — kept as
+    * the reference form (an Explode plans.UnshredEav cannot rewrite);
+    * `shred` uses the generator form.
     */
   def shredExpr(df: DataFrame, idCol: Option[String] = None): DataFrame = {
     val e = entityId(df, idCol)
@@ -148,7 +233,6 @@ object Shred {
 
   private def shredGenTagged(df: DataFrame, idCol: Option[String],
       idFunctional: Boolean): DataFrame = {
-    import org.apache.spark.sql.graftglue.ColumnGlue
     val e = entityId(df, idCol)
     val row = struct(df.schema.fieldNames.map(col).toSeq: _*)
     df.select(ColumnGlue.column(ShredGenerator(
@@ -537,20 +621,15 @@ object Shred {
     * Anything else returns None and the caller keeps the EAV form.
     */
   def unshredSource(triples: DataFrame): Option[UnshredInfo] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical._
-    def strip(e: Expression): Expression = e match {
-      case a: Alias => strip(a.child)
-      case e => e
-    }
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Project}
     val g = triples.queryExecution.analyzed match {
       // the analyzer keeps requiredChildOutput populated (pruning is
       // the optimizer's job); the identity Project above proves only
       // the generator output escapes
       case Project(pl, g: Generate)
           if g.generator.isInstanceOf[ShredGenerator] && !g.outer &&
-            pl.map(strip).forall(_.isInstanceOf[AttributeReference]) &&
-            pl.map(strip).map(
+            pl.map(stripAlias).forall(_.isInstanceOf[AttributeReference]) &&
+            pl.map(stripAlias).map(
               _.asInstanceOf[AttributeReference].exprId) ==
               g.generatorOutput.map(_.exprId) => Some(g)
       case g: Generate
@@ -558,32 +637,19 @@ object Shred {
             g.requiredChildOutput.isEmpty => Some(g)
       case _ => None
     }
-    g.flatMap { g =>
-      strip(g.generator.asInstanceOf[ShredGenerator].child) match {
-        case cns: CreateNamedStruct if cns.valExprs.size == 2 =>
-          val eExpr = strip(cns.valExprs.head)
-          strip(cns.valExprs(1)) match {
-            case row: CreateNamedStruct if eExpr.deterministic =>
-              val childIds = g.child.output.map(_.exprId).toSet
-              val entries = row.nameExprs.zip(row.valExprs.map(strip))
-              val names = entries.map {
-                case (org.apache.spark.sql.catalyst.expressions.Literal(
-                    n, org.apache.spark.sql.types.StringType),
-                    a: AttributeReference)
-                    if n != null && a.name == n.toString &&
-                      childIds(a.exprId) => n.toString
-                case _ => return None
-              }
-              if (names.distinct.size != names.size) None
-              else Some(UnshredInfo(
-                org.apache.spark.sql.graftglue.ColumnGlue.dataFrame(
-                  triples.sparkSession, g.child),
-                eExpr, names.toSet,
-                g.generator.asInstanceOf[ShredGenerator].idFunctional))
-            case _ => None
-          }
-        case _ => None
+    for {
+      g <- g
+      gen = g.generator.asInstanceOf[ShredGenerator]
+      (eExpr, entries) <- shredInput(gen)
+      if eExpr.deterministic
+      childIds = g.child.output.map(_.exprId).toSet
+      if entries.forall {
+        case (n, a: AttributeReference) => a.name == n && childIds(a.exprId)
+        case _ => false
       }
-    }
+      names = entries.map(_._1)
+      if names.distinct.size == names.size
+    } yield UnshredInfo(ColumnGlue.dataFrame(triples.sparkSession, g.child),
+      eExpr, names.toSet, gen.idFunctional)
   }
 }

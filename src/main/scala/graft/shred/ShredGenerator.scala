@@ -51,7 +51,7 @@ case class ShredGenerator(child: Expression,
   // Cast's renderings for the types whose INTERNAL values don't print
   // as their SQL form: without these the generator emitted the raw
   // days-int / micros-long for dates/timestamps (diverging from the
-  // expression form and canonCol, which use Cast) and the JVM
+  // expression form and Shred.canon, which use Cast) and the JVM
   // identity string for binary — NONDETERMINISTIC across evaluations,
   // so a stage retry could emit different triples for the same row.
   @transient private lazy val dateFormatter =

@@ -24,8 +24,7 @@ object SparkSpec {
         s"/tmp/graft-warehouse-${java.util.UUID.randomUUID()}")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.SimplifyElementAtArray.install(s)
-    graft.plans.UnshredEav.install(s)
+    Sessions.installRules(s)
     s
   }
 }

@@ -633,9 +633,12 @@ class RMQuerySpec extends SparkSpec {
         |        [?p :bal ?b]
         |        [($number(?b) > 1000)]}($d)""".stripMargin,
       spark, Map("d" -> docs))
-    val plan = got.queryExecution.executedPlan.toString
-    assert(!plan.contains("ShredGenerator"),
-      s"nested text query must not shred:\n${plan.take(1200)}")
+    val shreds = got.queryExecution.optimizedPlan.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+          if g.generator.isInstanceOf[graft.shred.ShredGenerator] => g
+    }
+    assert(shreds.isEmpty, s"nested text query must not shred:\n" +
+      got.queryExecution.optimizedPlan.toString.take(1200))
     val rows = got.orderBy("n").collect().map(_.toString).toSeq
     assert(rows == Seq("[Bob,1500]"), rows)
   }

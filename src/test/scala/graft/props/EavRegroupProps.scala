@@ -36,16 +36,23 @@ object EavRegroupProps extends Properties("graft.query.regroup") {
   private def valueGen(dt: DataType): Gen[Any] = {
     val g: Gen[Any] = dt match {
       case LongType => Gen.oneOf(1L, 2L, 3L)
-      case DoubleType => Gen.oneOf(1.0d, 2.0d, 2.5d, -3.25d, 0.0d)
+      // 1e20 and NaN: no long round-trip (the try-cast canon branch)
+      case DoubleType =>
+        Gen.oneOf(1.0d, 2.0d, 2.5d, -3.25d, 0.0d, 1e20d, Double.NaN)
       case StringType => Gen.oneOf("a", "b", "2", "")
       case BooleanType => Gen.oneOf(true, false)
+      case DateType => Gen.oneOf(java.sql.Date.valueOf("2020-01-01"),
+        java.sql.Date.valueOf("2020-01-02"))
+      case TimestampType => Gen.oneOf(
+        java.sql.Timestamp.valueOf("2020-01-01 00:00:00"),
+        java.sql.Timestamp.valueOf("2020-01-01 00:00:00.5"))
       case other => sys.error(s"unexpected $other")
     }
     Gen.frequency(4 -> g, 1 -> Gen.const(null))
   }
 
-  private val leafTypes: Seq[DataType] =
-    Seq(LongType, DoubleType, StringType, BooleanType)
+  private val leafTypes: Seq[DataType] = Seq(LongType, DoubleType,
+    StringType, BooleanType, DateType, TimestampType)
 
   // schema: 1-2 flat leaf columns (p, q) + optionally a struct `s`
   // with 1-2 leaves (u, w), sometimes nested one level deeper (`t.z`)

@@ -55,6 +55,18 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Generate"), s"unexpected explode:\n$p")
   }
 
+  test("q_eav_nested: the regroup tier reads the shred's documents") {
+    val qe = SparkEntry.queries("q_eav_nested")(spark, sf("sf0.001"))
+      .queryExecution
+    val shreds = qe.optimizedPlan.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+          if g.generator.isInstanceOf[graft.shred.ShredGenerator] => g
+    }
+    assert(shreds.isEmpty, qe.optimizedPlan.toString)
+    // typed-EAV binding columns print as "n#t#<exprId>"
+    assert(!qe.executedPlan.toString.contains("#t#"), qe.executedPlan)
+  }
+
   test("mixed literal+table query streams from the parquet scan") {
     val p = plan("q_rm_mixed")
     assert(p.contains("parquet"),

@@ -10,7 +10,8 @@ import QueryCompiler.{C, Pattern, V, W}
   * constant-attribute `query{}` over an explicitly-shredded frame must
   * compile over the documents — bit-identical to the canonical-string
   * EAV authority — and every unsound shape must decline back to the
-  * EAV plan (asserted via the ShredGenerator's presence in the plan).
+  * EAV plan (asserted via the typed-EAV tier's encoded binding
+  * columns in the plan, see `regrouped`).
   */
 class EavRegroupSpec extends SparkSpec {
   import spark.implicits._
@@ -25,8 +26,9 @@ class EavRegroupSpec extends SparkSpec {
 
   // the typed-EAV tier is recognizable by its encoded binding columns
   // (`n#t` etc., printed with an exprId suffix as "n#t#<id>"); the
-  // regrouped tier binds plain var names (ShredGenerator itself is no
-  // evidence — UnshredEav collapses it out of EAV plans too)
+  // regrouped tier binds plain var names (a missing ShredGenerator is
+  // no evidence: on the typed-EAV tier UnshredEav rewrites each
+  // constant-attribute pattern's scan into a projection as well)
   private def regrouped(df: DataFrame): Boolean =
     !df.queryExecution.executedPlan.toString.contains("#t#")
 
@@ -48,6 +50,40 @@ class EavRegroupSpec extends SparkSpec {
       Pattern(V("e"), C("name"), V("n")),
       Pattern(V("e"), C("bal"), V("b")),
       Pattern(V("e"), C("vip"), C(true))), expectRegroup = true)
+  }
+
+  test("date and timestamp attributes regroup, equal the authority") {
+    // both render like Cast in the generator, so the regroup tier
+    // reads them from the documents (they once declined to typed EAV)
+    val dated = docs
+      .withColumn("day", date_add(to_date(lit("2024-01-01")), $"id".cast("int")))
+      .withColumn("at", to_timestamp(lit("2024-01-02 03:04:05.25")))
+    for (src <- Seq(Shred.shred(dated), Shred.shred(dated, Some("id")))) {
+      check(Map("default" -> src), Seq(
+        Pattern(V("e"), C("name"), V("n")),
+        Pattern(V("e"), C("day"), V("d")),
+        Pattern(V("e"), C("at"), V("t"))), expectRegroup = true)
+      check(Map("default" -> src), Seq(
+        Pattern(V("e"), C("day"), C("2024-01-03")),
+        Pattern(V("e"), C("name"), V("n"))), expectRegroup = true)
+    }
+    val got = QueryCompiler.run(Map("default" -> Shred.shred(dated)),
+      Seq(Pattern(V("e"), C("day"), C("2024-01-03")),
+        Pattern(V("e"), C("at"), V("t"))))
+    assert(rows(got) == Seq("[2024-01-02 03:04:05.25]"), rows(got))
+  }
+
+  test("timestamps that render alike in the session zone bind once") {
+    // 05:30Z and 06:30Z are both 01:30 in New York on the fall-back
+    // night: the triples hold one string, so there is one binding set
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      val fallBack = Seq((1L, 1730611800000000L), (2L, 1730615400000000L))
+        .toDF("id", "us").select($"id", timestamp_micros($"us").as("at"))
+      for (src <- Seq(Shred.shred(fallBack), Shred.shred(fallBack, Some("id"))))
+        check(Map("default" -> src), Seq(
+          Pattern(W, C("at"), V("t"))), expectRegroup = true)
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
   test("explicit non-null idCol regroups; keepDBid ids match the shred's") {
@@ -128,6 +164,17 @@ class EavRegroupSpec extends SparkSpec {
     check(Map("default" -> Shred.shred(dup2, Some("k"))), Seq(
       Pattern(V("e"), C("p"), V("x")),
       Pattern(V("e"), C("r"), V("x"))), expectRegroup = true)
+    // NaN: the canonical form has one "NaN", so an entity's value set
+    // holds it once, and a repeated qvar's intersection keeps it
+    val nan = Seq(("X", 1L, Double.NaN, Double.NaN),
+      ("X", 2L, Double.NaN, 0.5), ("Y", 3L, 0.5, Double.NaN))
+      .toDF("k", "a", "b", "c")
+    check(Map("default" -> Shred.shred(nan, Some("k"))), Seq(
+      Pattern(V("e"), C("a"), V("x")),
+      Pattern(V("e"), C("b"), V("y"))), expectRegroup = true)
+    check(Map("default" -> Shred.shred(nan, Some("k"))), Seq(
+      Pattern(V("e"), C("b"), V("x")),
+      Pattern(V("e"), C("c"), V("x"))), expectRegroup = true)
     // content-derived ids (no idCol) keep the fused row-local plan —
     // equal ids imply equal rows there, so zip == product
     check(Map("default" -> Shred.shred(dup)), Seq(
