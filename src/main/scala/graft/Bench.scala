@@ -70,6 +70,57 @@ object Bench {
     "q_express_map_keys", "q_express_nested", "q_express_reduce",
     "q_rm_e2e", "q_rollup", "q_setops", "q_topk", "q_window_rank")
 
+  /** Warm-up steps, run before any measurement so per-query numbers
+    * measure the queries, not first-query JVM startup: the flagship
+    * plan, a micro text-frontend program (parser/compiler/JSON-bridge/
+    * shred class init), a micro window/json datasource touch, and the
+    * dedup/decontamination plan families. Those LSH band/bucket/
+    * window/self-join and CC-loop plans are the largest codegen units;
+    * without this their compile cost lands in the first measured query
+    * of each family. (Warming EVERY query at sf0.001 was tried and
+    * rejected: the extra ~60 plans' worth of cached blocks, broadcasts
+    * and generated classes made the measured passes 2-3x slower and
+    * wildly variable — GC/cleanup debt outweighed the compile savings.)
+    */
+  private def warmupSteps: Seq[(String, (SparkSession, String) => DataFrame)] =
+    Seq[(String, (SparkSession, String) => DataFrame)](
+      "entry" -> ((s, _) => SparkEntry.entry(s)),
+      "rm_program" -> ((s, _) => graft.lang.RM.queryFrame(
+        """( $d := [{'k': 'a', 'n': 1}, {'k': 'b', 'n': 2}];
+          |  $bs := query(){[?e :k ?k] [?e :n ?n]}($d);
+          |  $reduce($bs, express(){{'k': key(?k), 'n': ?n}}) )"""
+          .stripMargin, s, Map.empty)),
+      "window" -> ((s, d) => {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("l_returnflag").orderBy("l_orderkey")
+        Tables.lineitem(s, d)
+          .withColumn("rn", org.apache.spark.sql.functions.row_number.over(w))
+      })) ++
+      Seq("p_dup_groups", "p_contamination", "p_simhash",
+          "q3_join_revenue", "p_kmeans", "p_curate", "p_incr_dedup",
+          "q_eav_join", "q_reduce_step", "q_express_deep",
+          "f_path_steps").map(q => q -> SparkEntry.queries(q))
+
+  /** Counts each warm-up step over the tables in `sfDir` through
+    * [[runPass]]: a step that throws is recorded as failed, under
+    * `warmup:<step>`, and the steps after it still run.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String,
+      steps: Seq[(String, (SparkSession, String) => DataFrame)] =
+        warmupSteps): Pass =
+    runPass(spark, sfDir,
+      steps.map { case (n, f) => s"warmup:$n" -> f })((_, df) => df.count())
+
+  /** One run of a timing control (by default the q1 scan control)
+    * through [[runPass]]: a control that throws is recorded as failed
+    * and gets no time.
+    */
+  private[graft] def control(spark: SparkSession, sfDir: String,
+      name: String,
+      gate: (SparkSession, String) => DataFrame =
+        SparkEntry.queries("q1_agg")): Pass =
+    runPass(spark, sfDir, Seq(name -> gate))((_, df) => df.count())
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Self-check the guard: a renamed/removed core query must fail the
@@ -80,39 +131,9 @@ object Bench {
       s"core guard queries missing from the registry: " +
         missingCore.toSeq.sorted.mkString(", "))
     val spark = Sessions.local()
-    // Warm up codegen/JIT/IO paths so per-query numbers measure the
-    // queries, not first-query JVM startup: the flagship plan plus a
-    // micro text-frontend program (parser/compiler/JSON-bridge/shred
-    // class init) and a micro window/json datasource touch at sf0.001.
-    try {
-      SparkEntry.entry(spark).count()
-      graft.lang.RM.queryFrame(
-        """( $d := [{'k': 'a', 'n': 1}, {'k': 'b', 'n': 2}];
-          |  $bs := query(){[?e :k ?k] [?e :n ?n]}($d);
-          |  $reduce($bs, express(){{'k': key(?k), 'n': ?n}}) )"""
-          .stripMargin, spark, Map.empty).count()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("l_returnflag").orderBy("l_orderkey")
-      Tables.lineitem(spark, "/root/testdata/sf0.001")
-        .withColumn("rn", org.apache.spark.sql.functions.row_number.over(w))
-        .count()
-      // warm the dedup/decontamination plan families at sf0.001: the
-      // LSH band/bucket/window/self-join and CC-loop plans are the
-      // largest codegen units; without this their compile cost lands
-      // in the first measured query of each family. (Warming EVERY
-      // query at sf0.001 was tried and rejected: the extra ~60 plans'
-      // worth of cached blocks, broadcasts and generated classes made
-      // the measured passes 2-3x slower and wildly variable —
-      // GC/cleanup debt outweighed the compile savings.)
-      Seq("p_dup_groups", "p_contamination", "p_simhash",
-          "q3_join_revenue", "p_kmeans", "p_curate", "p_incr_dedup",
-          "q_eav_join", "q_reduce_step", "q_express_deep",
-          "f_path_steps").foreach { q =>
-        SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-        hygiene(spark)
-      }
-    } catch { case _: Throwable => () }
-    hygiene(spark)
+    // the warm-up reads the sf0.001 tables next to the measured SF
+    val warm = warmUp(spark,
+      java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString)
     // Cache-state marker (VERDICT r14 item 8): the q1 scan control
     // measured TWICE at the record's own SF before the battery.
     // cold ≈ warm ⇒ the round's data was already page-cached and
@@ -122,16 +143,10 @@ object Bench {
     // for exactly this reason). Runs before the battery, so every
     // record's first measured query starts from the same
     // post-control cache state.
-    def q1Time(): Double = {
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries("q1_agg")(spark, sfDir).count() }
-      catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
-      hygiene(spark)
-      dt
-    }
-    val q1Cold = q1Time()
-    val q1Warm = q1Time()
+    val q1ColdPass = control(spark, sfDir, "control:q1_cold")
+    val q1WarmPass = control(spark, sfDir, "control:q1_warm")
+    val q1Cold = q1ColdPass.times.get("control:q1_cold")
+    val q1Warm = q1WarmPass.times.get("control:q1_warm")
     val gates = SparkEntry.queries.toSeq.sortBy(_._1)
     val countPass = runPass(spark, sfDir, gates)((_, df) => df.count())
     val results = countPass.times
@@ -148,9 +163,10 @@ object Bench {
     val fullPass = runPass(spark, sfDir, gates)((_, df) =>
       df.write.mode("overwrite").format("noop").save())
     val full = fullPass.times
-    // every gate that threw in either pass, with its count-pass error
-    // when it threw in both
-    val failed = fullPass.failed ++ countPass.failed
+    // every warm-up step, control and gate that threw, with a gate's
+    // count-pass error when it threw in both passes
+    val failed = warm.failed ++ q1ColdPass.failed ++ q1WarmPass.failed ++
+      fullPass.failed ++ countPass.failed
     // leaked_rdds: persisted blocks still pinned after the final
     // hygiene pass — 0 proves no query ran against another's cache.
     val leaked = spark.sparkContext.getPersistentRDDs.size
@@ -160,6 +176,8 @@ object Bench {
     // (~100 bytes) — r4 embedded the ~1.3 KB queries map in it and
     // the driver recorded parsed:null.
     def r3(v: Double) = math.round(v * 1000) / 1000.0
+    // a control that threw has no time
+    def r3opt(v: Option[Double]) = v.map(r3(_).toString).getOrElse("null")
     def js(m: Map[String, Double]) =
       m.toSeq.sortBy(_._1)
         .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
@@ -194,8 +212,8 @@ object Bench {
       "\"heap_max_bytes\":" + heapMax,
       "\"cpus\":" + Runtime.getRuntime.availableProcessors(),
       "\"leaked_rdds\":" + leaked,
-      "\"q1_cold\":" + r3(q1Cold),
-      "\"q1_warm\":" + r3(q1Warm)).mkString("{", ",", "}")
+      "\"q1_cold\":" + r3opt(q1Cold),
+      "\"q1_warm\":" + r3opt(q1Warm)).mkString("{", ",", "}")
     println(s"""{"metric":"env","env":$env}""")
     println(s"""{"metric":"full_detail","full":${js(full)}}""")
     println(s"""{"metric":"query_detail","queries":${js(results)}}""")
@@ -228,7 +246,7 @@ object Bench {
       System.err.println(s"[bench] $n failed: ${failed(n)}"))
     println(s"""{"metric":"failed","n_failed":${failed.size},""" +
       s""""gates":${failedNames.map(jstr).mkString("[", ",", "]")}}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","full_total":$fullTotal,"core_total":$coreTotal,"ext_total":$extTotal,"n_failed":${failed.size},"q1_cold":${r3(q1Cold)},"q1_warm":${r3(q1Warm)},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","full_total":$fullTotal,"core_total":$coreTotal,"ext_total":$extTotal,"n_failed":${failed.size},"q1_cold":${r3opt(q1Cold)},"q1_warm":${r3opt(q1Warm)},"sf":"$sfDir"}""")
     // belt-and-braces: the machine-readable record also lands in a
     // file, immune to any stdout capture/prefix/truncation issues
     try java.nio.file.Files.write(

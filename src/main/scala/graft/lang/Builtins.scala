@@ -899,15 +899,13 @@ object Builtins {
 
       // ---- EAV / schema surface (reference parse.cljc:83 rm-fns) ----
       // $db (builtin.cljc:1682-1685): data → database. Ours is the
-      // triple frame (Shred) — query{} application recognizes the
-      // shape and skips re-shredding. Binding values from an explicit
-      // $db carry the canonical string encoding (the Scala-API
-      // QueryCompiler.run contract); the literal-data typed-restore
-      // path is for data passed to query{} directly.
+      // triple frame (Shred.dbFor, which query{} application also
+      // uses, so a database passes through it unchanged). Binding
+      // values from queries over tables only, $db results included,
+      // carry the canonical string encoding (the Scala-API
+      // QueryCompiler.run contract); a literal argument makes them typed.
       case "$db" =>
-        val df = frameArg(0, "$db")
-        CTab(if (graft.shred.Shred.isTriplesFrame(df)) df
-          else graft.shred.Shred.shred(df))
+        CTab(graft.shred.Shred.dbFor(frameArg(0, "$db")))
 
       // $pull (builtin.cljc:1677-1680): all data about one entity.
       // Driver-side by design (ONE entity's attributes — the
@@ -934,10 +932,7 @@ object Builtins {
             String.valueOf(vals(0).get(0))
           case _ => fail("$pull: first argument must be an entity id")
         }
-        val trip = frameArg(1, "$pull") match {
-          case df if graft.shred.Shred.isTriplesFrame(df) => df
-          case df => graft.shred.Shred.shred(df)
-        }
+        val trip = graft.shred.Shred.dbFor(frameArg(1, "$pull"))
         val rows = trip.filter(col("e") === lit(id))
           .select("a", "v", "vt", "vn").collect()
         if (rows.isEmpty) sval(lit(null).cast(StringType), StringType)

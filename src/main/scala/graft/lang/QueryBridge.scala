@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.shred.Shred
 import graft.query.QueryCompiler
-import graft.query.QueryCompiler.{C, Pattern, V, W}
+import graft.query.QueryCompiler.{C, Pattern, V}
 import graft.express.Express
 import graft.express.Express._
 import Ast._
@@ -12,14 +12,18 @@ import Compiler._
 
 /** Text-surface query{}/express{} execution.
   *
-  * Program-literal data reaches queries through a driver-side JSON
-  * bridge (literal → JSON → `spark.read.json` → shred), and binding
-  * sets come back typed the same way (boxed values → JSON rendering →
-  * schema inference) — this restores value types exactly like the
-  * reference's unboxing (`util.cljc:299-322` + `builtin.cljc:2041-2061`),
-  * including non-string express keys. Literal programs are small by
-  * construction; the Scala API (QueryCompiler/Express over real
-  * DataFrames) remains the 100 TB path.
+  * `query{}` application takes one route, as in the reference
+  * (`db-for!`, then `query-fn-aux`, builtin.cljc:1737-1759): each data
+  * argument becomes a database through Shred.dbFor — program literals
+  * first cross a driver-side JSON bridge (literal → JSON →
+  * `spark.read.json`) — and QueryCompiler.plan runs the query once. Its
+  * regroup tier reads shredded documents back directly when every
+  * pattern resolves over them, and returns the qvar types it proved.
+  * When any argument is a program literal, binding sets come back
+  * typed: the proven types, and one runtime type-facts aggregate for
+  * the other columns, restore value types like the reference's
+  * unboxing (`util.cljc:299-322` + `builtin.cljc:2041-2061`),
+  * including non-string express keys.
   */
 object QueryBridge {
 
@@ -49,11 +53,13 @@ object QueryBridge {
     spark.read.json(json.toDS())
   }
 
-  /** Run a query def against positional data arguments. Literal
-    * program data goes through the JSON bridge with typed restore
-    * (driver-side, small by construction); DataFrame arguments (bound
-    * via RM.evalWithSources) stay fully distributed — binding values
-    * then use the canonical string encoding.
+  /** Run a query def against positional data arguments. Every source
+    * becomes a database the way `$db` makes one (Shred.dbFor: literal
+    * program data through the JSON bridge, then the shred; DataFrame
+    * arguments bound via RM.evalWithSources stay fully distributed),
+    * and QueryCompiler plans the query once. Binding sets come back
+    * typed when any argument is a program literal (the typed restore),
+    * else as canonical strings.
     */
   def runQuery(spark: SparkSession, q: QueryDef,
       paramSubst: Map[String, Any], dataArgs: Seq[CV]): CTab = {
@@ -66,9 +72,10 @@ object QueryBridge {
     // positional source naming: patterns with explicit $DB names bind
     // in order of first appearance; unnamed patterns use the first arg
     val named = q.patterns.flatMap(_.src).distinct
-    val srcDfs: Map[String, DataFrame] =
-      (if (named.isEmpty) Map.empty[String, DataFrame]
-       else named.zip(dfs).toMap) ++ Map("default" -> dfs.head)
+    val sources: Map[String, DataFrame] =
+      ((if (named.isEmpty) Map.empty[String, DataFrame]
+        else named.zip(dfs).toMap) ++ Map("default" -> dfs.head))
+        .map { case (n, df) => n -> Shred.dbFor(df) }
     val pats = q.patterns.map { p =>
       val v = p.v match {
         case QvarRef(n) => V(n)
@@ -88,16 +95,16 @@ object QueryBridge {
     // predicate patterns: [($match(?str, /re/))] — compile with qvars
     // restored to NATIVE types (the reference binds Datahike's typed
     // values, so `[(?n = 5)]` matches a numeric ?n without $number).
-    // Direct-path static hints type the column exactly; without a
+    // The planner's proven types type the column exactly; without a
     // provable type the boxed (v, vt) pair restores per row through
     // the variant channel, whose `=`/comparisons/arithmetic already
     // carry reference semantics (type-strict, numeric across
     // encodings).
-    def predFns(hints: Map[String, Set[org.apache.spark.sql.types
+    def predFns(types: Map[String, Set[org.apache.spark.sql.types
         .DataType]]) = q.preds.map { p =>
       (bound: Map[String, org.apache.spark.sql.Column]) =>
         graft.functions.Jsonata.boolean(
-          materialize(Compiler.compile(p, typedPredEnv(bound, hints))).col)
+          materialize(Compiler.compile(p, typedPredEnv(bound, types))).col)
     }
     // the reference parses arbitrary <|k: v|> maps but EXECUTES only
     // keepDBid (builtin.cljc:1753 is the sole consumer) — anything
@@ -109,72 +116,17 @@ object QueryBridge {
         s"${unknownOpts.toSeq.sorted.mkString(", ")} (supported: keepDBid)")
     val keepDBid = q.options.get("keepDBid").contains("true")
 
-    // Direct (EAV-free) routing: when every pattern names a constant
-    // attribute the resolver can compile over the documents — top-level
-    // atomic columns AND struct-ref chains since round 16 — skip the
-    // shred entirely (one narrow projection per entity var, no triple
-    // self-joins — QueryCompiler.runDocs). Array attributes, wildcard
-    // attrs, and unresolvable shapes fall back to the EAV form, whose
-    // explode materializes sub-entities.
-    // a `$db` result (triple frame) routes straight to the EAV
-    // engine: it IS the database, so the direct path (which reads
-    // data columns) and the shred (which would shred triples of
-    // triples) must both be skipped
-    val anyDb = srcDfs.values.exists(Shred.isTriplesFrame)
-    // entity ids travel as 8-byte longs (the native path's join/
-    // distinct key); the boxed projection casts to the identical
-    // string, so every downstream contract is unchanged. The content
-    // hash covers the whole row, so it is row-FUNCTIONAL: same-entity
-    // patterns may fuse into one row-local projection (equal ids imply
-    // equal rows — zip == per-entity product)
-    val docs = srcDfs.map { case (n, df) =>
-      n -> QueryCompiler.DocSource(df.withColumn(EntCol,
-        Shred.derivedIdLong(df)), EntCol, idFunctional = true)
-    }
-    lazy val hints = QueryCompiler.docVarTypes(docs, pats)
-    // native-typed route first (joins + the Datalog distinct carry
-    // source-typed values, not canonical-string structs — the
-    // fact-scale profile); boxed when a qvar's types can't provably
-    // preserve canonical semantics natively; EAV when unresolvable
-    val direct = if (anyDb) None else
-      QueryCompiler.runDocsNative(docs, pats, Nil, keepDBid,
-          boxedPredicates = predFns(hints))
-        .orElse(QueryCompiler.runDocsBoxedOpt(docs, pats, Nil, keepDBid,
-          boxedPredicates = predFns(hints)))
-    direct match {
-      case Some(boxed) =>
-        if (allTables) // canonical string bindings, like QueryCompiler.run
-          CTab(boxed.select(boxed.columns.toSeq
-            .map(c => boxed(c).getField("v").as(c)): _*))
-        else
-          CTab(typedBsets(spark, boxed, hints))
-      case None =>
-        compileEav(spark, srcDfs, pats, keepDBid, predFns, allTables)
-    }
-  }
-
-  private def compileEav(spark: org.apache.spark.sql.SparkSession,
-      srcDfs: Map[String, org.apache.spark.sql.DataFrame],
-      pats: Seq[QueryCompiler.Pattern], keepDBid: Boolean,
-      predFns: Map[String, Set[org.apache.spark.sql.types.DataType]] =>
-        Seq[Map[String, org.apache.spark.sql.Column] =>
-          org.apache.spark.sql.Column],
-      allTables: Boolean): CTab = {
-    {
-      val sources = srcDfs.map { case (n, df) =>
-        n -> (if (Shred.isTriplesFrame(df)) df else Shred.shred(df)) }
-      if (allTables) // distributed end-to-end; canonical string bindings
-        CTab(QueryCompiler.run(sources, pats, Nil, keepDBid,
-          boxedPredicates = predFns(Map.empty)))
-      else
-        CTab(typedBsets(spark,
-          QueryCompiler.runBoxed(sources, pats, Nil, keepDBid,
-            boxedPredicates = predFns(Map.empty))))
-    }
+    val QueryCompiler.Planned(boxed, types) =
+      QueryCompiler.plan(sources, pats, Nil, keepDBid, predFns)
+    if (allTables) // canonical string bindings, like QueryCompiler.run
+      CTab(boxed.select(boxed.columns.toSeq
+        .map(c => boxed(c).getField("v").as(c)): _*))
+    else
+      CTab(typedBsets(spark, boxed, types))
   }
 
   /** Native-typed predicate environment from the boxed binding columns:
-    * all-integral hints restore longs, all-numeric doubles, all-boolean
+    * all-integral types restore longs, all-numeric doubles, all-boolean
     * booleans, any all-non-numeric atomic set the canonical string
     * (strings, refs, dates); mixed or unknown kinds restore per-row as
     * variants (Compiler.variantOfBoxed).
@@ -204,13 +156,6 @@ object QueryBridge {
     }
   }
 
-  private val EntCol = "__graft_e"
-
-  /** Direct-path eligibility: constant attrs only, each resolving to an
-    * atomic top-level column of its source frame. A missing attribute
-    * means "no such triples" — the EAV path yields the correct empty
-    * result, so it is routed there rather than special-cased here.
-    */
   /** Boxed (v, vt) binding frame → typed frame, fully distributed.
     *
     * The result schema needs one runtime fact per column — the set of
@@ -231,7 +176,7 @@ object QueryBridge {
     val cols = boxed.columns
     if (cols.isEmpty) return boxed
 
-    // Columns with provable static types (direct doc path) skip the
+    // Columns with proven static types (the regroup tier) skip the
     // runtime type-facts job entirely: integral numerics are long,
     // booleans boolean, strings/refs/mixed pass through. Fractional
     // numerics still need the runtime all-integral check to match the

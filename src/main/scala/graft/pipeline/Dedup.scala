@@ -87,88 +87,13 @@ object Dedup {
     if (estSplits < par) df.repartition(par) else df
   }
 
-  /** k minhashes of the shingle set (Murmur3 with per-row seed mix). */
-  def minhashSignature(sh: Column, k: Int = 64): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      h => array_min(transform(sh, s => hash(s, h))))
-
-  /** doc → (band_id, band_hash) pairs for LSH bucketing. */
-  def bands(sig: Column, b: Int, r: Int): Column =
-    transform(sequence(lit(0), lit(b - 1)),
-      j => struct(j.as("band"),
-        hash(slice(sig, j * r + 1, lit(r))).as("bucket")))
-
-  /** Candidate near-duplicate pairs (id1 < id2) via banded MinHash.
-    *
-    * @param maxBucket drop degenerate buckets larger than this (skew
-    *                  guard: boilerplate text at corpus scale)
-    */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 64, b: Int = 16,
-      maxBucket: Int = 1000): DataFrame = {
-    val r = k / b
-    // the trailing repartition is a collapse barrier as much as a
-    // spread: without it Catalyst inlines the k-hash signature into
-    // every band expression of the explode (b× recompute)
-    val sig = spread(df.select(col(idCol).as("id"),
-        col(textCol).as("__t")))
-      .select(col("id"), minhashSignature(
-          graft.functions.Shingles(col("__t"), n), k)
-        .as("sig"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val bucketed = sig
-      .select(col("id"), explode(bands(col("sig"), b, r)).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bucket"))
-    val capped = graft.core.Caches.stage(bucketed
-      .withColumn("__n", count(lit(1))
-        .over(Window.partitionBy("band", "bucket")))
-      .filter(col("__n") <= maxBucket).drop("__n"))
-      // both self-join sides consume this frame: stage (persist +
-      // register) so the signature pipeline runs once (spillable,
-      // tiny rows). The returned plan consumes the cache lazily, so
-      // the operator has no post-action hook to unpersist — release
-      // happens at the harness level: Caches.releaseAll between
-      // queries (Bench/Verify do; CacheLifecycleSpec pins it).
-    val l = capped.as("l")
-    val rgt = capped.as("r")
-    l.join(rgt,
-        col("l.band") === col("r.band") &&
-        col("l.bucket") === col("r.bucket") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"))
-      .distinct()
-  }
-
-  /** Verified near-dup pairs: candidates whose exact shingle Jaccard ≥
-    * threshold. The join re-attaches shingle sets; the similarity is a
-    * row-local array op.
-    */
-  def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 64, b: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
-    val sh = spread(df.select(col(idCol).as("id"),
-        col(textCol).as("__t")))
-      .select(col("id"),
-        graft.functions.Shingles(col("__t"), n).as("sh"))
-    val cands = minhashCandidates(df, idCol, textCol, n, k, b)
-    cands
-      .join(sh.withColumnsRenamed(Map("id" -> "id1", "sh" -> "sh1")), "id1")
-      .join(sh.withColumnsRenamed(Map("id" -> "id2", "sh" -> "sh2")), "id2")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          size(array_union(col("sh1"), col("sh2"))))
-      .filter(col("jaccard") >= threshold)
-      .select("id1", "id2", "jaccard")
-  }
-
   // ---------- portable (md5-derived) MinHash ----------
   //
-  // Same banded-LSH shape as above, but every hash value is derived
-  // from md5 — computable bit-identically in any engine with an md5
-  // function, so the driver's DuckDB oracle can verify the *values*
-  // (Murmur3/xxhash64 above are Spark-local and gate rows-only).
-  // Minhash values are md5 hex strings compared lexicographically;
-  // min-of-strings is engine-independent.
+  // Banded LSH where every hash value is derived from md5 —
+  // computable bit-identically in any engine with an md5 function,
+  // so the DuckDB oracle can verify the *values*. The fused
+  // native kernel (MinhashBandBuckets) computes the same buckets in
+  // one call per row and is the production path.
 
   /** Modulus for the portable minhash permutations: 2^31-1 (Mersenne
     * prime). Products a·h stay under 2^62, so the arithmetic is exact
@@ -249,8 +174,11 @@ object Dedup {
           transform(slice(sig, j * r + 1, lit(r)), _.cast("string")),
           "|")).as("bucket")))
 
-  /** Candidate pairs via portable banded MinHash (cf.
-    * [[minhashCandidates]]).
+  /** Candidate near-duplicate pairs (id1 < id2) via portable banded
+    * MinHash.
+    *
+    * @param maxBucket drop degenerate buckets larger than this (skew
+    *                  guard: boilerplate text at corpus scale)
     */
   def minhashCandidatesMd5(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 32, b: Int = 8,
@@ -411,7 +339,7 @@ object Dedup {
     * (band, bucket) equi-join of batch×index, verified by exact
     * shingle Jaccard against just the matched corpus rows. The skew
     * cap applies on the INDEX side (boilerplate buckets at corpus
-    * scale), mirroring minhashCandidates' maxBucket.
+    * scale), mirroring minhashCandidatesMd5's maxBucket.
     *
     * Cost at 100 TB: batch-signature compute is |batch|-scan-local;
     * the probe is co-located when the index is bucketed on
@@ -692,7 +620,7 @@ object Dedup {
     * winnowed fingerprint index: docs sharing ≥ `minShared` DISTINCT
     * fingerprint hashes. The self-join runs on the sparse fingerprint
     * frame only; `maxBucket` drops boilerplate fingerprints shared by
-    * more than that many docs (the [[minhashCandidates]] skew guard —
+    * more than that many docs (the [[minhashCandidatesMd5]] skew guard —
     * a corpus-wide header would otherwise quadratically fan out its
     * bucket).
     *

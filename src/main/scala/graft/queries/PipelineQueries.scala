@@ -10,9 +10,10 @@ import graft.pipeline.{Ann, Dedup, TextFns}
   * entries. Every entry is DuckDB-hash-checked: the dedup/LSH gates use
   * the portable md5-derived hash family (`Dedup.*Md5`) whose values an
   * SQL engine reproduces exactly, and the hyperplane gates embed the
-  * deterministic plane matrix as SQL literals. The engine-native
-  * (Murmur3/xxhash64) variants stay the production fast path and are
-  * covered by PipelineSpec.
+  * deterministic plane matrix as SQL literals. MinHash has only the
+  * portable form, computed by the native `MinhashBandBuckets` kernel;
+  * the remaining engine-native (Murmur3/xxhash64) variants, such as
+  * `Dedup.simhash`, are covered by PipelineSpec.
   */
 object PipelineQueries {
   type Q = (SparkSession, String) => DataFrame

@@ -168,6 +168,21 @@ object QueryCompiler {
       .map(c => boxed(c).getField("v").as(c)): _*)
   }
 
+  /** A binding frame (boxed struct<v,vt> columns) with the static
+    * Spark types the planner proved for its qvars: value qvars carry
+    * their document column types, entity and chain qvars
+    * `StringType` (refs). Empty when the query ran on the EAV tier,
+    * which proves none.
+    */
+  final case class Planned(bsets: DataFrame,
+      varTypes: Map[String, Set[DataType]])
+
+  /** Boxed predicates built from the proven qvar types — the text
+    * frontend types its predicate environment this way.
+    */
+  type TypedPredicates =
+    Map[String, Set[DataType]] => Seq[Map[String, Column] => Column]
+
   /** Like run but keeps the boxed struct<v,vt> binding columns — the
     * typed view (used by the text frontend's unboxing bridge).
     *
@@ -179,7 +194,8 @@ object QueryCompiler {
     *     provenance (Shred.unshredPersisted) — and every pattern
     *     resolves over the documents (constant shredded attributes,
     *     including struct-ref CHAINS onto nested fields), the query
-    *     compiles over the DOCUMENTS (runDocsNative → runDocsBoxed).
+    *     compiles over the DOCUMENTS ([[planDocs]]: the native build
+    *     when the qvar types allow it, else the boxed one).
     *     Same-entity patterns fuse into one row-local projection when
     *     the entity id provably determines the row (content-hash
     *     ids); with an explicit user idCol they compile to the
@@ -206,12 +222,24 @@ object QueryCompiler {
       predicates: Seq[Map[String, Column] => Column] = Nil,
       keepDBid: Boolean = false,
       boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
-      : DataFrame = {
+      : DataFrame =
+    plan(sources, patterns, predicates, keepDBid, _ => boxedPredicates)
+      .bsets
+
+  /** [[runBoxed]] returning the proven qvar types with the frame, and
+    * building its boxed predicates from them — the one planner call of
+    * the text frontend.
+    */
+  private[graft] def plan(sources: Map[String, DataFrame],
+      patterns: Seq[Pattern],
+      predicates: Seq[Map[String, Column] => Column],
+      keepDBid: Boolean,
+      boxedPredicates: TypedPredicates): Planned = {
     require(patterns.nonEmpty, "query{} needs at least one pattern")
     regroupShredded(sources, patterns, predicates, keepDBid,
         boxedPredicates)
-      .getOrElse(runBoxedEav(sources, patterns, predicates, keepDBid,
-        boxedPredicates))
+      .getOrElse(Planned(runBoxedEav(sources, patterns, predicates,
+        keepDBid, boxedPredicates(Map.empty)), Map.empty))
   }
 
   /** Tier-1 planning of [[runBoxed]]: compile a constant-attribute
@@ -235,8 +263,7 @@ object QueryCompiler {
       patterns: Seq[Pattern],
       predicates: Seq[Map[String, Column] => Column],
       keepDBid: Boolean,
-      boxedPredicates: Seq[Map[String, Column] => Column])
-      : Option[DataFrame] = {
+      boxedPredicates: TypedPredicates): Option[Planned] = {
     import org.apache.spark.sql.types._
     if (!patterns.forall(_.a.isInstanceOf[C])) return None
     val det = sources.map { case (n, df) =>
@@ -285,7 +312,7 @@ object QueryCompiler {
       // then correctly declines to the EAV tier (empty result there)
       val keep = doc.columns.filter(shredded.contains).toSeq
       val projected = base.withColumn(ent, ColumnGlue.column(guarded))
-        .select((ent +: keep).map(c => col(quoteName(c))): _*)
+        .select((ent +: keep).map(c => col(Shred.quoteIdent(c))): _*)
       // fused-plan license: a content-hash id (equal ids imply equal
       // rows by construction) OR a write-time uniqueness proof carried
       // by the shred (ShredGenerator.idFunctional / the persisted
@@ -294,13 +321,11 @@ object QueryCompiler {
         idFunctional = proven || contentHashId(idExpr,
           doc.queryExecution.analyzed.output))
     }
-    runDocsNative(docs, patterns, predicates, keepDBid, boxedPredicates)
-      .orElse(runDocsBoxedOpt(docs, patterns, predicates, keepDBid,
-        boxedPredicates))
+    planDocs(docs, patterns, predicates, keepDBid, boxedPredicates)
   }
 
   /** Is the shred's entity-id expression the content hash over the
-    * WHOLE document row ([[graft.shred.Shred.derivedIdLong]]'s shape:
+    * WHOLE document row (the shape of the shred's no-idCol id:
     * `xxhash64(to_json(struct(<every child column>)))`)? Then equal
     * ids imply equal rows (modulo 64-bit hash collisions — the same
     * conflation the EAV authority itself makes, since colliding rows
@@ -351,19 +376,13 @@ object QueryCompiler {
           acc.join(next, shared.flatMap(TypedEnc.colNames))
         else acc.crossJoin(next)
       }
-    val boundBoxed: Map[String, Column] = TypedEnc.varsOf(joined)
-      .map(n => n -> TypedEnc.boxedOf(joined, n)).toMap
-    val bound: Map[String, Column] =
-      boundBoxed.map { case (n, s) => n -> s.getField("v") }
-    val filtered = boxedPredicates.foldLeft(
-      predicates.foldLeft(joined)((f, p) => f.filter(p(bound))))(
-      (f, p) => f.filter(p(boundBoxed)))
+    val filtered = filterBindings(joined, TypedEnc.varsOf(joined)
+      .map(n => n -> TypedEnc.boxedOf(joined, n)).toMap,
+      predicates, boxedPredicates)
     // Datalog set semantics over ALL found qvars — on the native
     // encoding — THEN drop entity vars and decode to boxed structs
     // (so residual duplicate bsets survive, as in the reference).
-    val entityVars = patterns.flatMap(p => p.e match {
-      case V(n) => Some(n); case _ => None
-    }).toSet
+    val entityVars = entityVarsOf(patterns)
     val distinctAll = filtered.distinct()
     val out = TypedEnc.varsOf(distinctAll)
       .filter(c => keepDBid || !entityVars.contains(c))
@@ -384,23 +403,13 @@ object QueryCompiler {
       : DataFrame = {
     require(patterns.nonEmpty, "query{} needs at least one pattern")
     val joined = patterns.map(p => patternFrame(sources(p.src), p))
-      .reduceLeft { (acc, next) =>
-        val shared = acc.columns.toSet.intersect(next.columns.toSet).toSeq
-        if (shared.nonEmpty) acc.join(next, shared)
-        else acc.crossJoin(next)
-      }
-    val bound: Map[String, Column] =
-      joined.columns.map(n => n -> joined(n).getField("v")).toMap
-    val boundBoxed: Map[String, Column] =
-      joined.columns.map(n => n -> joined(n)).toMap
-    val filtered = boxedPredicates.foldLeft(
-      predicates.foldLeft(joined)((f, p) => f.filter(p(bound))))(
-      (f, p) => f.filter(p(boundBoxed)))
+      .reduceLeft(joinShared)
+    val filtered = filterBindings(joined,
+      joined.columns.map(n => n -> joined(n)).toMap,
+      predicates, boxedPredicates)
     // Datalog set semantics over ALL found qvars, THEN drop entity vars
     // (so residual duplicate bsets survive, as in the reference).
-    val entityVars = patterns.flatMap(p => p.e match {
-      case V(n) => Some(n); case _ => None
-    }).toSet
+    val entityVars = entityVarsOf(patterns)
     val distinctAll = filtered.distinct()
     val out = distinctAll.columns
       .filter(c => keepDBid || !entityVars.contains(c))
@@ -410,6 +419,33 @@ object QueryCompiler {
   /** Single-source convenience. */
   def run(triples: DataFrame, patterns: Seq[Pattern]): DataFrame =
     run(Map("default" -> triples), patterns)
+
+  /** Natural join on the shared binding columns (cross join when none
+    * are shared) — the conjunction of two binding frames.
+    */
+  private def joinShared(acc: DataFrame, next: DataFrame): DataFrame = {
+    val shared = acc.columns.toSet.intersect(next.columns.toSet).toSeq
+    if (shared.nonEmpty) acc.join(next, shared) else acc.crossJoin(next)
+  }
+
+  /** Both predicate kinds over a binding frame: `predicates` see each
+    * qvar's canonical string, `boxedPredicates` its struct<v,vt> view
+    * (`boxed`, by qvar name).
+    */
+  private def filterBindings(f: DataFrame, boxed: Map[String, Column],
+      predicates: Seq[Map[String, Column] => Column],
+      boxedPredicates: Seq[Map[String, Column] => Column]): DataFrame = {
+    val bound = boxed.map { case (n, s) => n -> s.getField("v") }
+    boxedPredicates.foldLeft(
+      predicates.foldLeft(f)((g, p) => g.filter(p(bound))))(
+      (g, p) => g.filter(p(boxed)))
+  }
+
+  /** The qvars in entity position. */
+  private def entityVarsOf(patterns: Seq[Pattern]): Set[String] =
+    patterns.flatMap(_.e match {
+      case V(n) => Some(n); case _ => None
+    }).toSet
 
   // ---------- direct (unshredded) compilation ----------
 
@@ -427,15 +463,6 @@ object QueryCompiler {
     */
   final case class DocSource(df: DataFrame, idCol: String,
       idFunctional: Boolean = false)
-
-  /** Backtick-quoted column name (exact resolution — a dotted name
-    * must not be parsed as a struct path). Inner backticks are doubled
-    * (the quoted-identifier escape), so regroupShredded's eager keep
-    * projection never throws on such names; PATTERNS over them still
-    * decline in resolution (conservative — round-16 ADVICE).
-    */
-  private def quoteName(n: String): String =
-    "`" + n.replace("`", "``") + "`"
 
   /** Are all field names safe for deterministic sub-entity id
     * strings? Shred sub-ids are `parent + "/" + name` (+ "/" + index
@@ -708,6 +735,8 @@ object QueryCompiler {
       */
     def setValue(c: Column, dt: DataType, varName: String): Column =
       value(c, dt, varName)
+    /** the boxed struct<v,vt> view of a built binding column */
+    def boxed(c: Column, dt: DataType, varName: String): Column
   }
 
   private def subIdSuffix(path: Seq[String]): String =
@@ -720,10 +749,14 @@ object QueryCompiler {
       struct(subId.as("v"), lit("ref").as("vt"))
     def value(c: Column, dt: DataType, varName: String): Column =
       struct(Shred.canon(c, dt).as("v"), lit(vtNameOf(dt)).as("vt"))
+    def boxed(c: Column, dt: DataType, varName: String): Column = c
   }
 
-  private final class NativeBinder(travel: Map[String, DataType])
-      extends Binder {
+  /** `travel`: the native type each qvar travels as; `refVars`: the
+    * entity and chain qvars, which box with the "ref" tag.
+    */
+  private final class NativeBinder(travel: Map[String, DataType],
+      refVars: Set[String]) extends Binder {
     def ent(id: Column, varName: String): Column =
       id.cast(travel(varName))
     def chain(subId: Column): Column = subId
@@ -739,6 +772,9 @@ object QueryCompiler {
         case _ => v
       }
     }
+    def boxed(c: Column, dt: DataType, varName: String): Column =
+      struct(Shred.canon(c, dt).as("v"),
+        lit(if (refVars(varName)) "ref" else Shred.typeName(dt)).as("vt"))
   }
 
   /** Compile one resolved group to a binding frame. Returns the frame
@@ -773,7 +809,7 @@ object QueryCompiler {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
       StructType}
     val df = src.df
-    val id = col(quoteName(src.idCol))
+    val id = col(Shred.quoteIdent(src.idCol))
     val fuse = src.idFunctional || g.pats.size <= 1
     if (fuse) {
       var f = df
@@ -808,7 +844,7 @@ object QueryCompiler {
           (Seq.empty[Step], (id.cast("string"), None)))
       def fieldOf(node: Seq[Step], name: String): Column =
         ctx(node)._2 match {
-          case None => col(quoteName(name))
+          case None => col(Shred.quoteIdent(name))
           case Some(elem) => elem.getField(name)
         }
       nodes.foreach { steps =>
@@ -883,7 +919,7 @@ object QueryCompiler {
       assert(!needsExplode(g), "product mode cannot explode arrays")
       def pcol(steps: Seq[Step], name: String): Column = {
         val names = steps.map(_.name) :+ name
-        names.tail.foldLeft(col(quoteName(names.head)))(_.getField(_))
+        names.tail.foldLeft(col(Shred.quoteIdent(names.head)))(_.getField(_))
       }
       var pre = df
       g.root match {
@@ -1047,39 +1083,57 @@ object QueryCompiler {
       keepDBid: Boolean = false,
       boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
       : DataFrame = {
-    val boxed = runDocsNative(sources, patterns, predicates, keepDBid,
-        boxedPredicates)
-      .getOrElse(runDocsBoxed(sources, patterns, predicates, keepDBid,
-        boxedPredicates))
+    val boxed = planDocs(sources, patterns, predicates, keepDBid,
+        _ => boxedPredicates)
+      .getOrElse(throw new IllegalArgumentException(
+        "runDocs requires constant attributes over resolvable document " +
+          "columns; use run() for wildcard attributes or unsupported " +
+          "shapes"))
+      .bsets
     boxed.select(boxed.columns.toSeq
       .map(c => boxed(c).getField("v").as(c)): _*)
   }
 
-  /** `runDocs` keeping the boxed struct<v,vt> binding columns — used by
-    * the text frontend's typed restore (QueryBridge), which pairs it
-    * with `docVarTypes` to type the output statically.
-    */
-  def runDocsBoxed(sources: Map[String, DocSource],
-      patterns: Seq[Pattern],
-      predicates: Seq[Map[String, Column] => Column] = Nil,
-      keepDBid: Boolean = false,
-      boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
-      : DataFrame =
-    runDocsBoxedOpt(sources, patterns, predicates, keepDBid,
-      boxedPredicates).getOrElse(throw new IllegalArgumentException(
-      "runDocs requires constant attributes over resolvable document " +
-        "columns; use run() for wildcard attributes or unsupported " +
-        "shapes"))
-
-  /** [[runDocsBoxed]] that declines instead of throwing — the form
-    * regroupShredded and the text frontend route through.
+  /** The boxed build of [[planDocs]] alone — the authority the native
+    * build is checked against. None when the shape does not resolve.
     */
   private[graft] def runDocsBoxedOpt(sources: Map[String, DocSource],
       patterns: Seq[Pattern],
       predicates: Seq[Map[String, Column] => Column] = Nil,
       keepDBid: Boolean = false,
       boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
-      : Option[DataFrame] = {
+      : Option[DataFrame] =
+    planDocs(sources, patterns, predicates, keepDBid, _ => boxedPredicates,
+      native = false).map(_.bsets)
+
+  /** The native build of [[planDocs]] alone. None when the shape does
+    * not resolve or its qvar types cannot travel natively.
+    */
+  def runDocsNative(sources: Map[String, DocSource],
+      patterns: Seq[Pattern],
+      predicates: Seq[Map[String, Column] => Column] = Nil,
+      keepDBid: Boolean = false,
+      boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
+      : Option[DataFrame] =
+    planDocs(sources, patterns, predicates, keepDBid, _ => boxedPredicates,
+      boxed = false).map(_.bsets)
+
+  /** The document tier: resolve the patterns once ([[resolveGroups]]),
+    * then build the binding frame with the NATIVE binder when the
+    * resolved qvar types allow it ([[nativeBinder]]), else the BOXED
+    * one; `native`/`boxed` restrict the choice to one build. Both
+    * builds share everything but the binding encoding, so they return
+    * value-identical frames. The proven qvar types ride along with
+    * the frame, and the boxed predicates are built from them. None:
+    * the shape does not resolve, an explode-needing group lacks the
+    * fused license, or no allowed build applies.
+    */
+  private[graft] def planDocs(sources: Map[String, DocSource],
+      patterns: Seq[Pattern],
+      predicates: Seq[Map[String, Column] => Column],
+      keepDBid: Boolean,
+      boxedPredicates: TypedPredicates,
+      native: Boolean = true, boxed: Boolean = true): Option[Planned] = {
     require(patterns.nonEmpty, "query{} needs at least one pattern")
     val groups = resolveGroups(sources, patterns).getOrElse(return None)
     // array hops / cardinality-many bindings need the fused (lateral
@@ -1087,46 +1141,50 @@ object QueryCompiler {
     // pattern; otherwise the always-sound EAV plan serves the query
     if (groups.exists(g => needsExplode(g) &&
       !(sources(g.src).idFunctional || g.pats.size <= 1))) return None
-    val built = groups.map(g =>
-      buildGroup(sources(g.src), g, new BoxedBinder))
-    val joined = built.map(_._1).reduceLeft { (acc, next) =>
-      val shared = acc.columns.toSet.intersect(next.columns.toSet).toSeq
-      if (shared.nonEmpty) acc.join(next, shared) else acc.crossJoin(next)
-    }
-    val bound: Map[String, Column] =
-      joined.columns.map(n => n -> joined(n).getField("v")).toMap
-    val boundBoxed: Map[String, Column] =
-      joined.columns.map(n => n -> joined(n)).toMap
-    val filtered = boxedPredicates.foldLeft(
-      predicates.foldLeft(joined)((f, p) => f.filter(p(bound))))(
-      (f, p) => f.filter(p(boundBoxed)))
-    val entityVars = patterns.flatMap(_.e match {
-      case V(n) => Some(n); case _ => None
-    }).toSet
-    // joins of distinct frames stay distinct (the merged row determines
-    // both input rows) and filters preserve distinctness, so when every
-    // group frame is distinct-by-construction the Datalog distinct is
-    // a provable no-op — skip its exchange
+    val bind: Binder =
+      (if (native) nativeBinder(sources, groups) else None)
+        .orElse(if (boxed) Some(new BoxedBinder) else None)
+        .getOrElse(return None)
+    val types = provenTypes(groups)
+    val built = groups.map(g => buildGroup(sources(g.src), g, bind))
+    val joined = built.map(_._1).reduceLeft(joinShared)
+    def boxedOf(f: DataFrame, n: String): Column =
+      bind.boxed(f(n), f.schema(n).dataType, n)
+    // predicates see the boxed view; on the native build it is
+    // synthesized inline from the native columns (row-local;
+    // SimplifyExtractValueOps collapses the struct wrap when a
+    // predicate only reads one field)
+    val filtered = filterBindings(joined,
+      joined.columns.map(n => n -> boxedOf(joined, n)).toMap,
+      predicates, boxedPredicates(types))
+    // Datalog set semantics over ALL found qvars (native values on the
+    // native build), THEN drop entity vars and box (row-local,
+    // post-shuffle). Joins of distinct frames stay distinct (the
+    // merged row determines both input rows) and filters preserve
+    // distinctness, so when every group frame is distinct by
+    // construction (product mode) the distinct is a provable no-op —
+    // skip its exchange
     val distinctAll =
       if (built.forall(_._2)) filtered else filtered.distinct()
+    val entityVars = entityVarsOf(patterns)
     val out = eavColumnOrder(patterns)
       .filter(c => keepDBid || !entityVars.contains(c))
-    Some(distinctAll.select(out.map(distinctAll(_)): _*))
+    Some(Planned(distinctAll.select(out.map(c =>
+      boxedOf(distinctAll, c).as(c)): _*), types))
   }
 
-  /** Native-typed direct path — the fact-table route. Binding columns
-    * keep their SOURCE Spark types through the join chain and the
-    * Datalog distinct, so those shuffles carry 8-byte natives instead
-    * of canonical-string structs (the boxed form shuffles two strings
-    * per qvar — at 60M lineitem rows that was the spill-bound profile
-    * BENCH_sf10_r13 attributed). The struct<v,vt> boxing is applied
-    * AFTER the distinct as a row-local projection, so the returned
-    * frame is value-identical to [[runDocsBoxed]] and slots into the
-    * same typed-restore bridge.
+  /** The native binder — binding columns keep their SOURCE Spark types
+    * through the join chain and the Datalog distinct, so those
+    * shuffles carry 8-byte natives instead of canonical-string structs
+    * (the boxed form shuffles two strings per qvar — at 60M lineitem
+    * rows that was the spill-bound profile BENCH_sf10_r13 attributed).
+    * The struct<v,vt> boxing is applied AFTER the distinct as a
+    * row-local projection, so the frame is value-identical to the
+    * boxed build's.
     *
-    * Returns None — caller falls back to the boxed form — when native
-    * equality can't provably reproduce the canonical-string join and
-    * distinct semantics:
+    * None — the boxed build serves the query — when native equality
+    * can't provably reproduce the canonical-string join and distinct
+    * semantics:
     *
     *  - a qvar fed by mixed integral+fractional sources (canonical
     *    strings join 5 with 5.0 exactly at any magnitude; a double
@@ -1150,18 +1208,9 @@ object QueryCompiler {
     * every source, and product-mode collect_sets normalize -0.0
     * explicitly (NativeBinder.setValue) because their dedup boxes.
     */
-  def runDocsNative(sources: Map[String, DocSource],
-      patterns: Seq[Pattern],
-      predicates: Seq[Map[String, Column] => Column] = Nil,
-      keepDBid: Boolean = false,
-      boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
-      : Option[DataFrame] = {
+  private def nativeBinder(sources: Map[String, DocSource],
+      groups: Seq[RGroup]): Option[Binder] = {
     import org.apache.spark.sql.types._
-    require(patterns.nonEmpty, "query{} needs at least one pattern")
-    val groups = resolveGroups(sources, patterns).getOrElse(return None)
-    if (groups.exists(g => needsExplode(g) &&
-      !(sources(g.src).idFunctional || g.pats.size <= 1))) return None
-
     val chainVars = groups.flatMap(_.pats.flatMap(_.chainBind))
       .map(_._1).toSet
     val rootVars = groups.flatMap(_.root match {
@@ -1244,79 +1293,36 @@ object QueryCompiler {
           else return None
         n -> t
     } ++ chainVars.map(_ -> StringType).toMap
-
-    val binder = new NativeBinder(travel)
-    val built = groups.map(g => buildGroup(sources(g.src), g, binder))
-    val joined = built.map(_._1).reduceLeft { (acc, next) =>
-      val shared = acc.columns.toSet.intersect(next.columns.toSet).toSeq
-      if (shared.nonEmpty) acc.join(next, shared) else acc.crossJoin(next)
-    }
-    // predicates see the boxed view, synthesized inline from the
-    // native columns (row-local; SimplifyExtractValueOps collapses the
-    // struct wrap when a predicate only reads one field)
-    val entityVars = patterns.flatMap(_.e match {
-      case V(n) => Some(n); case _ => None
-    }).toSet
-    def vtOf(n: String, dt: DataType) =
-      if (entityVars.contains(n) || chainVars.contains(n)) "ref"
-      else Shred.typeName(dt)
-    val boundBoxed: Map[String, Column] = joined.columns.map { n =>
-      val dt = joined.schema(n).dataType
-      n -> struct(Shred.canon(joined(n), dt).as("v"),
-        lit(vtOf(n, dt)).as("vt"))
-    }.toMap
-    val bound: Map[String, Column] =
-      boundBoxed.map { case (n, s) => n -> s.getField("v") }
-    val filtered = boxedPredicates.foldLeft(
-      predicates.foldLeft(joined)((f, p) => f.filter(p(bound))))(
-      (f, p) => f.filter(p(boundBoxed)))
-    // Datalog set semantics over ALL found qvars — on NATIVE values —
-    // THEN drop entity vars and box (row-local, post-shuffle); skipped
-    // when every group frame is distinct-by-construction (product mode)
-    val distinctAll =
-      if (built.forall(_._2)) filtered else filtered.distinct()
-    val out = eavColumnOrder(patterns)
-      .filter(c => keepDBid || !entityVars.contains(c))
-    Some(distinctAll.select(out.map { c =>
-      val dt = distinctAll.schema(c).dataType
-      struct(Shred.canon(distinctAll(c), dt).as("v"),
-        lit(vtOf(c, dt)).as("vt")).as(c)
-    }: _*))
+    Some(new NativeBinder(travel, rootVars ++ chainVars))
   }
 
-  /** Static Spark types feeding each qvar on the direct path: value-
+  /** Static Spark types feeding each qvar of a resolved query: value-
     * position qvars collect their source column types; entity-position
     * and chain (sub-entity) qvars are refs (string ids). Lets the
     * typed restore skip its runtime type-facts job for columns whose
-    * type is provable. Empty when the shape doesn't resolve (callers
-    * then restore per-row).
+    * type is provable.
     */
-  def docVarTypes(sources: Map[String, DocSource],
-      patterns: Seq[Pattern]): Map[String, Set[DataType]] = {
+  private def provenTypes(groups: Seq[RGroup]): Map[String, Set[DataType]] = {
     import org.apache.spark.sql.types.StringType
-    resolveGroups(sources, patterns) match {
-      case None => Map.empty
-      case Some(groups) =>
-        val acc = scala.collection.mutable.Map.empty[String, Set[DataType]]
-        groups.foreach { g =>
-          g.root match {
-            case V(n) => acc(n) = acc.getOrElse(n, Set.empty) + StringType
+    val acc = scala.collection.mutable.Map.empty[String, Set[DataType]]
+    def add(n: String, dt: DataType): Unit =
+      acc(n) = acc.getOrElse(n, Set.empty) + dt
+    groups.foreach { g =>
+      g.root match {
+        case V(n) => add(n, StringType)
+        case _ => ()
+      }
+      g.pats.foreach { rp =>
+        rp.chainBind match {
+          case Some((n, _)) => add(n, StringType)
+          case None => rp.v match {
+            case V(n) => add(n, rp.dt)
             case _ => ()
           }
-          g.pats.foreach { rp =>
-            rp.chainBind match {
-              case Some((n, _)) =>
-                acc(n) = acc.getOrElse(n, Set.empty) + StringType
-              case None => rp.v match {
-                case V(n) =>
-                  acc(n) = acc.getOrElse(n, Set.empty) + rp.dt
-                case _ => ()
-              }
-            }
-          }
         }
-        acc.toMap
+      }
     }
+    acc.toMap
   }
 
   /** Numeric view of a bound qvar inside a predicate. */

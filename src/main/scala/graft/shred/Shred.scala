@@ -192,11 +192,20 @@ object Shred {
 
   /** Shred a document frame into triples. `idCol`: use that column as
     * the entity id (it is still emitted as a regular attribute too);
-    * otherwise generate distributed unique ids. Delegates to the
-    * generator form (bit-identical output, no intermediate array).
+    * otherwise generate distributed unique ids. Generator form: the
+    * triples are emitted directly, with no intermediate array, and
+    * match [[shredExpr]] bit for bit.
     */
   def shred(df: DataFrame, idCol: Option[String] = None): DataFrame =
-    shredGen(df, idCol)
+    shredGenTagged(df, idCol, idFunctional = false)
+
+  /** The database a data value denotes (reference `db-for!`,
+    * `query.cljc:270-284`): a triple frame already is one, any other
+    * frame is shredded. `$db`, `$pull` and `query{}` application take
+    * their data arguments through this.
+    */
+  def dbFor(df: DataFrame): DataFrame =
+    if (isTriplesFrame(df)) df else shred(df)
 
   /** Is `df` already a triple frame (the `$db` result shape)? The
     * text surface uses this to pass databases through `query{}`
@@ -223,13 +232,6 @@ object Shred {
       .select(col("t.e").as("e"), col("t.a").as("a"), col("t.v").as("v"),
         col("t.vt").as("vt"), col("t.vn").as("vn"))
   }
-
-  /** Generator-based shred: emits triples directly (no intermediate
-    * array materialization) — the faster form for wide rows; output is
-    * bit-identical to `shred`.
-    */
-  def shredGen(df: DataFrame, idCol: Option[String] = None): DataFrame =
-    shredGenTagged(df, idCol, idFunctional = false)
 
   private def shredGenTagged(df: DataFrame, idCol: Option[String],
       idFunctional: Boolean): DataFrame = {
@@ -326,18 +328,13 @@ object Shred {
       case None => derivedId(df)
     }
 
-  /** The no-idCol content-derived entity id, exposed so the direct
-    * (unshredded) query path can mint ids identical to the EAV path's.
+  /** The no-idCol content-derived entity id: the string cast of
+    * `xxhash64(to_json(row))`. The regroup tier recognizes this shape
+    * and keeps the 8-byte hash as its native join key.
     */
-  def derivedId(df: DataFrame): Column = derivedIdLong(df).cast("string")
-
-  /** [[derivedId]] before its string cast — the 8-byte form the
-    * native-typed direct path ([[graft.query.QueryCompiler
-    * .runDocsNative]]) carries through joins and the Datalog distinct;
-    * boxing casts it to the identical string afterwards.
-    */
-  def derivedIdLong(df: DataFrame): Column =
+  private def derivedId(df: DataFrame): Column =
     xxhash64(to_json(struct(df.schema.fieldNames.map(col).toSeq: _*)))
+      .cast("string")
 
   /** Shred only the attributes a query's patterns touch — the EAV form
     * of column pruning. The narrowed select reaches the parquet scan
@@ -374,23 +371,32 @@ object Shred {
       idUnique: Option[Boolean] = None,
       docFp: Option[Long] = None, tripleFp: Option[Long] = None)
 
-  /** Order-independent content fingerprint of a frame: 60-bit md5 of
-    * each row's canonical JSON, summed mod 2^60 (the
-    * [[graft.pipeline.Sampling.shardManifest]] certification shape).
-    * Row order and file layout don't matter — content does.
+  /** Order-independent content fingerprint of a frame, as an
+    * aggregate column: 60-bit md5 of each row's canonical JSON, summed
+    * mod 2^60 (the [[graft.pipeline.Sampling.shardManifest]]
+    * certification shape). Row order and file layout don't matter —
+    * content does. [[shredWrite]] observes it in flight and
+    * [[auditPersisted]] recomputes it from disk, so both sides share
+    * this one definition.
     */
-  private def contentFp(df: DataFrame): Long = {
+  private def fpAgg(df: DataFrame): Column = {
     val rowJson = to_json(struct(df.columns.map(c =>
       col(quoteIdent(c))).toSeq: _*))
     val h60 = conv(substring(md5(rowJson), 1, 15), 16, 10)
       .cast("decimal(38,0)")
-    df.select(h60.as("__h"))
-      .agg(org.apache.spark.sql.functions.expr(
-        "CAST(coalesce(sum(__h), 0) % 1152921504606846976 AS BIGINT)"))
-      .head().getLong(0)
+    (coalesce(sum(h60), lit(0).cast("decimal(38,0)"))
+      % lit(1152921504606846976L)).cast("long").as("fp")
   }
 
-  private def quoteIdent(n: String): String =
+  private def contentFp(df: DataFrame): Long =
+    df.agg(fpAgg(df)).head().getLong(0)
+
+  /** Backtick-quoted column name (exact resolution — a dotted name
+    * must not be parsed as a struct path). Inner backticks are doubled
+    * (the quoted-identifier escape), so a projection over any column
+    * name resolves instead of throwing.
+    */
+  private[graft] def quoteIdent(n: String): String =
     "`" + n.replace("`", "``") + "`"
 
   private val MetaFile = "_graft_shred.json"
@@ -452,14 +458,6 @@ object Shred {
     // stays its own action: count_distinct is not a legal observed
     // metric (CollectMetrics forbids distinct aggregates), and its
     // aggregate prunes to the id column alone at the parquet scan.
-    def fpAgg(df: DataFrame): Column = {
-      val rowJson = to_json(struct(df.columns.map(c =>
-        col(quoteIdent(c))).toSeq: _*))
-      val h60 = conv(substring(md5(rowJson), 1, 15), 16, 10)
-        .cast("decimal(38,0)")
-      (coalesce(sum(h60), lit(0).cast("decimal(38,0)"))
-        % lit(1152921504606846976L)).cast("long").as("fp")
-    }
     val obsDocs = org.apache.spark.sql.Observation("graft_docs_fp")
     val obsTrip = org.apache.spark.sql.Observation("graft_triples_fp")
     val trip = shred(docs.observe(obsDocs, fpAgg(docs)), idCol)
@@ -599,7 +597,7 @@ object Shred {
     }
   }
 
-  /** Detect a frame that IS [[shredGen]]'s direct output and recover
+  /** Detect a frame that IS [[shred]]'s direct output and recover
     * `(document frame, entity-id expression, shredded top-level attr
     * names)` — the hook QueryCompiler's shred-aware regrouping uses to
     * turn a constant-attribute query over an explicitly-shredded frame
@@ -610,7 +608,7 @@ object Shred {
     *    (struct(e, row)), child)` with no forwarded child columns and
     *    the identity projection;
     *  - every `row` entry must be a plain attribute of `child` under
-    *    its own name (what [[shredGen]] always builds — a computed
+    *    its own name (what [[shred]] always builds — a computed
     *    entry would make the doc-frame read diverge from the triples);
     *  - the id expression must be deterministic. It MAY be nullable —
     *    but the generator emits NOTHING for a null entity id, so a

@@ -616,11 +616,12 @@ class RMQuerySpec extends SparkSpec {
       org.apache.spark.sql.types.DoubleType, "overlay wins on conflict")
   }
 
-  test("text query over nested struct docs routes DIRECT (chain, no shred)") {
+  test("text query over nested struct docs regroups (chain, no shred in plan)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    // round 16: struct-ref chains resolve on the direct path, so the
-    // frontend's nested-document queries skip the EAV detour entirely
+    // struct-ref chains resolve on the regroup tier, so the frontend's
+    // nested-document queries read the documents back from the shred
+    // and skip the EAV detour entirely
     val docs = Seq((1L, "Bob", "BUILDING", 1500.0),
       (2L, "Ann", "AUTO", 500.0), (3L, "Cid", "BUILDING", 800.0))
       .toDF("id", "name", "seg", "bal")
@@ -641,6 +642,59 @@ class RMQuerySpec extends SparkSpec {
       got.queryExecution.optimizedPlan.toString.take(1200))
     val rows = got.orderBy("n").collect().map(_.toString).toSeq
     assert(rows == Seq("[Bob,1500]"), rows)
+  }
+
+  test("one route: literal, frame, shred, $db and persisted shred " +
+      "type alike") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val d = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "n")
+    val literal =
+      "[{'k': 'a', 'n': 1}, {'k': 'b', 'n': 2}, {'k': 'c', 'n': 3}]"
+    val base = java.nio.file.Files.createTempDirectory("graft-one-route-")
+    val docs = base.resolve("docs").toString
+    val trip = base.resolve("triples").toString
+    d.write.parquet(docs)
+    graft.shred.Shred.shredWrite(spark, docs, None, trip)
+    // each source binds $a; the literal second source $B makes the
+    // output typed (not all tables)
+    val variants: Seq[(String, String, Map[String, DataFrame])] = Seq(
+      ("literal", literal, Map.empty),
+      ("frame", "$src", Map("src" -> d)),
+      ("shred", "$src", Map("src" -> graft.shred.Shred.shred(d))),
+      ("$db", "$db($src)", Map("src" -> d)),
+      ("persisted", "$src",
+        Map("src" -> graft.shred.Shred.openShred(spark, trip))))
+    def runAll(where: String): Seq[(String, DataFrame)] =
+      variants.map { case (name, a, srcs) =>
+        name -> RM.queryFrame(
+          s"""( $$a := $a;
+             |  query(){$where}($$a, [{'tag': 'x'}]) )""".stripMargin,
+          spark, srcs)
+      }
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val matched = runAll(
+      "[$A ?e :k ?k] [$A ?e :n ?n] [$B ?f :tag ?t] [(?n > 1)]")
+    val none = runAll("[$A ?e :k 'zzz'] [$A ?e :n ?n] [$B ?f :tag ?t]")
+    matched.foreach { case (name, df) =>
+      // every variant regroups: no shred generator runs
+      val shreds = df.queryExecution.optimizedPlan.collect {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+            if g.generator.isInstanceOf[graft.shred.ShredGenerator] => g
+      }
+      assert(shreds.isEmpty, s"$name shreds:\n" +
+        df.queryExecution.optimizedPlan.toString.take(1200))
+      assert(df.schema.map(f => (f.name, f.dataType)) ==
+        Seq("k" -> StringType, "n" -> LongType, "t" -> StringType),
+        s"$name: ${df.schema}")
+      assert(rows(df) == Seq("[b,2,x]", "[c,3,x]"), name)
+    }
+    none.foreach { case (name, df) =>
+      assert(df.schema.map(f => (f.name, f.dataType)) ==
+        Seq("n" -> LongType, "t" -> StringType), s"$name: ${df.schema}")
+      assert(df.count() == 0, name)
+    }
   }
 
   test("$identities returns runnable query/express body strings") {

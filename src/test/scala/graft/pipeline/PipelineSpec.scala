@@ -24,7 +24,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("minhash LSH finds near-dup pair, skips unrelated") {
-    val pairs = Dedup.minhashDedupPairs(docs, "doc_id", "text",
+    val pairs = Dedup.minhashDedupPairsMd5(docs, "doc_id", "text",
       n = 3, k = 64, b = 16, threshold = 0.5)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L))) // one word differs

@@ -16,7 +16,7 @@ import graft.query.QueryCompiler.{C, DocSource, Pattern, V, W}
   * repeated-qvar-within-a-group cases, constants, wildcards),
   * [[QueryCompiler.runDocsNative]] — whenever it engages — must
   * return row-for-row and schema-for-schema exactly what the boxed
-  * authority [[QueryCompiler.runDocsBoxed]] returns. When it declines
+  * authority [[QueryCompiler.runDocsBoxedOpt]] returns. When it declines
   * (mixed integral+fractional vars, mixed decimal scales etc.), the
   * boxed form must still evaluate — the caller's fallback is always
   * sound.
@@ -149,13 +149,14 @@ object DirectNativeProps extends Properties("graft.query.native") {
           spark.createDataFrame(
             spark.sparkContext.parallelize(s.rows, 2), s.schema),
           "rid")).toMap
-        val boxed = QueryCompiler.runDocsBoxed(sources, pats)
-        val nativeOpt = QueryCompiler.runDocsNative(sources, pats)
-        val travelKinds = nativeOpt.map { _ =>
-          QueryCompiler.docVarTypes(sources, pats).values
-            .map(_.map(_.getClass.getSimpleName).toSeq.sorted
-              .mkString("+")).toSet.mkString(",")
-        }.getOrElse("")
+        val boxed = QueryCompiler.runDocsBoxedOpt(sources, pats).get
+        val planned = QueryCompiler.planDocs(sources, pats, Nil,
+          keepDBid = false, _ => Nil, boxed = false)
+        val nativeOpt = planned.map(_.bsets)
+        // the qvar types the planner proved for the native build
+        val travelKinds = planned.map(_.varTypes.values
+          .map(_.map(_.getClass.getSimpleName).toSeq.sorted
+            .mkString("+")).toSet.mkString(",")).getOrElse("")
         // classify so a vacuous run (native never engaging, or the
         // repeated-var / decimal-mix branches never exercised) is
         // VISIBLE in the report, not silently green

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * elements, nested objects, arrays of objects, cross-doc schema
   * merge) must satisfy
   *
-  *  1. shredExpr == shredGen — the expression-form witness and the
+  *  1. shredExpr == shred — the expression-form witness and the
   *     generator form are bit-identical on ARBITRARY structures, not
   *     just the handwritten ShredSpec fixtures (round 12 found a
   *     hand-reachable divergence on null array elements; this pins
@@ -112,11 +112,11 @@ object ShredProps extends Properties("graft.shred") {
 
   // ---- properties -------------------------------------------------
 
-  property("shredExpr == shredGen on arbitrary nested documents") =
+  property("shredExpr == shred on arbitrary nested documents") =
     forAll(docsGen) { docs =>
       val df = frameOf(docs)
       val a = rows(graft.shred.Shred.shredExpr(df, Some("id")))
-      val b = rows(graft.shred.Shred.shredGen(df, Some("id")))
+      val b = rows(graft.shred.Shred.shred(df, Some("id")))
       a == b
     }
 

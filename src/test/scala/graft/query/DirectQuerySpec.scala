@@ -78,7 +78,7 @@ class DirectQuerySpec extends SparkSpec {
       "native-eligible")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("who", "dev").collect().toSeq
-    assert(rows(native.get) == rows(QueryCompiler.runDocsBoxed(srcs, pats)))
+    assert(rows(native.get) == rows(QueryCompiler.runDocsBoxedOpt(srcs, pats).get))
     // schemas agree modulo nullability: the product plan's explode of
     // a null-gated collect_set legitimately NARROWS v to non-null on
     // the native route (stronger, value-identical)
@@ -90,10 +90,10 @@ class DirectQuerySpec extends SparkSpec {
           case d => d
         })))
     assert(norm(native.get.schema) ==
-      norm(QueryCompiler.runDocsBoxed(srcs, pats).schema))
+      norm(QueryCompiler.runDocsBoxedOpt(srcs, pats).get.schema))
     // keepDBid: entity-id boxing (long → string, vt ref) also agrees
     val nk = QueryCompiler.runDocsNative(srcs, pats, keepDBid = true).get
-    val bk = QueryCompiler.runDocsBoxed(srcs, pats, keepDBid = true)
+    val bk = QueryCompiler.runDocsBoxedOpt(srcs, pats, keepDBid = true).get
     assert(nk.orderBy("who", "dev").collect().toSeq ==
       bk.orderBy("who", "dev").collect().toSeq)
   }
@@ -103,8 +103,8 @@ class DirectQuerySpec extends SparkSpec {
       bound("pid").getField("v").cast("long") < 3L
     val native = QueryCompiler.runDocsNative(srcs, pats,
       boxedPredicates = Seq(pred)).get
-    val boxed = QueryCompiler.runDocsBoxed(srcs, pats,
-      boxedPredicates = Seq(pred))
+    val boxed = QueryCompiler.runDocsBoxedOpt(srcs, pats,
+      boxedPredicates = Seq(pred)).get
     assert(native.orderBy("who", "dev").collect().toSeq ==
       boxed.orderBy("who", "dev").collect().toSeq)
     assert(native.count() == 2) // Bob's watch + phone; Carol's pid=3 cut
@@ -152,7 +152,7 @@ class DirectQuerySpec extends SparkSpec {
     assert(QueryCompiler.runDocsNative(srcs2, pats2).isDefined)
     assert(QueryCompiler.runDocsNative(srcs2, pats2).get.collect()
       .toSeq.map(_.toString).sorted ==
-      QueryCompiler.runDocsBoxed(srcs2, pats2).collect()
+      QueryCompiler.runDocsBoxedOpt(srcs2, pats2).get.collect()
         .toSeq.map(_.toString).sorted)
     // statically mismatched KINDS (num vs bool) never match — the
     // boxed vt-tag semantics, constant-folded on the native route
@@ -216,8 +216,8 @@ class DirectQuerySpec extends SparkSpec {
     assert(QueryCompiler.runDocsNative(
       srcs + ("scored" -> DocSource(scored, "sid")), mixPats).isEmpty)
     // and the equivalent boxed query still runs (the caller's fallback)
-    val fb = QueryCompiler.runDocsBoxed(
-      srcs + ("scored" -> DocSource(scored, "sid")), mixPats)
+    val fb = QueryCompiler.runDocsBoxedOpt(
+      srcs + ("scored" -> DocSource(scored, "sid")), mixPats).get
     assert(fb.collect().length == 1) // id 1 joins score 1.0 canonically
   }
 }

@@ -93,7 +93,7 @@ class ShredSpec extends SparkSpec {
       """{"id": 8, "addr": {"city": "Bergen", "zip": "5003"},
          "pets": [], "tags": [], "bal": 7.0, "n": 9}""").toDS())
     val a = Shred.shredExpr(df, Some("id")).orderBy("e", "a", "v").collect()
-    val b = Shred.shredGen(df, Some("id")).orderBy("e", "a", "v").collect()
+    val b = Shred.shred(df, Some("id")).orderBy("e", "a", "v").collect()
     assert(a.toSeq == b.toSeq)
     assert(a.nonEmpty)
     // decimals: whole → integer string, else scale-preserving
@@ -101,7 +101,7 @@ class ShredSpec extends SparkSpec {
       """SELECT 1L AS id, CAST(12.50 AS DECIMAL(6,2)) AS d1,
         |  CAST(12.00 AS DECIMAL(6,2)) AS d2""".stripMargin)
     val ae = Shred.shredExpr(dec, Some("id")).orderBy("a").collect()
-    val ag = Shred.shredGen(dec, Some("id")).orderBy("a").collect()
+    val ag = Shred.shred(dec, Some("id")).orderBy("a").collect()
     assert(ae.toSeq == ag.toSeq)
     assert(ae.map(_.getString(2)).toSeq == Seq("12.50", "12", "1"))
   }
@@ -116,8 +116,8 @@ class ShredSpec extends SparkSpec {
         |  TIMESTAMP'2020-04-15 12:30:45.123' AS ts,
         |  CAST('hi' AS BINARY) AS bin""".stripMargin)
     val ae = Shred.shredExpr(df, Some("id")).orderBy("a").collect()
-    val ag = Shred.shredGen(df, Some("id")).orderBy("a").collect()
-    val ag2 = Shred.shredGen(df, Some("id")).orderBy("a").collect()
+    val ag = Shred.shred(df, Some("id")).orderBy("a").collect()
+    val ag2 = Shred.shred(df, Some("id")).orderBy("a").collect()
     assert(ae.toSeq == ag.toSeq)
     assert(ag.toSeq == ag2.toSeq, "generator canon must be deterministic")
     assert(ag.map(r => (r.getString(1), r.getString(2))).toSeq == Seq(
@@ -133,7 +133,7 @@ class ShredSpec extends SparkSpec {
       """{"id": 7, "tags": ["a", null, "b"], "nums": [1, null, 2],
          "pets": [null, {"name": "Ada"}]}""").toDS())
     val a = Shred.shredExpr(df, Some("id")).orderBy("e", "a", "v").collect()
-    val b = Shred.shredGen(df, Some("id")).orderBy("e", "a", "v").collect()
+    val b = Shred.shred(df, Some("id")).orderBy("e", "a", "v").collect()
     assert(a.toSeq == b.toSeq)
     val t = Shred.shred(df, Some("id")).cache()
     assert(t.filter($"a" === "tags").count() == 2)
