@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftglue.ColumnGlue
 object Bench {
 
   /** Between-queries hygiene: drop every cached block the previous
@@ -16,37 +17,103 @@ object Bench {
     System.gc()
   }
 
+  /** One Spark job a gate ran: its id, its wall ms, and its trigger
+    * call site (the name of its first stage).
+    */
+  private[graft] final case class Job(id: Int, ms: Long, site: String)
+
   /** One pass over a set of gates: the wall seconds of every gate that
-    * completed, and the error of every gate that threw. A gate that
-    * throws gets no time, so it can neither look fast nor pull a total
-    * down.
+    * completed, the error of every gate that threw, and the jobs every
+    * gate ran (those of a throwing gate too). A gate that throws gets
+    * no time, so it can neither look fast nor pull a total down.
     */
   private[graft] final case class Pass(
-      times: Map[String, Double], failed: Map[String, String])
+      times: Map[String, Double], failed: Map[String, String],
+      jobs: Map[String, Seq[Job]])
+
+  /** Prefix of the job description [[runPass]] gives a gate's jobs. */
+  private val Label = "graft:"
+
+  /** Collects the finished jobs whose description carries a graft
+    * label, by label. AQE stage jobs and broadcast jobs run with the
+    * submitting thread's local properties, so they carry the label of
+    * the gate that caused them.
+    */
+  private final class JobLedger
+      extends org.apache.spark.scheduler.SparkListener {
+    private val started = collection.mutable.Map[Int, (String, Long, String)]()
+    private val done = collection.mutable.Map[String, Vector[Job]]()
+    override def onJobStart(
+        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(js.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .filter(_.startsWith(Label)).foreach { label =>
+          synchronized { started(js.jobId) = (label, js.time,
+            js.stageInfos.headOption.map(_.name).getOrElse("?")) }
+        }
+    override def onJobEnd(
+        je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      synchronized {
+        started.remove(je.jobId).foreach { case (label, t0, site) =>
+          done(label) = done.getOrElse(label, Vector.empty) :+
+            Job(je.jobId, je.time - t0, site)
+        }
+      }
+    /** Removes and returns the jobs that finished under `label`. */
+    def take(label: String): Seq[Job] =
+      synchronized { done.remove(label).getOrElse(Vector.empty) }
+  }
+
+  /** The context's one [[JobLedger]], installed on first use. */
+  private def ledger(sc: org.apache.spark.SparkContext): JobLedger =
+    synchronized {
+      ColumnGlue.listeners[JobLedger](sc).headOption.getOrElse {
+        val l = new JobLedger
+        sc.addSparkListener(l)
+        l
+      }
+    }
 
   /** Builds each gate and runs `action` on its frame, timing both;
-    * `cleanup` runs untimed after every gate, so the next one starts
-    * with a clean cache. Bench and Verify both drive their gates
-    * through this, so a throwing gate is recorded the same way in each.
+    * every job the two run is described `graft:<gate>` and counted for
+    * that gate. `cleanup` runs untimed after every gate, so the next
+    * one starts with a clean cache; the listener bus is then drained,
+    * so the gate's jobs are all in the ledger. This is the one loop
+    * that times gates: Bench's battery and repeat mode and Verify's
+    * dump all run through it, so a throwing gate is recorded the same
+    * way in each.
     */
   private[graft] def runPass(spark: SparkSession, sfDir: String,
       gates: Seq[(String, (SparkSession, String) => DataFrame)],
       cleanup: SparkSession => Unit = hygiene)(
       action: (String, DataFrame) => Unit): Pass = {
+    val sc = spark.sparkContext
+    val jobLedger = ledger(sc)
     val times = Map.newBuilder[String, Double]
     val failed = Map.newBuilder[String, String]
+    val jobs = Map.newBuilder[String, Seq[Job]]
     gates.foreach { case (name, fn) =>
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(Label + name)
       val t0 = System.nanoTime()
       try {
         action(name, fn(spark, sfDir))
         times += name -> (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
         failed += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
-      }
+      } finally sc.setJobDescription(outer)
       cleanup(spark)
+      ColumnGlue.drainListeners(sc)
+      jobs += name -> jobLedger.take(Label + name)
     }
-    Pass(times.result(), failed.result())
+    Pass(times.result(), failed.result(), jobs.result())
   }
+
+  /** Evaluates every output column: the noop-sink write of the full
+    * pass (count() can prune projections and elide whole joins).
+    */
+  private val fullEval: (String, DataFrame) => Unit =
+    (_, df) => df.write.mode("overwrite").format("noop").save()
 
   /** The round-1 bench battery (the 48 queries of BENCH_r01's
     * recording, against which BASELINE.md's 0.50 s/query was set).
@@ -121,8 +188,164 @@ object Bench {
         SparkEntry.queries("q1_agg")): Pass =
     runPass(spark, sfDir, Seq(name -> gate))((_, df) => df.count())
 
+  /** `rounds` interleaved rounds of the full (noop-sink) pass over
+    * `gates`: each round runs every gate once, in order, so a slow
+    * phase of the JVM hits every gate alike.
+    */
+  private[graft] def repeat(spark: SparkSession, sfDir: String,
+      gates: Seq[(String, (SparkSession, String) => DataFrame)],
+      rounds: Int, cleanup: SparkSession => Unit = hygiene): Seq[Pass] =
+    (1 to rounds).map(_ => runPass(spark, sfDir, gates, cleanup)(fullEval))
+
+  /** JSON string literal: escapes the backslash, the quote and every
+    * control character, so a multi-line error message stays valid JSON.
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private def r3(v: Double) = math.round(v * 1000) / 1000.0
+
+  private def median(v: Seq[Double]): Double = {
+    val s = v.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  private def js(m: Map[String, Double]) =
+    m.toSeq.sortBy(_._1)
+      .map { case (k, v) => jstr(k) + ":" + r3(v) }
+      .mkString("{", ",", "}")
+
+  private def failedJs(failed: Map[String, String]) =
+    failed.toSeq.sortBy(_._1)
+      .map { case (n, e) => jstr(n) + ":" + jstr(e) }.mkString("{", ",", "}")
+
+  /** Count and summed wall seconds of each gate's jobs. */
+  private def jobsJs(jobs: Map[String, Seq[Job]]) =
+    jobs.toSeq.sortBy(_._1).map { case (n, j) =>
+      jstr(n) + s""":{"n":${j.size},"s":${r3(j.map(_.ms).sum / 1000.0)}}"""
+    }.mkString("{", ",", "}")
+
+  /** Totals of one pass's times: all gates, the core set, the rest. */
+  private def sums(times: Map[String, Double]): (Double, Double, Double) = {
+    val (core, ext) = times.partition { case (n, _) => CoreQueries(n) }
+    (r3(times.values.sum), r3(core.values.sum), r3(ext.values.sum))
+  }
+
+  /** The BENCH_LOCAL.json record of one battery run. */
+  private[graft] def localRecord(countPass: Pass, fullPass: Pass,
+      failed: Map[String, String], env: String, sfDir: String): String = {
+    val (total, coreTotal, extTotal) = sums(countPass.times)
+    val (fullTotal, coreFullTotal, extFullTotal) = sums(fullPass.times)
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${js(countPass.times)},"full":${js(fullPass.times)},""" +
+      s""""jobs":${jobsJs(fullPass.jobs)},"env":$env,""" +
+      s""""core_total":$coreTotal,"core_full_total":$coreFullTotal,""" +
+      s""""ext_total":$extTotal,"ext_full_total":$extFullTotal,""" +
+      s""""full_total":$fullTotal,"n_failed":${failed.size},""" +
+      s""""failed":${failedJs(failed)},"sf":${jstr(sfDir)}}"""
+  }
+
+  /** The summary of a repeat run: per gate, the median, min and max
+    * wall seconds over the rounds it completed, each round's seconds
+    * and job count, and every gate that threw.
+    */
+  private[graft] def repeatRecord(sfDir: String, rounds: Seq[Pass],
+      failed: Map[String, String]): String = {
+    val names = rounds.flatMap(_.times.keys).distinct
+    val queries = names.map { n =>
+      val v = rounds.flatMap(_.times.get(n))
+      val jobs = rounds.flatMap(p => p.times.get(n).map(_ => p.jobs(n).size))
+      jstr(n) + s""":{"median":${r3(median(v))},"min":${r3(v.min)},""" +
+        s""""max":${r3(v.max)},"iters":[${v.map(r3).mkString(",")}],""" +
+        s""""jobs":[${jobs.mkString(",")}]}"""
+    }.mkString("{", ",", "}")
+    s"""{"metric":"repeat","sf":${jstr(sfDir)},"n_iters":${rounds.size},""" +
+      s""""queries":$queries,"n_failed":${failed.size},""" +
+      s""""failed":${failedJs(failed)}}"""
+  }
+
+  /** Writes a record next to the working directory; a record that
+    * cannot be written must not hide the run's stdout or exit code.
+    */
+  private def writeRecord(file: String, record: String): Unit =
+    try java.nio.file.Files.write(
+      java.nio.file.Paths.get(file), record.getBytes("UTF-8"))
+    catch { case _: Throwable => () }
+
+  /** Lists every failure on stderr; true when there were none. */
+  private def report(failed: Map[String, String]): Boolean = {
+    failed.toSeq.sortBy(_._1).foreach { case (n, e) =>
+      System.err.println(s"[bench] $n failed: $e") }
+    failed.isEmpty
+  }
+
+  /** `graft.Bench` runs the battery; `graft.Bench q1,q2,... [iters]`
+    * repeats the named gates (7 rounds by default). Both read the
+    * tables in `SPARK_GRAFT_SF_DIR` and exit 1 when anything threw.
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val ok = args match {
+      case Array() => battery(sfDir)
+      case Array(names) => repeatMain(sfDir, names.split(",").toSeq, 7)
+      case Array(names, iters) =>
+        repeatMain(sfDir, names.split(",").toSeq, iters.toInt)
+      case _ => sys.error("usage: graft.Bench [q1,q2,... [iters]]")
+    }
+    if (!ok) sys.exit(1)
+  }
+
+  /** Warms up on the sf0.001 tables next to `sfDir`. */
+  private def warmUpNextTo(spark: SparkSession, sfDir: String): Pass =
+    warmUp(spark,
+      java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString)
+
+  /** Repeat mode: the battery's warm-up, then `iters` interleaved
+    * rounds of the full pass over the named gates. Prints one line per
+    * observation and one per job, then the summary JSON line, which it
+    * also writes to BENCH_REPEAT.json.
+    */
+  private def repeatMain(sfDir: String, names: Seq[String],
+      iters: Int): Boolean = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown gates: ${unknown.mkString(", ")}")
+    require(iters >= 1, s"iters must be at least 1, got $iters")
+    val spark = Sessions.local()
+    val warm = warmUpNextTo(spark, sfDir)
+    val rounds = repeat(spark, sfDir,
+      names.map(n => n -> SparkEntry.queries(n)), iters)
+    rounds.zipWithIndex.foreach { case (p, i) =>
+      names.foreach { n =>
+        val jobs = p.jobs(n)
+        val wall = p.times.get(n).map(t => f"$t%8.3f s").getOrElse("  FAILED")
+        println(f"[repeat] iter=${i + 1} $n%-22s $wall jobs=${jobs.size}%-3d " +
+          f"job_s=${jobs.map(_.ms).sum / 1000.0}%.3f")
+        jobs.sortBy(_.id).foreach(j =>
+          println(f"[repeat]   $n job=${j.id}%-4d ${j.ms}%6d ms  ${j.site}"))
+      }
+    }
+    // a gate that threw in several rounds is listed once, with its
+    // first error
+    val failed = rounds.reverse.flatMap(_.failed).toMap ++ warm.failed
+    val line = repeatRecord(sfDir, rounds, failed)
+    println(line)
+    writeRecord("BENCH_REPEAT.json", line)
+    spark.stop()
+    report(failed)
+  }
+
+  /** The battery: warm-up, the q1 controls, then a count pass and a
+    * full pass over every gate.
+    */
+  private def battery(sfDir: String): Boolean = {
     // Self-check the guard: a renamed/removed core query must fail the
     // bench loudly, not silently shrink core_total and soften the 2×
     // judgment while still claiming to be BENCH_r01's exact list.
@@ -131,9 +354,7 @@ object Bench {
       s"core guard queries missing from the registry: " +
         missingCore.toSeq.sorted.mkString(", "))
     val spark = Sessions.local()
-    // the warm-up reads the sf0.001 tables next to the measured SF
-    val warm = warmUp(spark,
-      java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString)
+    val warm = warmUpNextTo(spark, sfDir)
     // Cache-state marker (VERDICT r14 item 8): the q1 scan control
     // measured TWICE at the record's own SF before the battery.
     // cold ≈ warm ⇒ the round's data was already page-cached and
@@ -160,8 +381,7 @@ object Bench {
     // column. `value` stays count-based for comparability with
     // BASELINE's first recording; `full_total` is the honest
     // end-to-end throughput number — gate regression judgments on it.
-    val fullPass = runPass(spark, sfDir, gates)((_, df) =>
-      df.write.mode("overwrite").format("noop").save())
+    val fullPass = runPass(spark, sfDir, gates)(fullEval)
     val full = fullPass.times
     // every warm-up step, control and gate that threw, with a gate's
     // count-pass error when it threw in both passes
@@ -175,28 +395,13 @@ object Bench {
     // parses the final JSON line, so that line must stay tiny
     // (~100 bytes) — r4 embedded the ~1.3 KB queries map in it and
     // the driver recorded parsed:null.
-    def r3(v: Double) = math.round(v * 1000) / 1000.0
     // a control that threw has no time
     def r3opt(v: Option[Double]) = v.map(r3(_).toString).getOrElse("null")
-    def js(m: Map[String, Double]) =
-      m.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-        .mkString("{", ",", "}")
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\""
-    val total = r3(results.values.sum)
-    val fullTotal = r3(full.values.sum)
     // the two guard series: r1 core (vs BASELINE's 0.50 s/q, 2×
     // bound) and everything added since (extension gates, no r1
     // baseline — tracked round-over-round instead)
-    val coreTotal = r3(results.collect {
-      case (n, v) if CoreQueries(n) => v }.sum)
-    val coreFullTotal = r3(full.collect {
-      case (n, v) if CoreQueries(n) => v }.sum)
-    val extTotal = r3(results.collect {
-      case (n, v) if !CoreQueries(n) => v }.sum)
-    val extFullTotal = r3(full.collect {
-      case (n, v) if !CoreQueries(n) => v }.sum)
+    val (total, coreTotal, extTotal) = sums(results)
+    val (fullTotal, coreFullTotal, extFullTotal) = sums(full)
     val nCore = results.keys.count(CoreQueries)
     val nExt = results.size - nCore
     // JVM/GC provenance, so a builder-local vs driver-recorded delta
@@ -240,26 +445,14 @@ object Bench {
     // failed gates by name on stdout (their errors go to stderr and
     // BENCH_LOCAL.json), so the line stays small in the output tail
     val failedNames = failed.keys.toSeq.sorted
-    val failedJs = failedNames
-      .map(n => jstr(n) + ":" + jstr(failed(n))).mkString("{", ",", "}")
-    failedNames.foreach(n =>
-      System.err.println(s"[bench] $n failed: ${failed(n)}"))
     println(s"""{"metric":"failed","n_failed":${failed.size},""" +
       s""""gates":${failedNames.map(jstr).mkString("[", ",", "]")}}""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","full_total":$fullTotal,"core_total":$coreTotal,"ext_total":$extTotal,"n_failed":${failed.size},"q1_cold":${r3opt(q1Cold)},"q1_warm":${r3opt(q1Warm)},"sf":"$sfDir"}""")
     // belt-and-braces: the machine-readable record also lands in a
     // file, immune to any stdout capture/prefix/truncation issues
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      (s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""queries":${js(results)},"full":${js(full)},""" +
-        s""""env":$env,""" +
-        s""""core_total":$coreTotal,"core_full_total":$coreFullTotal,""" +
-        s""""ext_total":$extTotal,"ext_full_total":$extFullTotal,""" +
-        s""""full_total":$fullTotal,"n_failed":${failed.size},""" +
-        s""""failed":$failedJs,"sf":"$sfDir"}""").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    writeRecord("BENCH_LOCAL.json",
+      localRecord(countPass, fullPass, failed, env, sfDir))
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    report(failed)
   }
 }

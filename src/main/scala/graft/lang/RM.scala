@@ -28,25 +28,7 @@ object RM {
     * None = JSONata "no match").
     */
   def eval(src: String, spark: SparkSession): Option[Any] =
-    Compiler.sparkCtx.withValue(spark) {
-      val ast = Parser.parse(src)
-      Compiler.compile(ast) match {
-        case d: CD =>
-          val raw = carrier(spark).select(d.col.as("v")).collect()(0).get(0)
-          Finalize.jflatten(shape(raw, d.kind)).map(normalize)
-        case CTab(df) =>
-          // frame results: express doc/value columns unwrap; binding
-          // sets stay maps even with a single qvar
-          val unwrap = df.columns.toSeq == Seq("doc") ||
-            df.columns.toSeq == Seq("value")
-          val vals: Seq[Any] = df.collect().toSeq.map { r =>
-            if (unwrap) r.get(0) else r
-          }
-          Finalize.jflatten(Container(vals)).map(normalize)
-        case o: CObj => Some(objValue(spark, o))
-        case _ => Compiler.fail("top-level value is a function")
-      }
-    }
+    evalWithSources(src, spark, Map.empty)
 
   /** Graph $get result object → data members as a map (function
     * members are executables, not renderable — same as the reference
@@ -78,6 +60,8 @@ object RM {
           val raw = carrier(spark).select(d.col.as("v")).collect()(0).get(0)
           Finalize.jflatten(shape(raw, d.kind)).map(normalize)
         case CTab(df) =>
+          // frame results: express doc/value columns unwrap; binding
+          // sets stay maps even with a single qvar
           val unwrap = df.columns.toSeq == Seq("doc") ||
             df.columns.toSeq == Seq("value")
           val vals: Seq[Any] = df.collect().toSeq.map { r =>
@@ -115,14 +99,12 @@ object RM {
       st.fieldNames.map(df(_)): _*), st, KScalar)
     // "" = `$` (rebound by steps), "$" = `$$` root (never rebound)
     val cv = Compiler.compile(ast, Map("" -> ctx, "$" -> ctx))
-    val d = materializeTop(cv match {
+    val d = cv match {
       case x: CD => x
       case _ => Compiler.fail("expression must be a value")
-    })
+    }
     df.select(keep.map(df(_)) :+ d.col.as("value"): _*)
   }
-
-  private def materializeTop(d: CD): CD = d // kinds handled in shape()
 
   /** Wrap the collected value according to its sequence kind so the
     * jflatten rules see containers vs explicit arrays.

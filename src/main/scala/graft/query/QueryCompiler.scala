@@ -316,7 +316,7 @@ object QueryCompiler {
       // fused-plan license: a content-hash id (equal ids imply equal
       // rows by construction) OR a write-time uniqueness proof carried
       // by the shred (ShredGenerator.idFunctional / the persisted
-      // sidecar's idUnique — Shred.shredVerified, Shred.shredWrite)
+      // sidecar's idUnique — Shred.shredAttrsVerifiedAll, Shred.shredWrite)
       n -> DocSource(projected, ent,
         idFunctional = proven || contentHashId(idExpr,
           doc.queryExecution.analyzed.output))

@@ -242,46 +242,17 @@ object Shred {
       idFunctional)))
   }
 
-  /** Is `idCol`'s NON-NULL value set duplicate-free in `df`? One exact
-    * count / count-distinct aggregate — an ACTION at call time (null
-    * ids are excluded on both sides because the shred emits nothing
-    * for them). The proof holds for the frame's current snapshot; like
-    * any non-transactional Spark read, files rewritten underneath a
-    * live plan void it.
-    */
-  def idUnique(df: DataFrame, idCol: String): Boolean = {
-    val r = df.agg(count(col(idCol)), count_distinct(col(idCol))).head()
-    r.getLong(0) == r.getLong(1)
-  }
-
-  /** [[shred]] with a WRITE-TIME uniqueness proof for the explicit id
-    * column: pays one count-distinct aggregate over `df` now and, when
-    * the ids prove duplicate-free, tags the generator `idFunctional`
-    * so the regroup tier licenses the fused row-local plan (scan-only)
-    * instead of the duplicate-id-safe per-entity product plan (one
-    * groupBy(id) exchange). Ids with duplicates shred identically but
-    * stay on the product plan — proof, not assumption, either way.
-    */
-  def shredVerified(df: DataFrame, idCol: String): DataFrame =
-    shredGenTagged(df, Some(idCol), idUnique(df, idCol))
-
-  /** [[shredAttrs]] twin of [[shredVerified]]: narrow first (the proof
-    * aggregate then scans only the id column of the narrowed frame).
-    */
-  def shredAttrsVerified(df: DataFrame, idCol: String,
-      attrs: Seq[String]): DataFrame = {
-    val narrowed =
-      df.select((idCol +: attrs).distinct.map(col): _*)
-    shredGenTagged(narrowed, Some(idCol), idUnique(narrowed, idCol))
-  }
-
-  /** Batched [[idUnique]]: prove several (frame, idCol) pairs in ONE
-    * Spark action — one single-row count/count-distinct aggregate per
-    * frame, cross-joined into a single row, each count_distinct on
-    * its own native id type. Same verdicts as calling [[idUnique]]
-    * per frame, at one job's fixed latency instead of N (a
-    * multi-source query{} gate pays the proof per source per run —
-    * optimization round 17).
+  /** Is each frame's `idCol` NON-NULL value set duplicate-free? One
+    * exact count / count-distinct aggregate per frame, all proved in
+    * ONE Spark action at call time (null ids are excluded on both
+    * sides because the shred emits nothing for them): the single-row
+    * aggregates are cross-joined into a single row, each
+    * count_distinct on its own native id type — one job's fixed
+    * latency instead of N (a multi-source query{} gate pays the proof
+    * per source per run — optimization round 17). For one frame it is
+    * the plain aggregate. The proof holds for the frames' current
+    * snapshot; like any non-transactional Spark read, files rewritten
+    * underneath a live plan void it.
     */
   def idUniqueAll(frames: Seq[(DataFrame, String)]): Seq[Boolean] = {
     require(frames.nonEmpty, "idUniqueAll needs at least one frame")
@@ -299,9 +270,15 @@ object Shred {
     frames.indices.map(i => row.getLong(2 * i) == row.getLong(2 * i + 1))
   }
 
-  /** Multi-source twin of [[shredAttrsVerified]]: one batched proof
-    * action covers every source, then each narrowed frame shreds with
-    * its own proven verdict.
+  /** [[shredAttrs]] with a WRITE-TIME uniqueness proof for each
+    * source's explicit id column: narrow each source to its id and
+    * attrs (the proof aggregate then scans only the id column), prove
+    * every source in one batched [[idUniqueAll]] action, and tag each
+    * generator `idFunctional` when its ids prove duplicate-free, so the
+    * regroup tier licenses the fused row-local plan (scan-only)
+    * instead of the duplicate-id-safe per-entity product plan (one
+    * groupBy(id) exchange). Ids with duplicates shred identically but
+    * stay on the product plan — proof, not assumption, either way.
     */
   def shredAttrsVerifiedAll(
       sources: Seq[(DataFrame, String, Seq[String])]): Seq[DataFrame] = {
@@ -465,7 +442,7 @@ object Shred {
       .write.mode("overwrite").partitionBy("a").parquet(outPath)
     val dFp = obsDocs.get("fp").asInstanceOf[Long]
     val tFp = obsTrip.get("fp").asInstanceOf[Long]
-    val unique = idCol.map(c => idUnique(docs, c))
+    val unique = idCol.map(c => idUniqueAll(Seq(docs -> c)).head)
     val meta = ShredMeta(
       new org.apache.hadoop.fs.Path(docPath).getFileSystem(
         spark.sparkContext.hadoopConfiguration)

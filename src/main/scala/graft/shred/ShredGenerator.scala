@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * child must be a struct of (entityId: string, row: struct<...>).
   *
-  * `idFunctional`: evaluation-inert tag set by [[Shred.shredVerified]]
+  * `idFunctional`: evaluation-inert tag set by [[Shred.shredAttrsVerifiedAll]]
   * after PROVING (one exact count-distinct action at shred time) that
   * the explicit id column is duplicate-free, i.e. functionally
   * determines the document row. [[Shred.unshredSource]] surfaces it so

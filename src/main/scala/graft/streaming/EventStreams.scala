@@ -584,24 +584,44 @@ object EventStreams {
       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    media.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val spark = batch.sparkSession
-      if (!graft.pipeline.Indexes.batchApplied(spark, indexPath, id)) {
+    ingestLoop(media, idCol, indexPath, "batch_id", appendNovelOnly,
+      sink) { b =>
+      graft.pipeline.Indexes.mediaDupPairsIndexed(b, idCol, mediaCol,
+        graft.pipeline.Indexes.openMediaIndex(b.sparkSession, indexPath),
+        kernel, maxHamming, maxBucket)
+    } { (accepted, id) =>
+      graft.pipeline.Indexes.appendMediaIndexBatch(accepted, idCol,
+        mediaCol, indexPath, id, kernel)
+    }
+
+  /** The exactly-once scaffold of the three ingest loops (media,
+    * winnow, MinHash; the argument is at [[winnowIngestStream]]): a
+    * batch the index at `indexPath` already marks applied is skipped;
+    * otherwise the batch is persisted, `probe` finds its candidates
+    * against the current artifacts (persisted too), `sink` receives
+    * them, and `append` folds the accepted rows into the artifacts
+    * keyed by batch id — every row, or under `appendNovelOnly` only
+    * the rows whose `idCol` is not among the candidates' `candKey`.
+    */
+  private def ingestLoop(stream: DataFrame, idCol: String,
+      indexPath: String, candKey: String, appendNovelOnly: Boolean,
+      sink: (DataFrame, Long) => Unit)(probe: DataFrame => DataFrame)(
+      append: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[
+        org.apache.spark.sql.Row] =
+    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      if (!graft.pipeline.Indexes.batchApplied(batch.sparkSession,
+          indexPath, id)) {
         val b = batch.persist()
         try {
-          val idx = graft.pipeline.Indexes.openMediaIndex(spark,
-            indexPath)
-          val cands = graft.pipeline.Indexes.mediaDupPairsIndexed(b,
-            idCol, mediaCol, idx, kernel, maxHamming, maxBucket)
-            .persist()
+          val cands = probe(b).persist()
           try {
             sink(cands, id)
             val accepted =
               if (!appendNovelOnly) b
-              else b.join(cands.select(col("batch_id")).distinct(),
-                b(idCol) === col("batch_id"), "left_anti")
-            graft.pipeline.Indexes.appendMediaIndexBatch(accepted,
-              idCol, mediaCol, indexPath, id, kernel)
+              else b.join(cands.select(col(candKey)).distinct(),
+                b(idCol) === col(candKey), "left_anti")
+            append(accepted, id)
           } finally cands.unpersist()
         } finally b.unpersist()
       }
@@ -674,27 +694,14 @@ object EventStreams {
       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val spark = batch.sparkSession
-      if (!graft.pipeline.Indexes.batchApplied(spark, indexPath, id)) {
-        val b = batch.persist()
-        try {
-          val idx = graft.pipeline.Indexes.openWinnowIndex(spark,
-            indexPath)
-          val cands = graft.pipeline.Indexes.winnowCandidatesIndexed(b,
-            idCol, textCol, idx, k, w, minShared, maxBucket).persist()
-          try {
-            sink(cands, id)
-            val accepted =
-              if (!appendNovelOnly) b
-              else b.join(cands.select(col("batch_id")).distinct(),
-                b(idCol) === col("batch_id"), "left_anti")
-            graft.pipeline.Indexes.appendWinnowIndexBatch(accepted,
-              idCol, textCol, indexPath, id, k, w)
-          } finally cands.unpersist()
-        } finally b.unpersist()
-      }
-      ()
+    ingestLoop(docs, idCol, indexPath, "batch_id", appendNovelOnly,
+      sink) { b =>
+      graft.pipeline.Indexes.winnowCandidatesIndexed(b, idCol, textCol,
+        graft.pipeline.Indexes.openWinnowIndex(b.sparkSession, indexPath),
+        k, w, minShared, maxBucket)
+    } { (accepted, id) =>
+      graft.pipeline.Indexes.appendWinnowIndexBatch(accepted, idCol,
+        textCol, indexPath, id, k, w)
     }
 
   /** The MinHash twin of [[winnowIngestStream]] — the full streaming
@@ -741,32 +748,20 @@ object EventStreams {
       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val spark = batch.sparkSession
-      if (!graft.pipeline.Indexes.batchApplied(spark, indexPath, id)) {
-        val bdf = batch.persist()
-        try {
-          val idx = graft.pipeline.Indexes.openMinhashIndex(spark,
-            indexPath)
-          val corpus = graft.pipeline.Indexes.openIngestDocs(spark,
-            docsPath)
-          val cands = graft.pipeline.Indexes
-            .incrementalDupPairsIndexed(bdf, idCol, idx, corpus,
-              idCol, textCol, n, k, b, threshold, maxBucket).persist()
-          try {
-            sink(cands, id)
-            val accepted =
-              if (!appendNovelOnly) bdf
-              else bdf.join(cands.select(col("new_id")).distinct(),
-                bdf(idCol) === col("new_id"), "left_anti")
-            graft.pipeline.Indexes.appendIngestDocs(
-              accepted.select(col(idCol), col(textCol)), docsPath, id)
-            graft.pipeline.Indexes.appendMinhashIndexBatch(accepted,
-              idCol, textCol, indexPath, id, n, k, b)
-          } finally cands.unpersist()
-        } finally bdf.unpersist()
-      }
-      ()
+    ingestLoop(docs, idCol, indexPath, "new_id", appendNovelOnly,
+      sink) { bdf =>
+      val spark = bdf.sparkSession
+      graft.pipeline.Indexes.incrementalDupPairsIndexed(bdf, idCol,
+        graft.pipeline.Indexes.openMinhashIndex(spark, indexPath),
+        graft.pipeline.Indexes.openIngestDocs(spark, docsPath),
+        idCol, textCol, n, k, b, threshold, maxBucket)
+    } { (accepted, id) =>
+      // docs first, the index last: the index append is the
+      // applied-marker
+      graft.pipeline.Indexes.appendIngestDocs(
+        accepted.select(col(idCol), col(textCol)), docsPath, id)
+      graft.pipeline.Indexes.appendMinhashIndexBatch(accepted, idCol,
+        textCol, indexPath, id, n, k, b)
     }
 
   /** Streaming ingest-dedup probe against a persisted MinHash band

@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * favor of ColumnNode. This glue lives in a subpackage of
   * `org.apache.spark.sql` solely to reach the `private[sql]`
   * `classic.ExpressionUtils`, so graft's custom Catalyst expressions can be
-  * exposed as user-facing `Column`s. No Spark internals are modified.
+  * exposed as user-facing `Column`s, and to reach the listener bus for
+  * `graft.Bench`'s job ledger. No Spark internals are modified.
   */
 object ColumnGlue {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -34,4 +35,18 @@ object ColumnGlue {
       : DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The listeners of class `T` registered on `sc`
+    * (`SparkContext.listenerBus` is `private[spark]`), so a harness can
+    * install its listener once per context.
+    */
+  def listeners[T <: org.apache.spark.scheduler.SparkListenerInterface
+      : scala.reflect.ClassTag](sc: org.apache.spark.SparkContext): Seq[T] =
+    sc.listenerBus.findListenersByClass[T]()
+
+  /** Blocks until every event posted to `sc`'s listeners so far has
+    * been delivered.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -205,7 +205,8 @@ object EavRegroupProps extends Properties("graft.query.regroup") {
             // the proof and keep the product plan; triples (and so the
             // authority) are identical to the plain idCol shred either
             // way
-            val srcs3 = Map("default" -> Shred.shredVerified(df, "rid"))
+            val srcs3 = Map("default" -> Shred.shredAttrsVerifiedAll(
+              Seq((df, "rid", df.columns.toSeq))).head)
             val got3 = render(QueryCompiler.runBoxed(srcs3, pats))
             val ok = got == want && got2 == want2 && got3 == want
             if (!ok) println(s"MISMATCH pats=$pats\n idCol got= $got\n " +

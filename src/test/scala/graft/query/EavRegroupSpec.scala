@@ -314,14 +314,15 @@ class EavRegroupSpec extends SparkSpec {
   }
 
   test("write-time uniqueness proof licenses the fused plan; duplicates stay product") {
-    // shredVerified PROVES id uniqueness with one count-distinct action
+    // shredAttrsVerifiedAll PROVES id uniqueness with one count-distinct action
     // and tags the generator — multi-pattern groups then fuse
     // row-locally (no per-entity aggregate), bit-identical to the
     // authority (round-17: recovers the q_eav_join product regression)
     val pats = Seq(
       Pattern(V("e"), C("name"), V("n")),
       Pattern(V("e"), C("bal"), V("b")))
-    val verified = Shred.shredVerified(docs, "id")
+    val verified =
+      Shred.shredAttrsVerifiedAll(Seq((docs, "id", docs.columns.toSeq))).head
     check(Map("default" -> verified), pats, expectRegroup = true)
     assert(!QueryCompiler.runBoxed(Map("default" -> verified), pats)
       .queryExecution.executedPlan.toString.contains("ObjectHashAggregate"),
@@ -330,7 +331,8 @@ class EavRegroupSpec extends SparkSpec {
     // duplicate-id-safe product plan (and still equals the authority)
     val dup = Seq(("X", 1L, 10L), ("X", 2L, 20L), ("Y", 3L, 30L))
       .toDF("k", "a", "b")
-    val dupVerified = Shred.shredVerified(dup, "k")
+    val dupVerified =
+      Shred.shredAttrsVerifiedAll(Seq((dup, "k", dup.columns.toSeq))).head
     val dupPats = Seq(
       Pattern(V("e"), C("a"), V("x")),
       Pattern(V("e"), C("b"), V("y")))
@@ -338,8 +340,9 @@ class EavRegroupSpec extends SparkSpec {
     assert(QueryCompiler.runBoxed(Map("default" -> dupVerified), dupPats)
       .queryExecution.executedPlan.toString.contains("ObjectHashAggregate"),
       "unproven ids must keep the per-entity product plan")
-    // the attrs twin carries the same license
-    val av = Shred.shredAttrsVerified(docs, "id", Seq("name", "bal"))
+    // narrowed to the queried attrs, the same license
+    val av =
+      Shred.shredAttrsVerifiedAll(Seq((docs, "id", Seq("name", "bal")))).head
     check(Map("default" -> av), pats, expectRegroup = true)
     assert(!QueryCompiler.runBoxed(Map("default" -> av), pats)
       .queryExecution.executedPlan.toString.contains("ObjectHashAggregate"))

@@ -1,6 +1,7 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (no sbt lock):
 #   tools/run_main.sh graft.tools.GenScale /tmp/graft_sf1 10
+#   SPARK_GRAFT_SF_DIR=<sf dir> tools/run_main.sh graft.Bench p_pagerank,q_rm_mixed 2
 # Mirrors build.sbt's forked-JVM options (add-opens, code cache, UTC).
 # Env: SPARK_DRIVER_MEM (default 8g), SPARK_GRAFT_* pass through.
 set -euo pipefail
