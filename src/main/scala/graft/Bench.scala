@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftglue.ColumnGlue
 object Bench {
@@ -24,12 +25,13 @@ object Bench {
 
   /** One pass over a set of gates: the wall seconds of every gate that
     * completed, the error of every gate that threw, and the jobs every
-    * gate ran (those of a throwing gate too). A gate that throws gets
-    * no time, so it can neither look fast nor pull a total down.
+    * gate ran and the classes codegen compiled for it (those of a
+    * throwing gate too). A gate that throws gets no time, so it can
+    * neither look fast nor pull a total down.
     */
   private[graft] final case class Pass(
       times: Map[String, Double], failed: Map[String, String],
-      jobs: Map[String, Seq[Job]])
+      jobs: Map[String, Seq[Job]], compiles: Map[String, Long])
 
   /** Prefix of the job description [[runPass]] gives a gate's jobs. */
   private val Label = "graft:"
@@ -76,9 +78,11 @@ object Bench {
 
   /** Builds each gate and runs `action` on its frame, timing both;
     * every job the two run is described `graft:<gate>` and counted for
-    * that gate. `cleanup` runs untimed after every gate, so the next
-    * one starts with a clean cache; the listener bus is then drained,
-    * so the gate's jobs are all in the ledger. This is the one loop
+    * that gate, and so is every class codegen compiles meanwhile (a
+    * JVM-global count: a gate that hits the generated-class cache
+    * compiles nothing). `cleanup` runs untimed after every gate, so
+    * the next one starts with a clean cache; the listener bus is then
+    * drained, so the gate's jobs are all in the ledger. This is the one loop
     * that times gates: Bench's battery and repeat mode and Verify's
     * dump all run through it, so a throwing gate is recorded the same
     * way in each.
@@ -92,9 +96,12 @@ object Bench {
     val times = Map.newBuilder[String, Double]
     val failed = Map.newBuilder[String, String]
     val jobs = Map.newBuilder[String, Seq[Job]]
+    val compiles = Map.newBuilder[String, Long]
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
     gates.foreach { case (name, fn) =>
       val outer = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(Label + name)
+      val c0 = compiled.getCount
       val t0 = System.nanoTime()
       try {
         action(name, fn(spark, sfDir))
@@ -102,11 +109,12 @@ object Bench {
       } catch { case e: Throwable =>
         failed += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
       } finally sc.setJobDescription(outer)
+      compiles += name -> (compiled.getCount - c0)
       cleanup(spark)
       ColumnGlue.drainListeners(sc)
       jobs += name -> jobLedger.take(Label + name)
     }
-    Pass(times.result(), failed.result(), jobs.result())
+    Pass(times.result(), failed.result(), jobs.result(), compiles.result())
   }
 
   /** Evaluates every output column: the noop-sink write of the full
@@ -227,10 +235,13 @@ object Bench {
     failed.toSeq.sortBy(_._1)
       .map { case (n, e) => jstr(n) + ":" + jstr(e) }.mkString("{", ",", "}")
 
-  /** Count and summed wall seconds of each gate's jobs. */
-  private def jobsJs(jobs: Map[String, Seq[Job]]) =
-    jobs.toSeq.sortBy(_._1).map { case (n, j) =>
-      jstr(n) + s""":{"n":${j.size},"s":${r3(j.map(_.ms).sum / 1000.0)}}"""
+  /** Count and summed wall seconds of each gate's jobs, and the
+    * classes codegen compiled for it.
+    */
+  private def jobsJs(p: Pass) =
+    p.jobs.toSeq.sortBy(_._1).map { case (n, j) =>
+      jstr(n) + s""":{"n":${j.size},"s":${r3(j.map(_.ms).sum / 1000.0)},""" +
+        s""""compiles":${p.compiles(n)}}"""
     }.mkString("{", ",", "}")
 
   /** Totals of one pass's times: all gates, the core set, the rest. */
@@ -246,7 +257,7 @@ object Bench {
     val (fullTotal, coreFullTotal, extFullTotal) = sums(fullPass.times)
     s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""queries":${js(countPass.times)},"full":${js(fullPass.times)},""" +
-      s""""jobs":${jobsJs(fullPass.jobs)},"env":$env,""" +
+      s""""jobs":${jobsJs(fullPass)},"env":$env,""" +
       s""""core_total":$coreTotal,"core_full_total":$coreFullTotal,""" +
       s""""ext_total":$extTotal,"ext_full_total":$extFullTotal,""" +
       s""""full_total":$fullTotal,"n_failed":${failed.size},""" +
@@ -254,18 +265,19 @@ object Bench {
   }
 
   /** The summary of a repeat run: per gate, the median, min and max
-    * wall seconds over the rounds it completed, each round's seconds
-    * and job count, and every gate that threw.
+    * wall seconds over the rounds it completed, each round's seconds,
+    * job count and compile count, and every gate that threw.
     */
   private[graft] def repeatRecord(sfDir: String, rounds: Seq[Pass],
       failed: Map[String, String]): String = {
     val names = rounds.flatMap(_.times.keys).distinct
     val queries = names.map { n =>
       val v = rounds.flatMap(_.times.get(n))
-      val jobs = rounds.flatMap(p => p.times.get(n).map(_ => p.jobs(n).size))
+      val done = rounds.filter(_.times.contains(n))
       jstr(n) + s""":{"median":${r3(median(v))},"min":${r3(v.min)},""" +
         s""""max":${r3(v.max)},"iters":[${v.map(r3).mkString(",")}],""" +
-        s""""jobs":[${jobs.mkString(",")}]}"""
+        s""""jobs":[${done.map(_.jobs(n).size).mkString(",")}],""" +
+        s""""compiles":[${done.map(_.compiles(n)).mkString(",")}]}"""
     }.mkString("{", ",", "}")
     s"""{"metric":"repeat","sf":${jstr(sfDir)},"n_iters":${rounds.size},""" +
       s""""queries":$queries,"n_failed":${failed.size},""" +
@@ -327,7 +339,7 @@ object Bench {
         val jobs = p.jobs(n)
         val wall = p.times.get(n).map(t => f"$t%8.3f s").getOrElse("  FAILED")
         println(f"[repeat] iter=${i + 1} $n%-22s $wall jobs=${jobs.size}%-3d " +
-          f"job_s=${jobs.map(_.ms).sum / 1000.0}%.3f")
+          f"job_s=${jobs.map(_.ms).sum / 1000.0}%.3f compiles=${p.compiles(n)}")
         jobs.sortBy(_.id).foreach(j =>
           println(f"[repeat]   $n job=${j.id}%-4d ${j.ms}%6d ms  ${j.site}"))
       }

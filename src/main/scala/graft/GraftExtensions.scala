@@ -25,6 +25,18 @@ import org.apache.spark.sql.graftglue.ColumnGlue
   *
   * Every function resolves to the same codegen'd expressions the
   * DataFrame API uses (one plan, one semantics, whichever surface).
+  *
+  * A session configured only through `spark.sql.extensions` keeps
+  * Spark's 100-entry generated-class cache: an extension cannot set a
+  * static conf. One pass of the iterative operators (`Dedup.dupGroups`,
+  * `LinkGraph.labelProp`, `LinkGraph.pagerank`) cycles through more
+  * classes than that, so at 100 entries every pass recompiles all of
+  * them. Pass the size [[graft.Sessions]] uses at submit time:
+  *
+  * {{{
+  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions \
+  *     --conf spark.sql.codegen.cache.maxEntries=2000 ...
+  * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

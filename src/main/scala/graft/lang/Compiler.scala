@@ -768,8 +768,11 @@ object Compiler {
     // same driver-collect cap as Builtins' frame HOFs: a corpus-scale
     // frame must not silently OOM the driver on an index step. One
     // capped collect serves both the check and the conversion — not a
-    // count() job followed by a second full collect.
-    val json = df.limit(65537).toJSON.collect()
+    // count() job followed by a second full collect. The limit is the
+    // root of the collected plan, so it plans as CollectLimit: a limit
+    // under toJSON's map plans as Local/GlobalLimit, whose row counter
+    // takes a JVM-global name and compiles a new class on every call.
+    val json = df.toJSON.take(65537)
     if (json.length > 65536)
       fail("indexing a frame with more than 65536 rows collects it " +
         "to the driver — aggregate or filter the frame first")

@@ -491,9 +491,12 @@ object Dedup {
       // the relabel already moved, so it is provably a no-op at that
       // fixpoint. The FINAL round then skips the hop self-join and
       // its checkpoint entirely (≈4 fewer jobs on the quasi-clique
-      // graphs that converge in one round).
-      val changed = relabeled.filter(col("comp") =!= col("prev"))
-        .limit(1).count()
+      // graphs that converge in one round). The check is a
+      // grouping-free aggregate with no limit in its plan: Spark names
+      // each limit operator's row counter from a JVM-global sequence
+      // (`_limit_counter_N`), so a `limit(1)` here would generate new
+      // source, and compile a new class, on every call.
+      val changed = relabeled.filter(col("comp") =!= col("prev")).count()
       if (changed == 0) {
         relabeled.unpersist()
         converged = true

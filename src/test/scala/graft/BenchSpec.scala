@@ -122,6 +122,25 @@ class BenchSpec extends SparkSpec {
     assert((rec \ "queries" \ "boom") == org.json4s.JNothing)
   }
 
+  test("each gate's codegen compiles are counted, and a repeat compiles none") {
+    // literals no other spec uses, so the first round misses the
+    // generated-class cache
+    val gate: (SparkSession, String) => DataFrame = (s, _) =>
+      s.range(10).select((col("id") * 7919 + 104729).as("x"))
+    val rounds = Bench.repeat(spark, "unused", Seq("g" -> gate), 2, noCleanup)
+    val first = rounds.head.compiles("g")
+    assert(first >= 1)
+    assert(rounds(1).compiles("g") == 0)
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val rep = org.json4s.jackson.JsonMethods.parse(
+      Bench.repeatRecord("unused", rounds, Map.empty))
+    assert((rep \ "queries" \ "g" \ "compiles").extract[Seq[Long]] ==
+      Seq(first, 0L))
+    val local = org.json4s.jackson.JsonMethods.parse(
+      Bench.localRecord(rounds.head, rounds.head, Map.empty, "{}", "sf"))
+    assert((local \ "jobs" \ "g" \ "compiles").extract[Long] == first)
+  }
+
   test("the record of a pass parses when a gate's error spans lines") {
     val msg = "first line\n\tsecond \"quoted\" \\ line\r\u0001"
     val pass = Bench.runPass(spark, "unused", Seq[(String,

@@ -13,18 +13,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+  lazy val session: SparkSession =
+    Sessions.start(Sessions.builder("4")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${java.util.UUID.randomUUID()}")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Sessions.installRules(s)
-    s
-  }
+        s"/tmp/graft-warehouse-${java.util.UUID.randomUUID()}"))
 }
