@@ -304,17 +304,6 @@ object Jsonata {
 
   // ===== §2.9 higher-order over arrays (reference builtin.cljc:1376-1524) =
 
-  /** `$map(arr, fn(v[,i]))` — Spark's transform passes a 0-based index,
-    * matching JSONata's.
-    */
-  def mapArr(c: Column, f: (Column, Column) => Column): Column =
-    transform(c, (x, i) => f(x, i))
-  def filterArr(c: Column, f: (Column, Column) => Column): Column =
-    org.apache.spark.sql.functions.filter(c, (x, i) => f(x, i))
-  /** `$reduce(arr, fn(acc,v), init)`. */
-  def reduceArr(c: Column, init: Column,
-      f: (Column, Column) => Column): Column =
-    aggregate(c, init, f)
   /** `$single(arr, pred)` — the single matching element; reference
     * actually returns the first truthy match (builtin.cljc:1491-1524).
     */

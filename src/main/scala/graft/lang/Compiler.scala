@@ -58,9 +58,7 @@ object Compiler {
     * 512 keeps $fact(50)-class and deep $shape walks working while the
     * unguarded shape still fails fast with a diagnostic.
     */
-  private[lang] def maxRecursionDepth: Int =
-    sys.props.get("graft.maxRecursionDepth").flatMap(_.toIntOption)
-      .getOrElse(512)
+  private[lang] val MaxRecursionDepth = 512
 
   def compile(e: Expr, env: Env = Map.empty): CV = e match {
     case NumLit(v) =>
@@ -252,12 +250,10 @@ object Compiler {
               // well below the JVM stack limit for these frames; the
               // non-terminating shape (a guard that is NOT
               // compile-time-constant) still dies with the diagnostic
-              // instead of a StackOverflowError. Overridable per-run
-              // for genuinely deeper constant recursion.
-              if (depth > Compiler.maxRecursionDepth)
+              // instead of a StackOverflowError.
+              if (depth > Compiler.MaxRecursionDepth)
                 fail(s"recursion in $$$n exceeded depth " +
-                  s"${Compiler.maxRecursionDepth} (override with " +
-                  "-Dgraft.maxRecursionDepth=N) — a recursive " +
+                  s"${Compiler.MaxRecursionDepth} — a recursive " +
                   "function needs a base case decidable at compile " +
                   "time (constant arguments; not values of table " +
                   "columns)")

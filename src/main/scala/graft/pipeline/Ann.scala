@@ -468,8 +468,8 @@ object Ann {
     * precomputed at write time, so the scan touches no vectors); the
     * refine stage fetches shortlist × dim full vectors only. For
     * fixed-radius workloads the pigeonhole word-blocking used by
-    * `Dedup.simhashPairs` turns the scan into an equi-join (a pair at
-    * Hamming ≤ r agrees exactly on some word whenever r < #words).
+    * `Dedup.simhashPairsMd5` turns the scan into an equi-join (a pair
+    * at Hamming ≤ r agrees exactly on some word whenever r < #words).
     */
   def binaryTopK(queries: DataFrame, corpus: DataFrame,
       qId: String, cId: String, vecCol: String, k: Int,

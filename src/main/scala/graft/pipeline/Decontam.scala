@@ -35,28 +35,7 @@ object Decontam {
   /** (test_id, train_id, n_common) for pairs sharing ≥ `minCommon`
     * distinct word `n`-grams.
     *
-    * `bloomPreFilter`: at corpus scale the train-side gram explode
-    * dwarfs the eval side by orders of magnitude, and almost no train
-    * gram appears in any eval document — so shuffling every train gram
-    * into the join is mostly wasted I/O. With the flag on, a Bloom
-    * filter over the EVAL grams (the small side by construction) is
-    * aggregated to one row, pulled to the driver (MBs — the same
-    * driver-sized footprint a broadcast var has) and applied as a
-    * scan-local `might_contain` predicate BEFORE the train grams reach
-    * the shuffle. Bloom filters have no false negatives, so the result
-    * is bit-identical (false positives just ride into the exact join
-    * and fall out) — DecontamSpec pins the equality.
-    *
-    * CAVEAT (non-lazy): with the flag on, building the PLAN runs the
-    * eval-side gram scan eagerly (the `.head()` below) — inherent to
-    * broadcasting a driver-built Bloom filter — and the eval grams are
-    * scanned again for the exact join. Callers composing lazy
-    * pipelines should leave the flag off (the default); the
-    * alternative that keeps the plan lazy is Spark's injected runtime
-    * filters (spark.sql.optimizer.runtime.bloomFilter.enabled), which
-    * build the same filter inside the join at execution time.
-    */
-  /** `maxShingleFrac`: RELATIVE boilerplate cap — drop grams present
+    * `maxShingleFrac`: RELATIVE boilerplate cap — drop grams present
     * in more than this fraction of train documents (effective cap =
     * min(maxShingleFreq, ceil(frac·|train|)), computed lazily
     * in-plan from the train count; `ceil` means a gram unique to one
@@ -90,7 +69,6 @@ object Decontam {
       test: DataFrame, testId: String, textCol: String,
       n: Int = 8, minCommon: Int = 2,
       maxShingleFreq: Int = 1000,
-      bloomPreFilter: Boolean = false,
       maxShingleFrac: Double = 0.001): DataFrame = {
     require(maxShingleFrac > 0 && maxShingleFrac <= 1.0,
       s"maxShingleFrac must be in (0, 1], got $maxShingleFrac")
@@ -103,21 +81,6 @@ object Decontam {
           explode(graft.functions.ShingleHashes(col("__t"), n)).as("h"))
     val te = grams(test, testId, "test_id")
     val tr0 = grams(train, trainId, "train_id")
-    val tr1 = if (!bloomPreFilter) tr0 else {
-      import org.apache.spark.sql.catalyst.expressions.Literal
-      import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-      import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-      import org.apache.spark.sql.graftglue.ColumnGlue
-      val bloomAgg = ColumnGlue.column(
-        new BloomFilterAggregate(ColumnGlue.expression(col("h")))
-          .toAggregateExpression())
-      val bytes = te.agg(bloomAgg.as("bf")).head().getAs[Array[Byte]](0)
-      if (bytes == null) tr0.limit(0) // empty eval side: nothing matches
-      else tr0.filter(ColumnGlue.column(BloomFilterMightContain(
-        Literal.create(bytes,
-          org.apache.spark.sql.types.BinaryType),
-        ColumnGlue.expression(col("h")))))
-    }
     val cap: Column = if (maxShingleFrac >= 1.0) lit(maxShingleFreq)
       else least(lit(maxShingleFreq.toLong),
         ceil(lit(maxShingleFrac) *
@@ -141,10 +104,10 @@ object Decontam {
     // every measured scale and the approximate forms change results
     // (gate hashes); revisit when a profiled corpus makes the gram
     // exchange itself the bottleneck.
-    val tr2 = if (maxShingleFrac >= 1.0) tr1
-      else tr1.crossJoin(broadcast(
+    val tr1 = if (maxShingleFrac >= 1.0) tr0
+      else tr0.crossJoin(broadcast(
         train.agg(count(lit(1)).as("__n_train"))))
-    val tr = tr2
+    val tr = tr1
       .withColumn("__freq", count(lit(1)).over(Window.partitionBy("h")))
       .filter(col("__freq") <= cap)
       .drop("__freq", "__n_train")
@@ -155,13 +118,13 @@ object Decontam {
   }
 
   /** Persist a [[SeenSet]] Bloom filter over an eval corpus's
-    * distinct shingles — decontamination as a reusable ARTIFACT.
-    * [[contamination]]'s `bloomPreFilter` is query-local (rebuilt per
-    * run from the eval frame); this writes the eval side ONCE —
-    * benchmark suites change rarely — and every later training batch
-    * screens against the artifact without the eval sets even being
-    * readable anymore. Keys are the shingle STRINGS (the portable
-    * md5 contract), so the filter replays in SQL.
+    * distinct shingles — decontamination as a reusable ARTIFACT, the
+    * Bloom tier in front of the exact [[contamination]] join. The eval
+    * side is written ONCE — benchmark suites change rarely — and every
+    * later training batch screens against the artifact
+    * ([[suspiciousGrams]]) without the eval sets even being readable
+    * anymore. Keys are the shingle STRINGS (the portable md5
+    * contract), so the filter replays in SQL.
     */
   def writeEvalFilter(eval: DataFrame, textCol: String, path: String,
       n: Int = 3, mBits: Int = 1 << 20, nHashes: Int = 4,

@@ -695,60 +695,7 @@ object Dedup {
       size(array_union(sa, sb))
   }
 
-  // ---------- SimHash ----------
-
-  /** Array of the 64 bit masks 1L<<b (driver-side literals — lambda
-    * variables can't be shift amounts in the Column API, and summing
-    * powers of two through doubles would lose exactness past 2^53).
-    */
-  private def bitMasks(n: Int): Column =
-    array((0 until n).map(b => lit(1L << b)): _*)
-
-  /** 64-bit SimHash of the token multiset: bit b is 1 iff the sum of
-    * ±1 contributions (per token, sign of hash bit b) is positive.
-    * Pure Column expression — wide but codegen-able.
-    */
-  def simhash(text: Column): Column = {
-    val toks = tokens(text)
-    aggregate(
-      bitMasks(64),
-      lit(0L),
-      (acc, mask) => {
-        val contrib = aggregate(toks, lit(0L),
-          (s, t) => s +
-            when(xxhash64(t).bitwiseAND(mask) =!= 0L, 1L).otherwise(-1L))
-        acc + when(contrib > 0, mask).otherwise(0L)
-      })
-  }
-
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming(a: Column, bc: Column): Column = bit_count(a.bitwiseXOR(bc))
-
-  /** SimHash near-dup pairs: block on 4 × 16-bit chunks (any exact
-    * chunk match is a candidate — Hamming ≤ 3 guarantees one equal
-    * chunk by pigeonhole), verify with full distance.
-    */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxDistance: Int = 3): DataFrame = {
-    val sigs = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sh"))
-    val chunks = sigs.select(col("id"), col("sh"),
-      explode(array((0 until 4).map(i =>
-        struct(lit(i).as("chunk"),
-          shiftright(col("sh"), 16 * i).bitwiseAND(0xFFFFL).as("val"))): _*))
-        .as("c"))
-      .select(col("id"), col("sh"), col("c.chunk"), col("c.val"))
-    val l = chunks.as("l")
-    val r = chunks.as("r")
-    l.join(r,
-        col("l.chunk") === col("r.chunk") && col("l.val") === col("r.val") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"),
-        hamming(col("l.sh"), col("r.sh")).as("dist"))
-      .distinct()
-      .filter(col("dist") <= maxDistance)
-  }
-
-  // ---------- portable (md5-derived) SimHash ----------
+  // ---------- SimHash (portable, md5-derived) ----------
   //
   // 64-bit SimHash where token-hash bit b is bit (b % 4) of hex digit
   // (b / 4) of md5(token) — every operation has an exact DuckDB mirror,
@@ -938,13 +885,11 @@ object Dedup {
     * whose output is only the frequent hashes (bounded by
     * total_paragraphs / minDocs, and in practice by the boilerplate
     * vocabulary — headers/footers/licenses), broadcast back as an
-    * equality probe, then one groupBy(doc) to reassemble. With
-    * `broadcastBoiler = false` the probe becomes a co-partitioned
-    * hash join for corpora whose boilerplate set itself is huge.
+    * equality probe, then one groupBy(doc) to reassemble.
     */
   def dropRepeatedParagraphs(df: DataFrame, idCol: String,
-      textCol: String, sep: String = "\n\n", minDocs: Int = 2,
-      broadcastBoiler: Boolean = true): DataFrame = {
+      textCol: String, sep: String = "\n\n",
+      minDocs: Int = 2): DataFrame = {
     val sepLit = java.util.regex.Pattern.quote(sep)
     // null text coalesces to '' so the doc still explodes to one row
     // and survives to the output ("one row per input document"); the
@@ -958,12 +903,11 @@ object Dedup {
         posexplode(split(coalesce(col(textCol), lit("")), sepLit))
           .as(Seq("__pos", "__para")))
         .withColumn("__ph", md5(col("__para"))))
-    val boiler0 = paras.filter(!col("__nulltext"))
+    val boiler = broadcast(paras.filter(!col("__nulltext"))
       .groupBy(col("__ph").as("__h"))
       .agg(countDistinct(col("__id")).as("__d"))
       .filter(col("__d") >= minDocs)
-      .select("__h")
-    val boiler = if (broadcastBoiler) broadcast(boiler0) else boiler0
+      .select("__h"))
     val flagged = paras.join(boiler,
         col("__ph") === col("__h"), "left")
       .select(col("__id"), col("__nulltext"), col("__pos"), col("__para"),

@@ -237,25 +237,23 @@ object Indexes {
     * touches a vector and the scan prunes to the probed list
     * directories. Result-identical to the recompute twin.
     *
-    * `pruneLists` (default on) collects the distinct probed list ids
-    * to the driver (≤ nCentroids ints — the bm25 query-vocab
-    * precedent) and bakes them into the scan as a literal partition
-    * filter, so the unprobed list DIRECTORIES are never opened — the
-    * point of the layout. The equi-join makes the filter a no-op
-    * relationally; pass false to keep plan construction fully lazy.
+    * Plan construction collects the distinct probed list ids to the
+    * driver (≤ nCentroids ints — the bm25 query-vocab precedent) and
+    * bakes them into the scan as a literal partition filter, so the
+    * unprobed list DIRECTORIES are never opened — the point of the
+    * layout. The equi-join makes the filter a no-op relationally.
     */
   def ivfPqTopKIndexed(queries: DataFrame, index: DataFrame,
       qId: String, vecCol: String, k: Int, nCentroids: Int = 16,
       nprobe: Int = 4, m: Int = 8, ks: Int = 16, dim: Int = 64,
-      seed: Int = 4242, pqSeed: Int = 9090,
-      pruneLists: Boolean = true): DataFrame =
+      seed: Int = 4242, pqSeed: Int = 9090): DataFrame =
     ivfPqProbe(queries, index, qId, vecCol, k,
       Ann.pqBooks(m, ks, dim / m, pqSeed), nCentroids, nprobe, dim,
-      seed, pruneLists, residualBias = false)
+      seed, residualBias = false)
 
   /** Shared probe tail of [[ivfPqTopKIndexed]] and
     * [[ivfPqResTopKIndexed]] — ONE copy of the query explode, the
-    * pruneLists partition-filter collect, the self-exclusion, and the
+    * probed-list partition-filter collect, the self-exclusion, and the
     * tie-ordered top-k window, so a fix to any of them can never
     * leave the twin stale. `residualBias` adds the per-list
     * <q, centroid> term the residual layout's scores decompose with.
@@ -263,7 +261,7 @@ object Indexes {
   private def ivfPqProbe(queries: DataFrame, index: DataFrame,
       qId: String, vecCol: String, k: Int,
       books: Array[Array[Array[Double]]], nCentroids: Int,
-      nprobe: Int, dim: Int, seed: Int, pruneLists: Boolean,
+      nprobe: Int, dim: Int, seed: Int,
       residualBias: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val m = books.length
@@ -279,11 +277,9 @@ object Indexes {
           seed).as("cd"))
       else Nil)
     val q = qBase.select(qCols: _*)
-    val pruned = if (!pruneLists) index else {
-      val probed = q.select("cent").distinct().limit(nCentroids + 1)
-        .collect().map(_.get(0))
-      index.filter(col("cent").isin(probed.toSeq: _*))
-    }
+    val probed = q.select("cent").distinct().limit(nCentroids + 1)
+      .collect().map(_.get(0))
+    val pruned = index.filter(col("cent").isin(probed.toSeq: _*))
     val adc = Ann.pqAdcScore(col("codes"), col("lut"), m, ks)
     val score = if (residualBias)
       element_at(col("cd"), col("cent") + 1) + adc
@@ -327,10 +323,9 @@ object Indexes {
   def ivfPqResTopKIndexed(queries: DataFrame, index: DataFrame,
       qId: String, vecCol: String, k: Int,
       books: Array[Array[Array[Double]]], nCentroids: Int = 16,
-      nprobe: Int = 4, dim: Int = 64, seed: Int = 4242,
-      pruneLists: Boolean = true): DataFrame =
+      nprobe: Int = 4, dim: Int = 64, seed: Int = 4242): DataFrame =
     ivfPqProbe(queries, index, qId, vecCol, k, books, nCentroids,
-      nprobe, dim, seed, pruneLists, residualBias = true)
+      nprobe, dim, seed, residualBias = true)
 
   // ---------- BM25 inverted postings ----------
 
@@ -713,10 +708,9 @@ object Indexes {
     * [[winnowCandidatesIndexed]] auto-selection, result-identical
     * both ways). The `maxBucket` skew cap applies to the TRUE per-key
     * corpus counts of the matched keys (whole key-groups survive
-    * either pruning, so the window counts are exact).
-    *
-    * @param excludeSameId drop pairs whose ids coincide — the ingest
-    *        re-probe case where the batch is already indexed
+    * either pruning, so the window counts are exact). Pairs whose ids
+    * coincide are dropped — the ingest re-probe case where the batch
+    * is already indexed.
     */
   def mediaDupPairsIndexed(batch: DataFrame, batchId: String,
       mediaCol: String, index: DataFrame, kernel: String = "dhash",
@@ -726,8 +720,7 @@ object Indexes {
       // fingerprints: measured at 20k keys the literal plan costs
       // 2.8x the semi-join (recorded in commit a86ff8a), so the literal path
       // is reserved for genuinely small ingest batches
-      maxProbeKeys: Int = 4096,
-      excludeSameId: Boolean = true): DataFrame = {
+      maxProbeKeys: Int = 4096): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 4,
       s"pigeonhole probing over 4 words needs maxHamming < 4, " +
         s"got $maxHamming")
@@ -747,7 +740,7 @@ object Indexes {
       .withColumn("__n", count(lit(1)).over(Window.partitionBy("key")))
       .filter(col("__n") <= maxBucket).drop("__n")
     bf.join(capped, "key")
-      .filter(if (excludeSameId) col("bid") =!= col("id") else lit(true))
+      .filter(col("bid") =!= col("id"))
       // a pair can match on several words; collapse before the verify
       .select(col("bid").as("batch_id"), col("id").as("corpus_id"),
         col("bdh"), col("dh"))

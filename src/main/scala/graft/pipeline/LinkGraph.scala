@@ -94,13 +94,6 @@ object LinkGraph {
     rank
   }
 
-  /** Convenience: rank in [0,1] as a double rendering of the fixed-
-    * point column (one IEEE division, engine-portable). */
-  def withRankDouble(ranked: DataFrame,
-      scale: Long = 1000000000000L): DataFrame =
-    ranked.withColumn("rank_d",
-      col("rank").cast("double") / lit(scale.toDouble))
-
   /** Per-node triangle counts and degrees over an undirected edge
     * list — the local-density features (a node in many triangles
     * sits in a clique-like cluster; degree without triangles is a

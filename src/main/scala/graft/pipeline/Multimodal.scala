@@ -129,8 +129,8 @@ object Multimodal {
     * some word whenever r < 4, so the join is equi on (word index,
     * word value), never all-pairs — and each candidate is verified by
     * the codegen'd popcount ([[Ann.hammingWords]]). Identical
-    * topology to [[Dedup.simhashPairs]], which is the point: image
-    * dedup is text dedup with a different kernel.
+    * topology to [[Dedup.simhashPairsMd5FromFps]], which is the
+    * point: image dedup is text dedup with a different kernel.
     */
   def imageDupPairs(df: DataFrame, idCol: String, mediaCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame =
@@ -248,8 +248,8 @@ object Multimodal {
     * same skew guard every LSH family here carries), and each
     * candidate is verified by the codegen'd popcount
     * ([[Ann.hammingWords]]). Identical topology to
-    * [[Dedup.simhashPairs]], which is the point: media dedup is text
-    * dedup with a different kernel.
+    * [[Dedup.simhashPairsMd5FromFps]], which is the point: media
+    * dedup is text dedup with a different kernel.
     */
   private def wordBlockPairsFromSigs(sigs: DataFrame,
       maxHamming: Int, maxBucket: Int): DataFrame = {

@@ -97,8 +97,7 @@ object SeenSet {
 
   /** Bit test against the bitset column, pure built-ins: variable
     * shifts aren't expressible (shiftright takes a literal), so the
-    * mask comes from a 64-literal array — the [[Dedup]] bitMasks
-    * pattern.
+    * mask comes from a 64-literal array.
     */
   private def bitSet(bits: Column, p: Column): Column =
     (element_at(bits, (p / 64).cast("int") + 1)

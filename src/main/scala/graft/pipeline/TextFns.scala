@@ -24,13 +24,6 @@ object TextFns {
   def tokenCount(text: Column): Column =
     size(filter(split(text, WsRe), t => length(t) > 0)).cast("long")
 
-  /** BPE-ish subword count: word-piece regex (letters / digits /
-    * punctuation runs), the usual pre-tokenizer shape.
-    */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"),
-      t => length(t) > 0)).cast("long")
-
   /** Punctuation character count (explicit class — portable). */
   def punctCount(text: Column): Column =
     (length(text) -
@@ -174,19 +167,12 @@ object TextFns {
           sorted))))
   }
 
-  def fingerprint(text: Column, gram: Int = 8): Column = {
-    val norm = Dedup.normalize(text)
-    val grams = when(length(norm) < gram, array(norm))
-      .otherwise(transform(sequence(lit(1), length(norm) - (gram - 1)),
-        i => substring(norm, i, lit(gram))))
-    array_min(transform(grams, g => xxhash64(g)))
-  }
-
-  /** Portable variant of [[fingerprint]]: min over md5 hex strings of
-    * the 8-grams — same content-defined semantics, oracle-computable
-    * (lexicographic min of md5 strings is engine-independent). Native
-    * codegen'd expression; [[fingerprintMd5Cols]] is the Column form
-    * it is equivalence-tested against.
+  /** Content fingerprint: min over md5 hex strings of the character
+    * `gram`-grams of the normalized text — content-defined (case and
+    * whitespace do not change it) and oracle-computable (lexicographic
+    * min of md5 strings is engine-independent). Native codegen'd
+    * expression; [[fingerprintMd5Cols]] is the Column form it is
+    * equivalence-tested against.
     */
   def fingerprintMd5(text: Column, gram: Int = 8): Column =
     graft.functions.FingerprintMd5(text, gram)
@@ -1155,32 +1141,26 @@ object TextFns {
     * Ties break toward the lexicographically smaller token.
     */
   def keywords(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, perDoc: Int = 3, minDf: Int = 1,
-      broadcastVocab: Boolean = true): org.apache.spark.sql.DataFrame = {
+      textCol: String, perDoc: Int = 3,
+      minDf: Int = 1): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE tokenization: the df vocabulary is derived from the same
     // exploded frame the ranking consumes, never from a second
     // TokenCounts pass over the corpus (the previous shape tokenized
-    // the corpus twice — half of p_keywords' cost). Broadcast path:
-    // the exploded frame is staged (persist, harness-released) because
-    // the vocab branch carries no exchange for ReusedExchange to latch
-    // onto; join path: both branches shuffle on token, so the
-    // identical exchange is computed once and reused.
-    val tc0 = df.select(col(idCol).as("doc_id"),
+    // the corpus twice — half of p_keywords' cost). The exploded frame
+    // is staged (persist, harness-released) because the broadcast
+    // vocab branch carries no exchange for ReusedExchange to latch
+    // onto.
+    val tc = graft.core.Caches.stage(df.select(col(idCol).as("doc_id"),
         explode(graft.functions.TokenCounts(col(textCol))).as("tc"))
       .select(col("doc_id"), col("tc.token").as("token"),
-        col("tc.cnt").as("tf"))
-    val tc = if (broadcastVocab) graft.core.Caches.stage(tc0) else tc0
+        col("tc.cnt").as("tf")))
     // tokens are distinct within a document (TokenCounts), so df is a
-    // plain row count per token
-    val vocab0 = tc.groupBy("token")
+    // plain row count per token; a minDf-filtered vocabulary is
+    // bounded → broadcast (no shuffle of the exploded tokens)
+    val vocab = broadcast(tc.groupBy("token")
       .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf)
-    // a minDf-filtered vocabulary is typically bounded → broadcast (no
-    // shuffle of the exploded tokens); for open-vocab corpora where
-    // even the df table is huge, pass false and the attach becomes a
-    // plain co-partitioned equi-join on token
-    val vocab = if (broadcastVocab) broadcast(vocab0) else vocab0
+      .filter(col("df") >= minDf))
     val w = Window.partitionBy("doc_id")
       .orderBy((col("tf").cast("double") / col("df")).desc, col("token"))
     tc.join(vocab, "token")
@@ -1198,7 +1178,7 @@ object TextFns {
     * not top tokens per doc).
     *
     * Scale shape (100 TB): ONE tokenization scan feeds both branches
-    * (staged like keywords' broadcast path). The per-token cap plans
+    * (staged like keywords'). The per-token cap plans
     * as Spark 4's partial+final WindowGroupLimit pair, so a stopword
     * appearing in every document ships at most `cap` rows per map
     * task across the exchange — the per-token skew guard; df/cf are
@@ -1207,18 +1187,16 @@ object TextFns {
     * vocabulary is bounded.
     */
   def postings(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, cap: Int = 5, minDf: Int = 1,
-      broadcastVocab: Boolean = true): org.apache.spark.sql.DataFrame = {
+      textCol: String, cap: Int = 5,
+      minDf: Int = 1): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tc0 = df.select(col(idCol).as("doc_id"),
+    val tc = graft.core.Caches.stage(df.select(col(idCol).as("doc_id"),
         explode(graft.functions.TokenCounts(col(textCol))).as("tc"))
       .select(col("doc_id"), col("tc.token").as("token"),
-        col("tc.cnt").as("tf"))
-    val tc = if (broadcastVocab) graft.core.Caches.stage(tc0) else tc0
-    val vocab0 = tc.groupBy("token")
+        col("tc.cnt").as("tf")))
+    val vocab = broadcast(tc.groupBy("token")
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      .filter(col("df") >= minDf)
-    val vocab = if (broadcastVocab) broadcast(vocab0) else vocab0
+      .filter(col("df") >= minDf))
     val w = Window.partitionBy("token")
       .orderBy(col("tf").desc, col("doc_id"))
     tc.withColumn("rk", row_number().over(w))

@@ -162,9 +162,12 @@ object FunctionQueries {
   /** Path-step semantics (SURVEY §2.1) at table scale: per-customer
     * order arrays, then the NON-COMPOSITIONAL `a[i]` rule — first
     * quantity of each order (per parent), then the first of those.
+    * The path goes through the text frontend over the frame's columns
+    * (RM.evalCol): `os.qtys[0]` indexes each order's quantities, `.$`
+    * splices the per-parent hits into one sequence, and `[0]` takes
+    * its first element.
     */
   def fPathSteps(s: SparkSession, d: String): DataFrame = {
-    import graft.core.Paths
     val l = Tables.lineitem(s, d)
     val o = Tables.orders(s, d)
     val perOrder = l.groupBy("l_orderkey")
@@ -172,16 +175,15 @@ object FunctionQueries {
         struct(col("l_linenumber"), col("l_quantity")))).as("items"))
       .select(col("l_orderkey"),
         transform(col("items"), _.getField("l_quantity")).as("qtys"))
-    o.join(perOrder, o("o_orderkey") === perOrder("l_orderkey"))
+    val perCust = o.join(perOrder, o("o_orderkey") === perOrder("l_orderkey"))
       .groupBy(col("o_custkey").as("custkey"))
       .agg(array_sort(collect_list(
         struct(col("o_orderkey"), col("qtys")))).as("os"))
       .select(col("custkey"),
-        size(col("os")).cast("long").as("n_orders"),
-        element_at(
-          Paths.indexPerParent(
-            transform(col("os"), _.getField("qtys")), 0), 1)
-          .as("first_qty"))
+        size(col("os")).cast("long").as("n_orders"), col("os"))
+    graft.lang.RM.evalCol("os.qtys[0].$[0]", perCust,
+        keep = Seq("custkey", "n_orders"))
+      .withColumnRenamed("value", "first_qty")
       .orderBy("custkey")
   }
 

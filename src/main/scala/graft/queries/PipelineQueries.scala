@@ -10,10 +10,9 @@ import graft.pipeline.{Ann, Dedup, TextFns}
   * entries. Every entry is DuckDB-hash-checked: the dedup/LSH gates use
   * the portable md5-derived hash family (`Dedup.*Md5`) whose values an
   * SQL engine reproduces exactly, and the hyperplane gates embed the
-  * deterministic plane matrix as SQL literals. MinHash has only the
-  * portable form, computed by the native `MinhashBandBuckets` kernel;
-  * the remaining engine-native (Murmur3/xxhash64) variants, such as
-  * `Dedup.simhash`, are covered by PipelineSpec.
+  * deterministic plane matrix as SQL literals. MinHash, SimHash and
+  * the content fingerprint have only the portable form; there are no
+  * engine-native (Murmur3/xxhash64) twins.
   */
 object PipelineQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -1213,14 +1212,15 @@ object PipelineQueries {
     // out-of-the-box decontamination posture is the corpus-relative
     // boilerplate cap (min(1000, ceil(0.001·|train|)) — the
     // scale-safe default the sf10 rehearsal demanded), replayed
-    // in-oracle against the dd count. Round 18: bloomPreFilter was
-    // measured here and REJECTED — at n = 3 on prose nearly every
-    // train gram occurs in the eval suite (the guide-§3.2
+    // in-oracle against the dd count. Round 18 measured an eval-gram
+    // Bloom pre-filter here and REJECTED it — at n = 3 on prose nearly
+    // every train gram occurs in the eval suite (the guide-§3.2
     // selectivity precondition fails), so the filter dropped almost
     // nothing and its extra eval-side build action made the stage
     // 1.6× SLOWER (OPTIMIZATION_r18.md: interleaved medians 1.73 s
-    // off vs 2.74 s on at sf0.1; identical 65-pair output). The flag stays
-    // for n = 8-class gram widths where train∩eval is sparse.
+    // off vs 2.74 s on at sf0.1; identical 65-pair output). The
+    // persisted Bloom tier is Decontam.writeEvalFilter /
+    // suspiciousGrams.
     val contaminated = graft.pipeline.Decontam.contamination(
         deduped, "doc_id", evalDocs, "doc_id", "text",
         n = 3, minCommon = 2)

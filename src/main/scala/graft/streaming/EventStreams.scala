@@ -563,7 +563,7 @@ object EventStreams {
     * probes the CURRENT index for perceptual near-dups
     * ([[mediaProbeStream]]'s stateless probe), sinks the verified
     * (batch_id, corpus_id, dist) pairs, and folds the batch's
-    * ACCEPTED rows into the artifact with the batch-id-keyed append
+    * rows into the artifact with the batch-id-keyed append
     * ([[graft.pipeline.Indexes.appendMediaIndexBatch]]), so later
     * batches dedup against earlier ingests, not just the seed corpus.
     *
@@ -579,13 +579,11 @@ object EventStreams {
     */
   def mediaIngestStream(media: DataFrame, idCol: String,
       mediaCol: String, indexPath: String, kernel: String = "dhash",
-      maxHamming: Int = 3, maxBucket: Int = 1000,
-      appendNovelOnly: Boolean = false)
+      maxHamming: Int = 3, maxBucket: Int = 1000)
       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    ingestLoop(media, idCol, indexPath, "batch_id", appendNovelOnly,
-      sink) { b =>
+    ingestLoop(media, indexPath, sink) { b =>
       graft.pipeline.Indexes.mediaDupPairsIndexed(b, idCol, mediaCol,
         graft.pipeline.Indexes.openMediaIndex(b.sparkSession, indexPath),
         kernel, maxHamming, maxBucket)
@@ -599,12 +597,10 @@ object EventStreams {
     * batch the index at `indexPath` already marks applied is skipped;
     * otherwise the batch is persisted, `probe` finds its candidates
     * against the current artifacts (persisted too), `sink` receives
-    * them, and `append` folds the accepted rows into the artifacts
-    * keyed by batch id — every row, or under `appendNovelOnly` only
-    * the rows whose `idCol` is not among the candidates' `candKey`.
+    * them, and `append` folds every row of the batch into the
+    * artifacts keyed by batch id.
     */
-  private def ingestLoop(stream: DataFrame, idCol: String,
-      indexPath: String, candKey: String, appendNovelOnly: Boolean,
+  private def ingestLoop(stream: DataFrame, indexPath: String,
       sink: (DataFrame, Long) => Unit)(probe: DataFrame => DataFrame)(
       append: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
@@ -617,11 +613,7 @@ object EventStreams {
           val cands = probe(b).persist()
           try {
             sink(cands, id)
-            val accepted =
-              if (!appendNovelOnly) b
-              else b.join(cands.select(col(candKey)).distinct(),
-                b(idCol) === col(candKey), "left_anti")
-            append(accepted, id)
+            append(b, id)
           } finally cands.unpersist()
         } finally b.unpersist()
       }
@@ -658,9 +650,8 @@ object EventStreams {
   /** The full streaming ingest-dedup LOOP against a winnow artifact:
     * each micro-batch (1) probes the CURRENT index for near-dup
     * candidates ([[winnowProbeStream]]'s stateless probe), (2) sinks
-    * them, and (3) folds the batch's ACCEPTED docs — all of them, or
-    * only the candidate-free ones under `appendNovelOnly` — into the
-    * artifact with `Indexes.appendWinnowIndex`, so later batches
+    * them, and (3) folds the batch's docs into the artifact with
+    * `Indexes.appendWinnowIndex`, so later batches
     * dedup against earlier ones, not just the initial corpus.
     *
     * State stays BOUNDED exactly as in the probe-only form: there is
@@ -689,13 +680,11 @@ object EventStreams {
     */
   def winnowIngestStream(docs: DataFrame, idCol: String,
       textCol: String, indexPath: String, k: Int = 4, w: Int = 8,
-      minShared: Int = 2, maxBucket: Int = 1000,
-      appendNovelOnly: Boolean = false)
+      minShared: Int = 2, maxBucket: Int = 1000)
       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    ingestLoop(docs, idCol, indexPath, "batch_id", appendNovelOnly,
-      sink) { b =>
+    ingestLoop(docs, indexPath, sink) { b =>
       graft.pipeline.Indexes.winnowCandidatesIndexed(b, idCol, textCol,
         graft.pipeline.Indexes.openWinnowIndex(b.sparkSession, indexPath),
         k, w, minShared, maxBucket)
@@ -710,7 +699,7 @@ object EventStreams {
     * Jaccard-verifying candidates against corpus text read only for
     * matched ids ([[dupPairsProbeStream]]'s stateless probe), (2)
     * sinks the verified (new_id, corpus_id, jaccard) pairs, and (3)
-    * folds the batch's ACCEPTED docs into BOTH artifacts — band
+    * folds the batch's docs into BOTH artifacts — band
     * buckets into the index, (id, text) rows into the corpus-docs
     * artifact the verify reads — so later batches dedup against
     * earlier ones, not just the initial corpus.
@@ -744,12 +733,11 @@ object EventStreams {
   def minhashIngestStream(docs: DataFrame, idCol: String,
       textCol: String, indexPath: String, docsPath: String,
       n: Int = 3, k: Int = 32, b: Int = 8, threshold: Double = 0.8,
-      maxBucket: Int = 1000, appendNovelOnly: Boolean = false)
+      maxBucket: Int = 1000)
       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    ingestLoop(docs, idCol, indexPath, "new_id", appendNovelOnly,
-      sink) { bdf =>
+    ingestLoop(docs, indexPath, sink) { bdf =>
       val spark = bdf.sparkSession
       graft.pipeline.Indexes.incrementalDupPairsIndexed(bdf, idCol,
         graft.pipeline.Indexes.openMinhashIndex(spark, indexPath),
@@ -807,14 +795,4 @@ object EventStreams {
   def novelStream(docs: DataFrame, keyCol: String,
       seen: DataFrame): DataFrame =
     graft.pipeline.SeenSet.novel(docs, keyCol, seen)
-
-  /** Sliding-window rate monitor (5-minute slide over 1-hour window). */
-  def slidingRate(events: DataFrame,
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "5 minutes").as("w"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
 }

@@ -2,7 +2,7 @@ package graft.core
 
 import graft.SparkSpec
 import graft.core.Finalize.Container
-import org.apache.spark.sql.functions._
+import graft.lang.RM
 
 class CoreSpec extends SparkSpec {
   import spark.implicits._
@@ -26,47 +26,32 @@ class CoreSpec extends SparkSpec {
   }
 
   // ---- path steps (quirk battery, builtin_test.cljc:318-456) ----
+  // compiled by the text frontend over a real frame's columns
+  // (RM.evalCol, the distributed path f_path_steps runs)
   private def nested = spark.read.json(Seq(
     """{"orders": [
          {"id": 1, "items": [{"sku": "a", "qty": 2}, {"sku": "b", "qty": 1}]},
          {"id": 2, "items": [{"sku": "c", "qty": 5}]}
        ]}""").toDS())
+  private def pathValue(src: String): Any =
+    RM.evalCol(src, nested).head().get(0)
 
   test("get-step maps over arrays; flatten splices one level") {
-    val ids = nested.select(Paths.getStep($"orders", "id").as("ids"))
-      .as[Seq[Long]].head()
-    assert(ids == Seq(1L, 2L))
-    val allItems = nested.select(
-      Paths.getStepFlatten($"orders", "items").as("x"))
-      .select(size($"x")).head().getInt(0)
-    assert(allItems == 3)
+    assert(pathValue("orders.id") == Seq(1L, 2L))
+    assert(pathValue("$count(orders.items)") == 3L)
   }
 
   test("non-compositional a[i]: index applies per parent, not merged") {
     // orders.items[0] → first item of EACH order (2 results)
-    val perParent = nested.select(
-      Paths.indexPerParent(
-        Paths.getStep($"orders", "items"), 0).as("x"))
-      .select(transform($"x", _.getField("sku")).as("skus"))
-      .as[Seq[String]].head()
-    assert(perParent == Seq("a", "c"))
-    // vs indexing the merged sequence → single item
-    val merged = nested.select(
-      Paths.index(Paths.getStepFlatten($"orders", "items"), 0)
-        .getField("sku").as("s")).as[String].head()
-    assert(merged == "a")
+    assert(pathValue("orders.items[0].sku") == Seq("a", "c"))
+    // vs indexing the spliced sequence → single item
+    assert(pathValue("orders.items.$[0].sku") == "a")
   }
 
   test("filter/map/value steps and range") {
-    val qtys = nested.select(
-      Paths.mapStep(
-        Paths.filterStep(
-          Paths.getStepFlatten($"orders", "items"),
-          i => i.getField("qty") > 1),
-        i => i.getField("qty")).as("q")).as[Seq[Long]].head()
-    assert(qtys == Seq(2L, 5L))
-    assert(spark.range(1).select(Paths.range(lit(3), lit(6)))
-      .as[Seq[Int]].head() == Seq(3, 4, 5, 6))
+    assert(pathValue("orders.items[qty > 1].qty") == Seq(2L, 5L))
+    assert(pathValue("orders.items[qty > 1].(qty * 10)") == Seq(20L, 50L))
+    assert(RM.eval("[3..6]", spark).contains(Seq(3L, 4L, 5L, 6L)))
   }
 
   test("Finalize.result applies container semantics to frames") {

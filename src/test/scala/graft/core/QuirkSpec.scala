@@ -1,16 +1,17 @@
 package graft.core
 
 import graft.SparkSpec
-import graft.core.Finalize.Container
 import graft.functions.Jsonata
+import graft.lang.RM
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 
 /** Port of the reference's path/flattening quirk battery
-  * (builtin_test.cljc:318-481) to Column-level semantics. Cases whose
-  * arrays are heterogeneous at the type level (`[[1,2,3], 4]`) cannot
-  * exist in Spark's type system and are representable only through the
-  * EAV/variant path; the homogeneous cases are ported 1:1.
+  * (builtin_test.cljc:318-481). Path, filter, map and value steps run
+  * through the compiler's path steps (RM.eval: parse → compile →
+  * Catalyst → jflatten); the plain navigation, aref, concat, $match
+  * and fold cases are Column-level. Cases whose arrays are
+  * heterogeneous at the type level (`[[1,2,3], 4]`) are TodaySpec's.
   */
 class QuirkSpec extends SparkSpec {
 
@@ -18,21 +19,20 @@ class QuirkSpec extends SparkSpec {
     spark.range(1).select(c.as("v")).collect()(0).get(0)
   private def seq1(c: Column): Seq[Any] =
     eval1(c).asInstanceOf[scala.collection.Seq[Any]].toSeq
-  private def fin(v: Any): Option[Any] = Finalize.jflatten(v)
-  private def asContainer(c: Column): Option[Any] =
-    fin(Container(seq1(c)))
+  private def run(src: String, expected: Any): Unit = {
+    val got = RM.eval(src, spark)
+    assert(got.contains(expected),
+      s"""RM "$src" => $got, expected Some($expected)""")
+  }
 
-  private def objArr: Column = array(
-    struct(lit(1).as("a")), struct(lit(2).as("a")), struct(lit(3).as("a")))
+  private val objArr = "[{'a' : 1}, {'a' : 2}, {'a' : 3}]"
 
   test("simple mapping: [{'a':1},{'a':2},{'a':3}].a = [1,2,3]") {
-    assert(asContainer(Paths.getStep(objArr, "a")).contains(Seq(1, 2, 3)))
+    run(s"$objArr.a", Seq(1L, 2L, 3L))
   }
 
   test("simple mapping (2): .(a + 1) = [2,3,4]") {
-    assert(asContainer(
-      Paths.mapStep(objArr, x => x.getField("a") + 1))
-      .contains(Seq(2, 3, 4)))
+    run(s"$objArr.(a + 1)", Seq(2L, 3L, 4L))
   }
 
   test("simple navigation: {'a':{'b':111}}.a.b = 111") {
@@ -57,63 +57,40 @@ class QuirkSpec extends SparkSpec {
       doc.getField("d")) == 525)
   }
 
-  private def numsArr: Column = array(
-    struct(array(lit(1), lit(2)).as("nums")),
-    struct(array(lit(3), lit(4)).as("nums")))
+  private val numsArr = "[{'nums' : [1, 2]}, {'nums' : [3, 4]}]"
 
   test("quirk 2a: .nums merges = [1,2,3,4]") {
-    assert(asContainer(Paths.getStepFlatten(numsArr, "nums"))
-      .contains(Seq(1, 2, 3, 4)))
+    run(s"$numsArr.nums", Seq(1L, 2L, 3L, 4L))
   }
 
   test("quirk 2b: .nums[1] is per-parent = [2,4]") {
-    assert(asContainer(
-      Paths.indexPerParent(Paths.getStep(numsArr, "nums"), 1))
-      .contains(Seq(2, 4)))
+    run(s"$numsArr.nums[1]", Seq(2L, 4L))
   }
 
   test("number[2] on a JSON array indexes directly = 33") {
-    val arr = array(lit(11), lit(22), lit(33), lit(44))
-    assert(eval1(Paths.index(arr, 2)) == 33)
+    run("{'number' : [11, 22, 33, 44]}.number[2]", 33L)
   }
 
   test("simple filter singleton-collapses: letter[$='b'] = 'b'") {
-    val letters = array(lit("a"), lit("b"), lit("c"), lit("d"))
-    assert(asContainer(Paths.filterStep(letters, x => x === "b"))
-      .contains("b"))
+    run("{'letter' : ['a', 'b', 'c', 'd']}.letter[$ = 'b']", "b")
   }
 
   test("filter on mapped structs: .num[x = 2] keeps duplicates") {
-    val arr = array(
-      struct(struct(lit(1).as("x")).as("num")),
-      struct(struct(lit(2).as("x")).as("num")),
-      struct(struct(lit(2).as("x")).as("num")),
-      struct(struct(lit(3).as("x")).as("num")))
-    val out = seq1(Paths.filterStep(Paths.getStep(arr, "num"),
-      n => n.getField("x") === 2))
-    assert(out.map(_.asInstanceOf[Row].getInt(0)) == Seq(2, 2))
+    run("[{'num' : {'x' : 1}}, {'num' : {'x' : 2}}, " +
+      "{'num' : {'x' : 2}}, {'num' : {'x' : 3}}].num[x = 2]",
+      Seq(Map("x" -> 2L), Map("x" -> 2L)))
   }
 
+  private val numXs =
+    "[{'num' : {'x' : 1}}, {'num' : {'x' : 2}}, {'num' : {'x' : 3}}]"
+
   test("row filter [num.x = 2] singleton-collapses to the object") {
-    val arr = array(
-      struct(struct(lit(1).as("x")).as("num")),
-      struct(struct(lit(2).as("x")).as("num")),
-      struct(struct(lit(3).as("x")).as("num")))
-    val kept = asContainer(Paths.filterStep(arr,
-      r => r.getField("num").getField("x") === 2))
-    // the finalizer renders the singleton Row as a document map
-    assert(kept.contains(Map("num" -> Map("x" -> 2))))
+    // the finalizer renders the singleton row as a document map
+    run(s"$numXs[num.x = 2]", Map("num" -> Map("x" -> 2L)))
   }
 
   test("value-step .[num.x = 2] = [[false],[true],[false]]") {
-    val arr = array(
-      struct(struct(lit(1).as("x")).as("num")),
-      struct(struct(lit(2).as("x")).as("num")),
-      struct(struct(lit(3).as("x")).as("num")))
-    val out = seq1(Paths.valueStep(arr,
-      r => array(r.getField("num").getField("x") === 2)))
-      .map(_.asInstanceOf[scala.collection.Seq[Any]].toSeq)
-    assert(out == Seq(Seq(false), Seq(true), Seq(false)))
+    run(s"$numXs.[num.x = 2]", Seq(Seq(false), Seq(true), Seq(false)))
   }
 
   test("string concat with number stringification: 1 & 2 & 'abc'") {
@@ -133,19 +110,18 @@ class QuirkSpec extends SparkSpec {
   }
 
   test("reduce battery: [1..5] fold, one-arg, one-arg+init") {
-    val r15 = Paths.range(lit(1), lit(5))
+    val r15 = sequence(lit(1), lit(5))
     assert(eval1(aggregate(r15, lit(0), (a, x) => a + x)) == 15)
     assert(eval1(aggregate(array(lit(3)), lit(0), (a, x) => a + x)) == 3)
     assert(eval1(aggregate(array(lit(3)), lit(2), (a, x) => a + x)) == 5)
   }
 
   test("thread into reverse: [1..5] ~> $reverse() = [5,4,3,2,1]") {
-    assert(seq1(Paths.thread(Paths.range(lit(1), lit(5)),
-      Jsonata.reverseArr)) == Seq(5, 4, 3, 2, 1))
+    run("[1..5] ~> $reverse()", Seq(5L, 4L, 3L, 2L, 1L))
   }
 
   test("scalar treated as singleton: 1[0] = 1") {
     // reference: "RADmapper doesn't mind" — scalars index as singletons
-    assert(eval1(Paths.index(array(lit(1)), 0)) == 1)
+    run("1[0]", 1L)
   }
 }

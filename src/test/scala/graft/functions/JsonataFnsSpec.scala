@@ -202,13 +202,16 @@ class JsonataFnsSpec extends SparkSpec {
 
   // ---- HOFs (builtin_test.cljc:465-481) ----
   test("map/filter/reduce/single over arrays") {
-    assert(seq1(mapArr(array(lit(1), lit(2), lit(3)), (x, _) => x * 2)) ==
-      Seq(2, 4, 6))
-    assert(seq1(mapArr(array(lit(10), lit(20)), (_, i) => i)) == Seq(0, 1))
-    assert(seq1(filterArr(array(lit(1), lit(2), lit(3), lit(4)),
-      (x, _) => x % 2 === 0)) == Seq(2, 4))
-    assert(eval1(reduceArr(array(lit(1), lit(2), lit(3), lit(4)),
-      lit(1), (acc, x) => acc * x)) == 24)
+    // $map/$filter/$reduce lower to Spark's transform/filter/aggregate
+    // in the compiler (Builtins); they run through the text frontend
+    def rm(src: String): Option[Any] = graft.lang.RM.eval(src, spark)
+    assert(rm("$map([1, 2, 3], function($x){ $x * 2 })") ==
+      Some(Seq(2L, 4L, 6L)))
+    assert(rm("$map([10, 20], function($v, $i){ $i })") == Some(Seq(0L, 1L)))
+    assert(rm("$filter([1, 2, 3, 4], function($x){ $x % 2 = 0 })") ==
+      Some(Seq(2L, 4L)))
+    assert(rm("$reduce([1, 2, 3, 4], function($acc, $x){ $acc * $x }, 1)") ==
+      Some(24L))
     assert(eval1(single(array(lit(1), lit(4), lit(3)), x => x > 3)) == 4)
   }
 

@@ -169,7 +169,7 @@ class IndexesSpec extends SparkSpec {
     assert(Indexes.isFresh(idx, "neighbor_id", emb, "vec_id"))
   }
 
-  test("ivf-pq index probe == recompute, with and without list pruning") {
+  test("ivf-pq index probe == recompute, unprobed lists pruned") {
     val emb = Tables.embeddings(spark, sf())
     val qs = emb.orderBy("vec_id").limit(7)
     Indexes.writeIvfPqIndex(emb, "vec_id", "embedding",
@@ -179,10 +179,11 @@ class IndexesSpec extends SparkSpec {
       "embedding", k = 4, nprobe = 2))
     val pruned = Indexes.ivfPqTopKIndexed(qs, idx, "vec_id",
       "embedding", k = 4, nprobe = 2)
-    val lazyPlan = Indexes.ivfPqTopKIndexed(qs, idx, "vec_id",
-      "embedding", k = 4, nprobe = 2, pruneLists = false)
     assert(rows(pruned) == want)
-    assert(rows(lazyPlan) == want)
+    // the probed list ids reach the scan as a partition filter
+    assert(pruned.queryExecution.executedPlan.toString
+      .matches("(?s).*PartitionFilters: \\[[^\\]]*cent#\\d+ IN.*"),
+      pruned.queryExecution.executedPlan.toString)
   }
 
   test("postings index probe == recompute bm25Queries, scores bit-equal") {

@@ -313,13 +313,17 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("simhash: near-identical docs within small hamming distance") {
-    val sigs = docs.select($"doc_id", Dedup.simhash($"text").as("sh"))
-      .as[(Long, Long)].collect().toMap
+    val sigs = docs.select($"doc_id", Dedup.simhashMd5($"text").as("sh"))
+      .as[(Long, String)].collect().toMap
     assert(sigs(1L) == sigs(4L)) // identical text
     assert(sigs(1L) == sigs(5L)) // normalization invariant
-    assert(java.lang.Long.bitCount(sigs(1L) ^ sigs(2L)) <= 12)
-    assert(java.lang.Long.bitCount(sigs(1L) ^ sigs(3L)) > 12)
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxDistance = 3)
+    def dist(a: Long, b: Long): Int = spark.range(1)
+      .select(Dedup.hammingBits(lit(sigs(a)), lit(sigs(b))))
+      .head().getInt(0)
+    assert(dist(1L, 2L) <= 12, dist(1L, 2L))
+    assert(dist(1L, 3L) > 12, dist(1L, 3L))
+    val pairs = Dedup.simhashPairsMd5(docs, "doc_id", "text",
+      maxDistance = 3)
     assert(pairs.filter($"id1" === 1 && $"id2" === 4).count() == 1)
   }
 
@@ -874,20 +878,10 @@ class PipelineSpec extends SparkSpec {
     val capped = Decontam.contamination(train, "id", test, "id", "text",
       n = 3, minCommon = 1, maxShingleFreq = 0).count()
     assert(capped == 0L)
-    // the bloom pre-filter is result-identical (no false negatives)
-    // and plans a scan-local might_contain below the join
-    val bloomed = Decontam.contamination(train, "id", test, "id",
-      "text", n = 3, minCommon = 2, bloomPreFilter = true)
-    val bgot = bloomed.collect().map(r => (r.getAs[Long]("test_id"),
-      r.getAs[Long]("train_id"), r.getAs[Long]("n_common"))).toSet
-    assert(bgot == got, s"bloom path diverged: $bgot vs $got")
-    assert(bloomed.queryExecution.executedPlan.toString
-      .contains("might_contain"),
-      "expected the bloom predicate in the physical plan")
-    // empty eval side: bloom aggregate yields null -> nothing matches
+    // empty eval side: nothing matches
     val none = Decontam.contamination(train, "id",
       test.filter(col("id") < 0), "id", "text",
-      n = 3, minCommon = 1, bloomPreFilter = true).count()
+      n = 3, minCommon = 1).count()
     assert(none == 0L)
     // RELATIVE cap: "alpha beta gamma" lands in 2/4 train docs (50%);
     // frac=0.25 → cap ceil(0.25·4)=1 drops it, demoting pair (1,10)
@@ -953,7 +947,7 @@ class PipelineSpec extends SparkSpec {
       (2L, "shared prefix body of text AAA"),
       (3L, "something else entirely different"))
       .toDF("id", "text")
-      .select(TextFns.fingerprint($"text")).as[Long].collect()
+      .select(TextFns.fingerprintMd5($"text")).as[String].collect()
     assert(fp(0) == fp(1) && fp(0) != fp(2))
   }
 
