@@ -18,10 +18,12 @@ object Bench {
     System.gc()
   }
 
-  /** One Spark job a gate ran: its id, its wall ms, and its trigger
-    * call site (the name of its first stage).
+  /** One Spark job a gate ran: its id, its wall ms, its trigger call
+    * site (the name of its first stage), and the tasks its stages ran
+    * (a skipped stage runs none).
     */
-  private[graft] final case class Job(id: Int, ms: Long, site: String)
+  private[graft] final case class Job(id: Int, ms: Long, site: String,
+      tasks: Int)
 
   /** One pass over a set of gates: the wall seconds of every gate that
     * completed, the error of every gate that threw, and the jobs every
@@ -31,35 +33,55 @@ object Bench {
     */
   private[graft] final case class Pass(
       times: Map[String, Double], failed: Map[String, String],
-      jobs: Map[String, Seq[Job]], compiles: Map[String, Long])
+      jobs: Map[String, Seq[Job]], compiles: Map[String, Long]) {
+    /** The tasks of every job `gate` ran. */
+    def tasks(gate: String): Long = jobs(gate).map(_.tasks.toLong).sum
+  }
 
   /** Prefix of the job description [[runPass]] gives a gate's jobs. */
   private val Label = "graft:"
 
   /** Collects the finished jobs whose description carries a graft
-    * label, by label. AQE stage jobs and broadcast jobs run with the
-    * submitting thread's local properties, so they carry the label of
-    * the gate that caused them.
+    * label, by label, with the tasks of the stages each one ran. AQE
+    * stage jobs and broadcast jobs run with the submitting thread's
+    * local properties, so they carry the label of the gate that caused
+    * them.
     */
   private final class JobLedger
       extends org.apache.spark.scheduler.SparkListener {
-    private val started = collection.mutable.Map[Int, (String, Long, String)]()
+    private final class Open(val label: String, val t0: Long,
+        val site: String, var tasks: Int)
+    private val started = collection.mutable.Map[Int, Open]()
+    // stage id → the labelled job that submitted it first; a stage
+    // another job reuses completes once, so its tasks count once
+    private val stageJob = collection.mutable.Map[Int, Int]()
     private val done = collection.mutable.Map[String, Vector[Job]]()
     override def onJobStart(
         js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
       Option(js.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description")))
         .filter(_.startsWith(Label)).foreach { label =>
-          synchronized { started(js.jobId) = (label, js.time,
-            js.stageInfos.headOption.map(_.name).getOrElse("?")) }
+          synchronized {
+            started(js.jobId) = new Open(label, js.time,
+              js.stageInfos.headOption.map(_.name).getOrElse("?"), 0)
+            js.stageIds.foreach(stageJob.getOrElseUpdate(_, js.jobId))
+          }
         }
+    override def onStageCompleted(
+        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+      synchronized {
+        stageJob.remove(sc.stageInfo.stageId).flatMap(started.get)
+          .foreach(_.tasks += sc.stageInfo.numTasks)
+      }
     override def onJobEnd(
         je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
       synchronized {
-        started.remove(je.jobId).foreach { case (label, t0, site) =>
-          done(label) = done.getOrElse(label, Vector.empty) :+
-            Job(je.jobId, je.time - t0, site)
+        started.remove(je.jobId).foreach { o =>
+          done(o.label) = done.getOrElse(o.label, Vector.empty) :+
+            Job(je.jobId, je.time - o.t0, o.site, o.tasks)
         }
+        // the stages the job skipped never complete
+        stageJob.filterInPlace((_, j) => j != je.jobId)
       }
     /** Removes and returns the jobs that finished under `label`. */
     def take(label: String): Seq[Job] =
@@ -235,13 +257,13 @@ object Bench {
     failed.toSeq.sortBy(_._1)
       .map { case (n, e) => jstr(n) + ":" + jstr(e) }.mkString("{", ",", "}")
 
-  /** Count and summed wall seconds of each gate's jobs, and the
-    * classes codegen compiled for it.
+  /** Count, summed wall seconds and summed tasks of each gate's jobs,
+    * and the classes codegen compiled for it.
     */
   private def jobsJs(p: Pass) =
     p.jobs.toSeq.sortBy(_._1).map { case (n, j) =>
       jstr(n) + s""":{"n":${j.size},"s":${r3(j.map(_.ms).sum / 1000.0)},""" +
-        s""""compiles":${p.compiles(n)}}"""
+        s""""tasks":${p.tasks(n)},"compiles":${p.compiles(n)}}"""
     }.mkString("{", ",", "}")
 
   /** Totals of one pass's times: all gates, the core set, the rest. */
@@ -266,7 +288,8 @@ object Bench {
 
   /** The summary of a repeat run: per gate, the median, min and max
     * wall seconds over the rounds it completed, each round's seconds,
-    * job count and compile count, and every gate that threw.
+    * job count, task count and compile count, and every gate that
+    * threw.
     */
   private[graft] def repeatRecord(sfDir: String, rounds: Seq[Pass],
       failed: Map[String, String]): String = {
@@ -277,6 +300,7 @@ object Bench {
       jstr(n) + s""":{"median":${r3(median(v))},"min":${r3(v.min)},""" +
         s""""max":${r3(v.max)},"iters":[${v.map(r3).mkString(",")}],""" +
         s""""jobs":[${done.map(_.jobs(n).size).mkString(",")}],""" +
+        s""""tasks":[${done.map(_.tasks(n)).mkString(",")}],""" +
         s""""compiles":[${done.map(_.compiles(n)).mkString(",")}]}"""
     }.mkString("{", ",", "}")
     s"""{"metric":"repeat","sf":${jstr(sfDir)},"n_iters":${rounds.size},""" +
@@ -322,8 +346,8 @@ object Bench {
 
   /** Repeat mode: the battery's warm-up, then `iters` interleaved
     * rounds of the full pass over the named gates. Prints one line per
-    * observation and one per job, then the summary JSON line, which it
-    * also writes to BENCH_REPEAT.json.
+    * observation and one per job (its ms, tasks and first stage), then
+    * the summary JSON line, which it also writes to BENCH_REPEAT.json.
     */
   private def repeatMain(sfDir: String, names: Seq[String],
       iters: Int): Boolean = {
@@ -339,9 +363,11 @@ object Bench {
         val jobs = p.jobs(n)
         val wall = p.times.get(n).map(t => f"$t%8.3f s").getOrElse("  FAILED")
         println(f"[repeat] iter=${i + 1} $n%-22s $wall jobs=${jobs.size}%-3d " +
-          f"job_s=${jobs.map(_.ms).sum / 1000.0}%.3f compiles=${p.compiles(n)}")
+          f"job_s=${jobs.map(_.ms).sum / 1000.0}%.3f tasks=${p.tasks(n)} " +
+          f"compiles=${p.compiles(n)}")
         jobs.sortBy(_.id).foreach(j =>
-          println(f"[repeat]   $n job=${j.id}%-4d ${j.ms}%6d ms  ${j.site}"))
+          println(f"[repeat]   $n job=${j.id}%-4d ${j.ms}%6d ms " +
+            f"${j.tasks}%4d tasks  ${j.site}"))
       }
     }
     // a gate that threw in several rounds is listed once, with its

@@ -37,6 +37,16 @@ import org.apache.spark.sql.graftglue.ColumnGlue
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions \
   *     --conf spark.sql.codegen.cache.maxEntries=2000 ...
   * }}}
+  *
+  * Such a session should also let AQE coalesce the final shuffle of a
+  * cached plan ([[graft.Sessions.StagedCoalesce]]), or every frame an
+  * operator stages keeps `coalescePartitions.initialPartitionNum`
+  * partitions however small it is. That conf is a runtime one:
+  *
+  * {{{
+  *   spark.conf.set(
+  *     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+  * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

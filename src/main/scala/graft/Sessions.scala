@@ -82,19 +82,48 @@ object Sessions {
   val CodegenCacheEntries = 2000
 
   /** The builder every graft session starts from: `local[cores]`, UTC,
-    * no UI, and the static SQL confs. A static conf is read once per
-    * JVM: `CodeGenerator` sizes its class cache from the active conf
-    * when it first initializes, so the cache size has to be on the
-    * builder before the JVM's first query; setting it on a running
-    * session is rejected, and a later session's value is ignored.
+    * no UI, the static SQL confs, and [[StagedCoalesce]]. A static conf
+    * is read once per JVM: `CodeGenerator` sizes its class cache from
+    * the active conf when it first initializes, so the cache size has
+    * to be on the builder before the JVM's first query; setting it on
+    * a running session is rejected, and a later session's value is
+    * ignored.
     */
   private[graft] def builder(cores: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheEntries.toString)
+      .config(StagedCoalesce, "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+
+  /** Lets AQE coalesce the final shuffle of a cached plan, so a
+    * [[graft.core.Caches.stage]] frame is sized by its data. Spark
+    * plans every cached query with this off (its default), so a staged
+    * frame whose plan ends in a shuffle kept all
+    * `coalescePartitions.initialPartitionNum` (8 × slots) partitions,
+    * and every join against it and every checkpoint cut from it
+    * inherited that count. A traced rmbench `curate_iterative` pass
+    * at one slot on a 4-core host ran 53 stages and 227 tasks, the
+    * largest stage 16; with this conf and the pinned edge layouts
+    * ([[graft.core.Caches.layoutPartitions]]) it runs 47 stages and 51
+    * tasks, the largest 2, and the op's median over ten interleaved
+    * untraced pairs fell from 3.97 to 2.47 s.
+    *
+    * The conf alone is not enough: an edge frame cached by
+    * `repartition(col)` then coalesces too, its hash layout no longer
+    * has the join's partition count, and under sort-merge join every
+    * round re-shuffles it. The iterative operators therefore pin
+    * their edge layouts to `spark.sql.shuffle.partitions` by number,
+    * which AQE never coalesces. That count is read through
+    * `defaultNumShufflePartitions`: under AQE `numShufflePartitions`
+    * returns `initialPartitionNum`, and a pass whose layouts used it
+    * still ran 212 tasks at one slot. A session configured only through
+    * `spark.sql.extensions` ([[GraftExtensions]]) should set this conf
+    * itself; it is a runtime conf, so `spark.conf.set` works.
+    */
+  val StagedCoalesce = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
   /** Starts (or joins) the builder's session, quiets its logs and
     * installs [[rules]].

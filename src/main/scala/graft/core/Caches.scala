@@ -30,8 +30,29 @@ import org.apache.spark.storage.StorageLevel
   * is truncated — the blocks are the only copy), so `releaseAll` is a
   * between-queries operation: call it when frames returned by earlier
   * queries are abandoned, not while one is still in use.
+  *
+  * A staged frame is sized by its data: graft sessions let AQE
+  * coalesce a cached plan's final shuffle ([[graft.Sessions.
+  * StagedCoalesce]]), so a frame whose plan ends in a small shuffle is
+  * cached in a few partitions, not in 8 × slots. A frame that must
+  * keep a hash layout for later joins is repartitioned by number,
+  * `repartition(layoutPartitions(spark), key)`, which AQE leaves as is.
   */
 object Caches {
+
+  /** Partition count of a staged frame pinned to a hash layout:
+    * `spark.sql.shuffle.partitions`. A join whose other side needs a
+    * shuffle reuses the cached side's layout only when its partition
+    * count is at least this (Spark's `EnsureRequirements`), so a
+    * smaller count re-shuffles the cached side every round, and a
+    * larger one runs that many tasks per round. Read through
+    * `defaultNumShufflePartitions`: under AQE `numShufflePartitions`
+    * returns `coalescePartitions.initialPartitionNum` (8 × slots in
+    * graft sessions), and a layout of that size runs that many tasks
+    * in every per-round join.
+    */
+  def layoutPartitions(spark: SparkSession): Int =
+    spark.sessionState.conf.defaultNumShufflePartitions
 
   private val live =
     new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()

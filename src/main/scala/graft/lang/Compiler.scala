@@ -170,7 +170,7 @@ object Compiler {
 
     case Filter(src, pred) => filterStep(compile(src, env), pred, env)
 
-    case Parens(b) => compile(b, env)
+    case Parens(b) => splice(compile(b, env))
 
     case FnCall("$merge", Seq(ArrLit(objs))) if objs.nonEmpty && {
       // static struct merge applies when every argument compiles to a
@@ -298,9 +298,9 @@ object Compiler {
           case CTab(df) if n == "" => tabToDoc(df)
           case other => other
         }
-        e2 + (n -> bound)
+        e2 + (n -> splice(bound))
       }
-      compile(result, env2)
+      splice(compile(result, env2))
 
     case q0: QueryDef =>
       val spark = sparkCtx.value
@@ -1166,6 +1166,16 @@ object Compiler {
     case CD(c, dt, KNested(_)) =>
       CD(try_element_at(flatten(c), lit(1)), dt, KScalar)
     case _ => fail("expected a value, got a function")
+  }
+
+  /** A value leaving a group or a binding: a per-parent sequence is
+    * spliced into one, as finalization does, so a later `[i]` indexes
+    * the whole sequence (`($v := a.b[0]; $v[0])` is the first hit, not
+    * every parent's); every other value is unchanged.
+    */
+  private def splice(cv: CV): CV = cv match {
+    case CD(c, dt, KNested(false)) => CD(flatten(c), dt, KSeq)
+    case other => other
   }
 
   /** Render a CV as one column for embedding in structs/arrays:

@@ -154,11 +154,13 @@ object Parser {
 
     /** after '(': code block (with ; or :=) vs parenthesized expr;
       * the reference resolves the same ambiguity in rewrite-primary
-      * (`rewrite.cljc:63-95`).
+      * (`rewrite.cljc:63-95`). A group that a predicate follows keeps
+      * its boundary as [[Parens]]: `(a.b[0])[0]` indexes the whole
+      * sequence, where `a.b[0][0]` indexes each parent's.
       */
-    private def parenOrBlock(): Expr = {
-      val body = parenOrBlockBody()
-      body
+    private def parenOrBlock(): Expr = parenOrBlockBody() match {
+      case e if !e.isInstanceOf[Block] && peekOp("[") => Parens(e)
+      case e => e
     }
 
     private def parenOrBlockBody(): Expr = {

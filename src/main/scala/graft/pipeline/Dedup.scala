@@ -428,14 +428,19 @@ object Dedup {
     // satisfies the join's distribution; only the label frame moves
     // per round). At 100 TB the edge list is the big side of the
     // round — this is the difference between re-shuffling it every
-    // round and never (optimization round 17, guide §2.4).
+    // round and never (optimization round 17, guide §2.4). The count
+    // is pinned to spark.sql.shuffle.partitions (Caches.
+    // layoutPartitions): AQE coalesces staged frames, but never a
+    // by-number repartition, so the layout keeps the join's count
+    // instead of 8 × slots.
     val edges = graft.core.Caches.stage(pairs
       .select(explode(array(
         struct(col("id1"), col("id2")),
         struct(col("id2").as("id1"), col("id1").as("id2")))).as("e"))
       .select(col("e.id1").as("id1"), col("e.id2").as("id2"))
       .distinct()
-      .repartition(col("id2")))
+      .repartition(graft.core.Caches.layoutPartitions(pairs.sparkSession),
+        col("id2")))
     // Iterate ONLY over edge-touched nodes: near-dup graphs are
     // sparse (most of the corpus has no duplicate), so the rounds
     // shuffle |V(edges)| rows, not |corpus| — at 100 TB that is the

@@ -39,26 +39,31 @@ object LinkGraph {
     * or the last join+aggregate recomputes per action. */
   def pagerank(edges: DataFrame, iters: Int, dampPct: Int = 85,
       scale: Long = 1000000000000L): DataFrame = {
-    val spark = edges.sparkSession
     val e0 = edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w"))
     // bake the out-weight denominator into the staged edge frame once
     // (a window partitioned by src) so each iteration is exactly one
-    // join + one aggregation, not two joins. NB the window ALREADY
-    // leaves the cache hash(src)-partitioned — exactly the layout the
-    // per-round contrib join probes — so no explicit repartition is
-    // needed here, unlike dupGroups/labelProp whose edge frames
-    // arrive unpartitioned (measured round 18, OPTIMIZATION_r18.md:
-    // at sf1 under forced SMJ, per-round shuffle bytes identical with
-    // and without an explicit repartition(src))
-    val e = graft.core.Caches.stage(e0.withColumn("out_w",
-      sum("w").over(org.apache.spark.sql.expressions.Window
-        .partitionBy("src"))))
+    // join + one aggregation, not two joins. The frame is staged
+    // hash(src)-partitioned — the layout the per-round contrib join
+    // probes, so that join never re-shuffles the edge side (the
+    // dupGroups edge-layout trick, r17). The count is pinned to
+    // spark.sql.shuffle.partitions (Caches.layoutPartitions) by an
+    // explicit repartition BEFORE the window, which the window's
+    // distribution then reuses with no exchange of its own: left to
+    // the window's own shuffle, the layout would either keep 8 × slots
+    // partitions or be coalesced by AQE below the join's count.
+    val e = graft.core.Caches.stage(e0
+      .repartition(graft.core.Caches.layoutPartitions(edges.sparkSession),
+        col("src"))
+      .withColumn("out_w",
+        sum("w").over(org.apache.spark.sql.expressions.Window
+          .partitionBy("src"))))
     // materialize the node set once — it re-enters the plan every
     // pass (the rank rebuild join), and without the checkpoint each
-    // pass would redo the union+distinct over the edge frame
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().transform(graft.core.Checkpoints.cut)
+    // pass would redo the distinct over the edge frame; both endpoints
+    // come out of one scan of the cache, not a union of two
+    val nodes = e.select(explode(array(col("src"), col("dst"))).as("id"))
+      .distinct().transform(graft.core.Checkpoints.cut)
     // |nodes| is one count over the aggregated graph frame (not the
     // corpus); it sizes the uniform prior baked into the plan.
     val n = nodes.count()
@@ -168,16 +173,25 @@ object LinkGraph {
     */
   def labelProp(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"need iters >= 1, got $iters")
-    val e = edges.select(col("id1").as("a"), col("id2").as("b"))
-      .filter(col("a") =!= col("b"))
+    // symmetrized in ONE pass over the edge plan, as in dupGroups: a
+    // union of two selects would run the plan behind `edges` (a pair
+    // generation, in p_lpa) once per branch, in twice the tasks.
     // staged REPARTITIONED BY b: every round's neighbor join probes
     // sym on b, so materializing the cache in that layout removes the
     // per-round exchange of the edge frame — the big side of the
     // round at corpus scale (optimization round 17, guide §2.4; the
-    // dupGroups edge-layout trick)
-    val sym = graft.core.Caches.stage(
-      e.union(e.select(col("b").as("a"), col("a").as("b"))).distinct()
-        .repartition(col("b")))
+    // dupGroups edge-layout trick), in spark.sql.shuffle.partitions
+    // partitions (Caches.layoutPartitions; a by-number repartition
+    // AQE never coalesces)
+    val sym = graft.core.Caches.stage(edges
+      .filter(col("id1") =!= col("id2"))
+      .select(explode(array(
+        struct(col("id1").as("a"), col("id2").as("b")),
+        struct(col("id2").as("a"), col("id1").as("b")))).as("e"))
+      .select(col("e.a").as("a"), col("e.b").as("b"))
+      .distinct()
+      .repartition(graft.core.Caches.layoutPartitions(edges.sparkSession),
+        col("b")))
     var labels = sym.select(col("a").as("id")).distinct()
       .withColumn("label", col("id")).transform(graft.core.Checkpoints.cut)
     for (i <- 1 to iters) {

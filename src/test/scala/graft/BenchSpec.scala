@@ -141,6 +141,26 @@ class BenchSpec extends SparkSpec {
     assert((local \ "jobs" \ "g" \ "compiles").extract[Long] == first)
   }
 
+  test("each gate's tasks are counted, per job and in both records") {
+    // three scan tasks, then two tasks after a by-number repartition,
+    // which AQE leaves uncoalesced: under AQE the shuffle's map stage
+    // and the result stage run as two jobs
+    val gate: (SparkSession, String) => DataFrame = (s, _) =>
+      s.range(0, 30, 1, 3).repartition(2, col("id")).toDF()
+    val rounds = Bench.repeat(spark, "unused", Seq("g" -> gate), 2, noCleanup)
+    rounds.foreach { p =>
+      assert(p.tasks("g") == 5)
+      assert(p.jobs("g").map(_.tasks).sorted == Seq(2, 3))
+    }
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val rep = org.json4s.jackson.JsonMethods.parse(
+      Bench.repeatRecord("unused", rounds, Map.empty))
+    assert((rep \ "queries" \ "g" \ "tasks").extract[Seq[Long]] == Seq(5L, 5L))
+    val local = org.json4s.jackson.JsonMethods.parse(
+      Bench.localRecord(rounds.head, rounds.head, Map.empty, "{}", "sf"))
+    assert((local \ "jobs" \ "g" \ "tasks").extract[Long] == 5L)
+  }
+
   test("the record of a pass parses when a gate's error spans lines") {
     val msg = "first line\n\tsecond \"quoted\" \\ line\r\u0001"
     val pass = Bench.runPass(spark, "unused", Seq[(String,

@@ -70,6 +70,15 @@ class RMSpec extends SparkSpec {
     run("[{'nums' : [1, 2]}, {'nums' : [3, 4]}].nums[1]", Seq(2L, 4L))
   }
 
+  test("a group or a binding splices the per-parent index before the next one") {
+    val os = "{'os': [{'q': [1, 2]}, {'q': [3, 4]}]}"
+    run(s"($os.os.q[0])[0]", 1L)
+    run(s"($$v := $os.os.q[0]; $$v[0])", 1L)
+    // without the boundary both predicates index each parent
+    run(s"$os.os.q[0][0]", Seq(1L, 3L))
+    run(s"$os.os.q[0].$$[0]", 1L)
+  }
+
   test("value-step: ['a','b','c'].[1] = [[1],[1],[1]] (builtin_test:331)") {
     run("['a', 'b', 'c'].[1]", Seq(Seq(1L), Seq(1L), Seq(1L)))
   }
