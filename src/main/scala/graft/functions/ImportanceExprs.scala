@@ -26,19 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
 object ImportanceNative {
 
   /** Bucket of one gram: 60-bit md5 hex fold
-    * (`conv(substring(md5(g),1,15),16,10)`, i.e. the first 7 digest
-    * bytes plus the high nibble of byte 7) mod `dim` — mirrors
-    * `Importance.bucketOf`.
+    * (`conv(substring(md5(g),1,15),16,10)`, [[Md5Fold.fold60]]) mod
+    * `dim` — mirrors `Importance.bucketOf`.
     */
   private def bucket(md: java.security.MessageDigest, gram: String,
       dim: Int): Int = {
     md.reset()
-    val d = md.digest(gram.getBytes("UTF-8"))
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xFFL); i += 1 }
-    v = (v << 4) | ((d(7) >> 4) & 0xFL)
-    (v % dim).toInt
+    (Md5Fold.fold60(md.digest(gram.getBytes("UTF-8"))) % dim).toInt
   }
 
   /** Visit every gram OCCURRENCE (not distinct — frequency matters
@@ -101,11 +95,7 @@ object ImportanceNative {
         j += 1
       }
       md.reset()
-      val d = md.digest(sb.toString.getBytes("UTF-8"))
-      var v = 0L
-      var k = 0
-      while (k < 7) { v = (v << 8) | (d(k) & 0xFFL); k += 1 }
-      out(i) = (v << 4) | ((d(7) >> 4) & 0xFL)
+      out(i) = Md5Fold.fold60(md.digest(sb.toString.getBytes("UTF-8")))
       i += 1
     }
     new GenericArrayData(out)

@@ -56,16 +56,10 @@ object MinhashNative {
   }
 
   /** 60-bit md5-derived shingle hash mod 2^31-1 — Dedup.shingleHash
-    * (`conv(substring(md5(s),1,15),16,10) % P`): the first 15 hex
-    * digits are the first 7 bytes plus the high nibble of byte 7.
+    * (`conv(substring(md5(s),1,15),16,10) % P`, [[Md5Fold.fold60]]).
     */
-  def hash60(bytes: Array[Byte]): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (bytes(i) & 0xFFL); i += 1 }
-    v = (v << 4) | ((bytes(7) >> 4) & 0xFL)
-    v % 2147483647L
-  }
+  def hash60(bytes: Array[Byte]): Long =
+    Md5Fold.fold60(bytes) % 2147483647L
 
   /** (band, md5-hex bucket) pairs of the k-permutation signature —
     * the fused shingles → hashes → signature → bandsMd5 pipeline.

@@ -70,12 +70,17 @@ object QueryBridge {
       case _ => Compiler.fail("query data argument must be a value")
     }
     // positional source naming: patterns with explicit $DB names bind
-    // in order of first appearance; unnamed patterns use the first arg
+    // in order of first appearance; unnamed patterns use the first arg.
+    // "default" is bound only when some pattern is unnamed: every
+    // source is a frame the planner inspects (a persisted shred's
+    // sidecar read, listings and schema job), so an alias nothing
+    // reads would inspect the first frame a second time.
     val named = q.patterns.flatMap(_.src).distinct
-    val sources: Map[String, DataFrame] =
-      ((if (named.isEmpty) Map.empty[String, DataFrame]
-        else named.zip(dfs).toMap) ++ Map("default" -> dfs.head))
-        .map { case (n, df) => n -> Shred.dbFor(df) }
+    val unnamed =
+      if (q.patterns.exists(_.src.isEmpty)) Map("default" -> dfs.head)
+      else Map.empty[String, DataFrame]
+    val sources: Map[String, DataFrame] = (named.zip(dfs).toMap ++ unnamed)
+      .map { case (n, df) => n -> Shred.dbFor(df) }
     val pats = q.patterns.map { p =>
       val v = p.v match {
         case QvarRef(n) => V(n)

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.{Md5Fold60, Sum60}
 
 /** Deterministic sampling/mixing operators for training-data curation.
   *
@@ -179,32 +180,27 @@ object Sampling {
 
   /** Shard manifest: per hash-assigned shard, the row count, content
     * size, and an ORDER-INDEPENDENT content fingerprint (the sum of
-    * per-row 60-bit content hashes in DECIMAL, folded mod 2^60) — the
+    * per-row 60-bit md5 folds mod 2^60, graft.functions.Sum60) — the
     * frame a consumer diffs against yesterday's manifest to certify a
     * delivered dataset without re-reading it. Everything is one
     * partial-agg scan; the fingerprint survives repartitioning and
     * row reordering by construction, so two manifests match iff the
-    * shard contents match.
+    * shard contents match. A shard whose every row hash is null (null
+    * id or text) has a null fingerprint, as SQL `sum` gives.
     */
   def shardManifest(df: DataFrame, idCol: String, textCol: String,
       shards: Int, seed: Int = 42): DataFrame = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
-    val h60 = (c: Column) =>
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
     df.select(
-        pmod(h60(concat(col(idCol).cast("string"), lit(":" + seed))),
+        pmod(Md5Fold60(concat(col(idCol).cast("string"), lit(":" + seed))),
           lit(shards.toLong)).as("shard"),
         length(col(textCol)).cast("long").as("len"),
-        h60(concat(col(idCol).cast("string"), lit("|"),
+        Md5Fold60(concat(col(idCol).cast("string"), lit("|"),
           md5(col(textCol)))).as("fp"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum("len").as("sum_chars"),
-        sum(col("fp").cast("decimal(38,0)")).as("__fpsum"))
-      .withColumn("fingerprint",
-        expr("CAST(__fpsum % 1152921504606846976 AS BIGINT)"))
-      .select(col("shard"), col("n_docs"), col("sum_chars"),
-        col("fingerprint"))
+        when(count(col("fp")) > 0, Sum60(col("fp"))).as("fingerprint"))
   }
 
   /** Certification diff of two manifests (shape of [[shardManifest]]):

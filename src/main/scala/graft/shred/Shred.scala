@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.ColumnGlue
 import org.apache.spark.sql.types._
+import graft.functions.{Md5Fold60, Sum60}
 
 /** Document ⇄ EAV shredding (SURVEY.md §1.2, §2.8).
   *
@@ -348,25 +349,31 @@ object Shred {
       idUnique: Option[Boolean] = None,
       docFp: Option[Long] = None, tripleFp: Option[Long] = None)
 
-  /** Order-independent content fingerprint of a frame, as an
-    * aggregate column: 60-bit md5 of each row's canonical JSON, summed
-    * mod 2^60 (the [[graft.pipeline.Sampling.shardManifest]]
-    * certification shape). Row order and file layout don't matter —
-    * content does. [[shredWrite]] observes it in flight and
-    * [[auditPersisted]] recomputes it from disk, so both sides share
-    * this one definition.
+  /** A frame's per-row content hash: the 60-bit md5 fold of the
+    * row's canonical JSON (graft.functions.Md5Fold60).
     */
-  private def fpAgg(df: DataFrame): Column = {
-    val rowJson = to_json(struct(df.columns.map(c =>
-      col(quoteIdent(c))).toSeq: _*))
-    val h60 = conv(substring(md5(rowJson), 1, 15), 16, 10)
-      .cast("decimal(38,0)")
-    (coalesce(sum(h60), lit(0).cast("decimal(38,0)"))
-      % lit(1152921504606846976L)).cast("long").as("fp")
-  }
+  private def rowHash(df: DataFrame): Column =
+    Md5Fold60(to_json(struct(df.columns.map(c =>
+      col(quoteIdent(c))).toSeq: _*)))
 
-  private def contentFp(df: DataFrame): Long =
-    df.agg(fpAgg(df)).head().getLong(0)
+  /** Order-independent content fingerprint of a frame, as an
+    * aggregate column: [[rowHash]] summed mod 2^60 (Sum60; the
+    * [[graft.pipeline.Sampling.shardManifest]] certification shape).
+    * Row order and file layout don't matter — content does.
+    * [[shredWrite]] observes it in flight and [[auditPersisted]]
+    * recomputes it from disk, so both sides share this one definition.
+    *
+    * The fold reads the first 15 hex digits of the md5 straight from
+    * the digest bytes (7 bytes and a nibble), so each row hash is the
+    * long the old `conv(substring(md5(json), 1, 15), 16, 10)` string
+    * chain produced, and the sum of non-negative longs mod 2^60 is the
+    * old `sum(h.cast("decimal(38,0)")) % 2^60`, empty frame 0
+    * included. Fingerprints in sidecars written before the fold
+    * therefore still match. The sum needs no decimal: the running
+    * residue and a hash are both below 2^60, so their long sum is
+    * below 2^61 and one mask takes it back into range.
+    */
+  private def fpAgg(df: DataFrame): Column = Sum60(rowHash(df)).as("fp")
 
   /** Backtick-quoted column name (exact resolution — a dotted name
     * must not be parsed as a struct path). Inner backticks are doubled
@@ -416,7 +423,16 @@ object Shred {
     * change, never edited in place.
     */
   def shredWrite(spark: org.apache.spark.sql.SparkSession,
-      docPath: String, idCol: Option[String], outPath: String): Unit = {
+      docPath: String, idCol: Option[String], outPath: String): Unit =
+    shredWrite(spark, docPath, idCol, outPath, () => ())
+
+  /** [[shredWrite]] that runs `afterProof` between the uniqueness
+    * proof and the second listing of the documents, where a spec can
+    * rewrite them.
+    */
+  private[shred] def shredWrite(spark: org.apache.spark.sql.SparkSession,
+      docPath: String, idCol: Option[String], outPath: String,
+      afterProof: () => Unit): Unit = {
     val docs = spark.read.parquet(docPath)
     val docFiles = listDataFiles(spark, docPath)
     // Both content fingerprints ride the write action itself as
@@ -442,7 +458,14 @@ object Shred {
       .write.mode("overwrite").partitionBy("a").parquet(outPath)
     val dFp = obsDocs.get("fp").asInstanceOf[Long]
     val tFp = obsTrip.get("fp").asInstanceOf[Long]
-    val unique = idCol.map(c => idUniqueAll(Seq(docs -> c)).head)
+    val proof = idCol.map(c => idUniqueAll(Seq(docs -> c)).head)
+    afterProof()
+    // the proof is a second read of the documents: if their files
+    // changed anywhere between the first listing and now, the verdict
+    // may describe other bytes than docFiles and the fingerprints do,
+    // so none is recorded
+    val unique =
+      if (listDataFiles(spark, docPath) == docFiles) proof else None
     val meta = ShredMeta(
       new org.apache.hadoop.fs.Path(docPath).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
@@ -459,19 +482,22 @@ object Shred {
     out.close()
   }
 
+  /** The sidecar under `root`; None when it is missing, unreadable
+    * (a checksum error, say) or not a sidecar.
+    */
   private def readMeta(spark: org.apache.spark.sql.SparkSession,
       root: org.apache.hadoop.fs.Path): Option[ShredMeta] = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mp = new org.apache.hadoop.fs.Path(root, MetaFile)
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
     if (!fs.exists(mp)) None
-    else {
+    else scala.util.Try {
       val in = fs.open(mp)
-      val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      in.close()
-      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-      scala.util.Try(org.json4s.jackson.Serialization
-        .read[ShredMeta](txt)).toOption
-    }
+      val txt =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      org.json4s.jackson.Serialization.read[ShredMeta](txt)
+    }.toOption
   }
 
   /** CONTENT audit of a [[shredWrite]] artifact: recompute both
@@ -485,25 +511,36 @@ object Shred {
     * per-query gate stays the O(#files) driver-side listing. False
     * when the sidecar is missing, pre-fingerprint, or either side's
     * content changed.
+    *
+    * Both full reads are ONE action: each side is projected to
+    * (side, [[rowHash]]), the two are unioned, and the two per-side
+    * sums are observed on a noop write of the union (no exchange, so
+    * one job). The documents' schema is still read from their files,
+    * which is one more small job: reading them with the schema stored
+    * at write time would drop a column added since, and the audit
+    * would pass content it never hashed.
     */
   def auditPersisted(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    readMeta(spark, root) match {
-      case Some(meta) =>
-        (meta.docFp, meta.tripleFp) match {
-          case (Some(dFp), Some(tFp)) =>
-            // an unreadable (hard-corrupted) side is a failed audit,
-            // not a crash — the caller asked "is this delivery intact"
-            scala.util.Try(
-              contentFp(spark.read.parquet(meta.docPath)) == dFp &&
-                contentFp(openShred(spark, path)) == tFp
-            ).getOrElse(false)
-          case _ => false
-        }
-      case None => false
+      path: String): Boolean =
+    readMeta(spark, new org.apache.hadoop.fs.Path(path)) match {
+      case Some(ShredMeta(docPath, _, _, _, _, Some(dFp), Some(tFp))) =>
+        // an unreadable (hard-corrupted) side is a failed audit, not a
+        // crash — the caller asked "is this delivery intact"
+        scala.util.Try {
+          val sides = Seq(spark.read.parquet(docPath), openShred(spark, path))
+            .zipWithIndex.map { case (df, i) =>
+              df.select(lit(i).as("side"), rowHash(df).as("h"))
+            }.reduce(_ unionAll _)
+          def sideFp(i: Int) = Sum60(when(col("side") === i, col("h")))
+          val obs = org.apache.spark.sql.Observation("graft_audit_fp")
+          sides.observe(obs, sideFp(0).as("d"), sideFp(1).as("t"))
+            .write.format("noop").mode("overwrite").save()
+          val fps = obs.get
+          fps("d").asInstanceOf[Long] == dFp &&
+            fps("t").asInstanceOf[Long] == tFp
+        }.getOrElse(false)
+      case _ => false
     }
-  }
 
   /** Open a [[shredWrite]] artifact in canonical triple-column order
     * (partitionBy appends `a` to the raw read schema; queries and

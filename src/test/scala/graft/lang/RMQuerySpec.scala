@@ -81,6 +81,21 @@ class RMQuerySpec extends SparkSpec {
       Map("fname" -> "Peter", "lname" -> "Dee")))
   }
 
+  test("unnamed patterns bind the first argument as \"default\"") {
+    import spark.implicits._
+    val customers = Seq((7L, "north"), (8L, "south")).toDF("cid", "region")
+    def bindings(src: String) =
+      RM.queryFrame(src, spark, Map("C" -> customers)).collect()
+        .map(r => r.getAs[String]("cid") -> r.getAs[String]("r")).toSet
+    val want = Set("7" -> "north", "8" -> "south")
+    // every pattern unnamed
+    assert(bindings(
+      "query(){[?x :cid ?cid] [?x :region ?r]}($C)") == want)
+    // one named and one unnamed pattern: both read the first argument
+    assert(bindings(
+      "query(){[$C ?x :cid ?cid] [?x :region ?r]}($C)") == want)
+  }
+
   test("parameterized query (query_test:133-137)") {
     run(
       """( $qBob := query($name){[?e :name $name]}('Bob');

@@ -194,6 +194,32 @@ object KernelProps extends Properties("graft.kernels") {
     w.toSeq
   }
 
+  /** Row texts for the md5 fold: the unicode payloads, the empty
+    * string, and multi-KB rows.
+    */
+  private[props] val foldTextGen: Gen[String] = Gen.frequency(
+    6 -> payloadGen,
+    1 -> Gen.const(""),
+    2 -> payloadGen.map(s => ("{\"é中\": \"" + s + "\"}") * 400))
+
+  /** Spark's string chain, evaluated by the Catalyst interpreter. */
+  private def convChain(bytes: Array[Byte]): Long = {
+    import org.apache.spark.sql.catalyst.expressions._
+    Cast(Conv(Substring(Md5(Literal(bytes)), Literal(1), Literal(15)),
+      Literal(16), Literal(10)), org.apache.spark.sql.types.LongType)
+      .eval().asInstanceOf[Long]
+  }
+
+  property("md5 fold: kernel == conv(substring(md5(s),1,15),16,10)") =
+    forAll(foldTextGen) { s =>
+      val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val want = convChain(bytes)
+      graft.functions.Md5Fold.md5Fold60(bytes) == want &&
+        graft.functions.Md5Fold60(
+          org.apache.spark.sql.catalyst.expressions.Literal(bytes)).eval() == want &&
+        want >= 0 && want <= graft.functions.Md5Fold.Mask60
+    }
+
   property("audio fp: kernel equals driver model on unicode payloads") =
     forAll(payloadGen) { s =>
       val out = graft.functions.AudioHashNative.audioFpWords(

@@ -166,4 +166,30 @@ object ShredProps extends Properties("graft.shred") {
       if (d == d.longValue.toDouble) d.longValue.toString else d.toString
     case other => String.valueOf(other)
   }
+
+  // ---- content fingerprint: Sum60 over Md5Fold60 ------------------
+
+  private val fpRowsGen: Gen[(List[Option[String]], Int)] = for {
+    n <- Gen.choose(0, 40)
+    rows <- Gen.listOfN(n, Gen.frequency(
+      6 -> KernelProps.foldTextGen.map(Option(_)), 1 -> Gen.const(None)))
+    parts <- Gen.choose(1, 4)
+  } yield (rows, parts)
+
+  property("Sum60 of md5 folds == the decimal fold, at any partitioning") =
+    forAll(fpRowsGen) { case (rows, parts) =>
+      import spark.implicits._
+      import graft.functions.{Md5Fold60, Sum60}
+      val df = rows.toDF("s").repartition(parts)
+      val chain = conv(substring(md5(col("s")), 1, 15), 16, 10)
+      val old = (coalesce(sum(chain.cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")) % lit(1L << 60)).cast("long")
+      val r = df.agg(Sum60(Md5Fold60(col("s"))), old,
+        sum(when(Md5Fold60(col("s")) <=> chain.cast("long"), 0)
+          .otherwise(1))).head()
+      r.getLong(0) == r.getLong(1) && r.isNullAt(2) == rows.isEmpty &&
+        (rows.isEmpty || r.getLong(2) == 0L) &&
+        r.getLong(0) == df.coalesce(1).agg(Sum60(Md5Fold60(col("s"))))
+          .head().getLong(0)
+    }
 }

@@ -238,4 +238,152 @@ class ShredSpec extends SparkSpec {
     assert(Shred.unshredPersisted(opened).isDefined)
   }
 
+  /** The sidecar of a [[Shred.shredWrite]] artifact, as JSON. */
+  private def sidecar(triples: String): org.json4s.JValue =
+    org.json4s.jackson.JsonMethods.parse(new String(
+      java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(triples, "_graft_shred.json")), "UTF-8"))
+
+  /** Replaces the sidecar through the Hadoop filesystem, which keeps
+    * its checksum file in step.
+    */
+  private def writeSidecar(triples: String, meta: org.json4s.JValue): Unit = {
+    val p = new org.apache.hadoop.fs.Path(triples, "_graft_shred.json")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    out.write(org.json4s.jackson.JsonMethods.compact(meta).getBytes("UTF-8"))
+    out.close()
+  }
+
+  /** For every job `body` runs, its stages' call-site details. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftglue.ColumnGlue
+    val sc = spark.sparkContext
+    val label = s"shred-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(p =>
+            p.getProperty("spark.job.description") == label))
+          jobs.add(j.stageInfos.map(_.details).mkString("\n"))
+    }
+    ColumnGlue.drainListeners(sc)
+    sc.addSparkListener(listener)
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body
+    finally {
+      sc.setJobDescription(outer)
+      ColumnGlue.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
+
+  test("a sidecar fingerprinted by the old decimal Column form audits true") {
+    // non-ASCII text, multi-KB rows and nulls, written as 3 files
+    val base = "/tmp/graft_shred_spec_old_fp"
+    val big = "{\"é中\": \"ß\"} " * 600
+    Seq[(Long, String, java.lang.Double)]((1L, "Bob", 10.5),
+        (2L, "Zoë 中文", null), (3L, big, 1e300), (4L, "", -0.0),
+        (5L, null, 3.0))
+      .toDF("id", "name", "bal").repartition(3)
+      .write.mode("overwrite").parquet(s"$base/docs")
+    Shred.shredWrite(spark, s"$base/docs", Some("id"), s"$base/triples")
+    // the write-time fingerprints as the decimal fold computed them
+    def oldFp(df: org.apache.spark.sql.DataFrame): Long = {
+      val json = to_json(struct(df.columns.map(c =>
+        col(Shred.quoteIdent(c))).toSeq: _*))
+      val h = conv(substring(md5(json), 1, 15), 16, 10)
+        .cast("decimal(38,0)")
+      df.agg(((coalesce(sum(h), lit(0).cast("decimal(38,0)")) %
+        lit(1L << 60)).cast("long"))).head().getLong(0)
+    }
+    val dOld = oldFp(spark.read.parquet(s"$base/docs"))
+    val tOld = oldFp(Shred.openShred(spark, s"$base/triples"))
+    import org.json4s._
+    val meta = sidecar(s"$base/triples")
+    assert(meta \ "docFp" == JInt(dOld) && meta \ "tripleFp" == JInt(tOld),
+      "the native fold must write the decimal fold's fingerprints")
+    // a sidecar written by the decimal fold still audits true
+    val rewritten = meta.transformField {
+      case ("docFp", _) => ("docFp", JInt(dOld))
+      case ("tripleFp", _) => ("tripleFp", JInt(tOld))
+    }
+    writeSidecar(s"$base/triples", rewritten)
+    assert(Shred.auditPersisted(spark, s"$base/triples"))
+    // and a fingerprint one off fails it
+    writeSidecar(s"$base/triples", rewritten.transformField {
+      case ("tripleFp", _) => ("tripleFp", JInt(tOld ^ 1L))
+    })
+    assert(!Shred.auditPersisted(spark, s"$base/triples"))
+  }
+
+  test("a sidecar that fails its checksum is no sidecar, not a crash") {
+    val base = "/tmp/graft_shred_spec_bad_crc"
+    Seq((1L, "Bob"), (2L, "Alice")).toDF("id", "name")
+      .write.mode("overwrite").parquet(s"$base/docs")
+    Shred.shredWrite(spark, s"$base/docs", Some("id"), s"$base/triples")
+    // an edit that bypasses the filesystem leaves a stale .crc behind
+    val side = java.nio.file.Paths.get(s"$base/triples", "_graft_shred.json")
+    java.nio.file.Files.write(side, (new String(
+      java.nio.file.Files.readAllBytes(side), "UTF-8") + " ").getBytes("UTF-8"))
+    assert(!Shred.auditPersisted(spark, s"$base/triples"))
+    assert(Shred.unshredPersisted(
+      Shred.openShred(spark, s"$base/triples")).isEmpty)
+  }
+
+  test("auditPersisted of an intact artifact runs at most 2 jobs") {
+    val base = "/tmp/graft_shred_spec_audit_jobs"
+    Seq((1L, "Bob", 10.5), (2L, "Alice", 20.0)).toDF("id", "name", "bal")
+      .write.mode("overwrite").parquet(s"$base/docs")
+    Shred.shredWrite(spark, s"$base/docs", Some("id"), s"$base/triples")
+    var ok = false
+    val jobs = jobsOf { ok = Shred.auditPersisted(spark, s"$base/triples") }
+    assert(ok)
+    assert(jobs.size <= 2, jobs.mkString("\n---\n"))
+  }
+
+  test("a docs rewrite after the uniqueness proof records no verdict") {
+    val base = "/tmp/graft_shred_spec_relist"
+    val docs = Seq((1L, "Bob"), (2L, "Alice")).toDF("id", "name")
+    docs.write.mode("overwrite").parquet(s"$base/docs")
+    Shred.shredWrite(spark, s"$base/docs", Some("id"), s"$base/t1")
+    assert(sidecar(s"$base/t1") \ "idUnique" == org.json4s.JBool(true))
+    // duplicate ids land between the proof and the second listing:
+    // the proof saw unique ids, but not these bytes
+    Shred.shredWrite(spark, s"$base/docs", Some("id"), s"$base/t2",
+      () => Seq((1L, "Bob"), (1L, "Eve")).toDF("id", "name")
+        .write.mode("overwrite").parquet(s"$base/docs"))
+    assert(sidecar(s"$base/t2") \ "idUnique" == org.json4s.JNothing)
+    assert(Shred.unshredPersisted(
+      Shred.openShred(spark, s"$base/t2")).isEmpty)
+  }
+
+  test("queryFrame over an opened shred reads its sidecar once") {
+    // the ingest program: every pattern names its source
+    val base = "/tmp/graft_shred_spec_query_once"
+    Seq((1L, 7L, "open"), (2L, 8L, "shipped"), (3L, 7L, "open"))
+      .toDF("oid", "cid", "status")
+      .write.mode("overwrite").parquet(s"$base/docs")
+    Shred.shredWrite(spark, s"$base/docs", Some("oid"), s"$base/triples")
+    val customers = Seq((7L, "north"), (8L, "south")).toDF("cid", "region")
+    val program =
+      """( $bs := query(){[$T ?o :cid ?cid] [$T ?o :status ?st] [$T ?o :oid ?oid]
+        |                 [$X ?x :cid ?cid] [$X ?x :region ?r]}($T, $X);
+        |  $reduce($bs, express(){{'region': key(?r),
+        |    'orders': [{'oid': key(?oid), 'status': ?st}]}}) )""".stripMargin
+    val reopened = Shred.openShred(spark, s"$base/triples")
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf {
+      out = graft.lang.RM.queryFrame(program, spark,
+        Map("T" -> reopened, "X" -> customers))
+    }
+    assert(jobs.count(_.contains("Shred$.unshredPersisted")) == 1,
+      jobs.mkString("\n---\n"))
+    assert(out.count() == 2)
+  }
+
 }
