@@ -64,7 +64,7 @@ object Express {
     case XLit(x) => lit(x)
     case XArr(elem) => array(inst(elem))
     case XArrVal(q) => array(col(q))
-    case o @ XObj(fields) =>
+    case XObj(fields) =>
       if (fields.exists(_.key.isInstanceOf[KVar])) {
         map_from_entries(array(fields.map { f =>
           val KVar(q) = f.key: @unchecked
@@ -191,7 +191,6 @@ object Express {
         val nonKeyScalars = scalarFields.filterNot {
           case (n, _) => lk.exists(_._1 == n)
         }
-        val keyCols = lk.map { case (n, q) => col(q).as(q) }
         val aggExprs = nonKeyScalars.map { case (n, c) => first(c).as(s"__s_$n") }
         if (aggExprs.nonEmpty)
           groupByCols(df, gk).agg(aggExprs.head, aggExprs.tail: _*)

@@ -14,6 +14,22 @@ import org.apache.spark.sql.types._
   * digest. The first 15 hex digits are the first 7 digest bytes plus
   * the high nibble of byte 7, so the fold is a shift loop, with no
   * hex string, no base-10 string and no decimal in between.
+  *
+  * Users: [[Md5Fold60]] (Shred's content fingerprint, Sampling's
+  * split/weighted/temperatureMix/shardManifest hashes, CountMin's
+  * cells, SeenSet's first Bloom hash, TextFns' linear-quality feature
+  * buckets) and the native minhash and DSIR kernels. What still spells
+  * the chain out, and why:
+  *  - `Dedup.shingleHash` and `Importance.bucketOf`: the Column
+  *    reference forms the native kernels are checked against
+  *    (MinhashNativeSpec, ImportanceNativeSpec), so they must not
+  *    share the code under test;
+  *  - SeenSet's second Bloom hash: it reads hex digits 16..30, past
+  *    the fold;
+  *  - `Embed.hashedDocVector`: its sign reads hex digit 16 of the same
+  *    md5 as its bucket, so one md5 serves both;
+  *  - the DuckDB oracle SQL (PipelineQueries): it replays the chain in
+  *    another engine.
   */
 object Md5Fold {
 

@@ -220,69 +220,6 @@ object PqLut {
   }
 }
 
-/** Reconstruction (decode) of a PQ code array back to the
-  * concatenated codebook entries — spec-level (distortion
-  * measurement); search never materializes it.
-  */
-case class PqDecode(child: Expression, books: Array[Double], m: Int,
-    ks: Int, subDim: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val b = ctx.addReferenceObj("pqDecBooks", books, "double[]")
-    nullSafeCodeGen(ctx, ev, codes => {
-      s"""
-        |${ev.value} = graft.functions.PqDecode.compute(
-        |  $codes, $b, $m, $ks, $subDim);
-        |""".stripMargin
-    })
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    PqDecode.compute(v.asInstanceOf[ArrayData], books, m, ks, subDim)
-
-  override protected def withNewChildInternal(c: Expression): PqDecode =
-    copy(c)
-
-  override def equals(o: Any): Boolean = o match {
-    case p: PqDecode =>
-      p.child == child && p.m == m && p.ks == ks &&
-        p.subDim == subDim && java.util.Arrays.equals(p.books, books)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, Integer.valueOf(m),
-      Integer.valueOf(ks),
-      Integer.valueOf(java.util.Arrays.hashCode(books)))
-}
-
-object PqDecode {
-  def apply(codes: Column, books: Array[Array[Array[Double]]]): Column =
-    ColumnGlue.column(PqDecode(ColumnGlue.expression(codes),
-      PqCodes.flatten(books), books.length, books.head.length,
-      books.head.head.length))
-
-  def compute(codes: ArrayData, books: Array[Double], m: Int, ks: Int,
-      subDim: Int): ArrayData = {
-    val out = new Array[Any](m * subDim)
-    val n = math.min(m, codes.numElements())
-    var s = 0
-    while (s < n) {
-      val c = codes.getInt(s)
-      val boff = s * ks * subDim + c * subDim
-      var j = 0
-      while (j < subDim) {
-        out(s * subDim + j) = books(boff + j)
-        j += 1
-      }
-      s += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
 /** Residual IVF-PQ corpus encoding (Jégou et al. 2011 §IV, the FAISS
   * IVFPQ layout): assign the coarse centroid by descending dot
   * ([[CentroidRank]]'s top-1 rule — exact ties toward the larger id),

@@ -369,11 +369,6 @@ object Compiler {
       case _ => false
     }
 
-  private def asCD(cv: CV): CD = cv match {
-    case d: CD => d
-    case _ => fail("expected a data value")
-  }
-
   /** Driver-side value of a column whose tree references no input
     * row — Catalyst ANALYSIS of a one-row plan plus interpreted eval,
     * never a Spark job. None when the tree reads attributes, is
@@ -1088,14 +1083,6 @@ object Compiler {
     when(schema_of_variant(c) === "STRING",
       try_variant_get(c, "$", "string"))
       .otherwise(to_json(c))
-
-  /** `&` operand: JSONata stringifies anything — string variants as
-    * their raw text, other variants as canonical JSON.
-    */
-  private def stringSide(d: CD): Column = d.dt match {
-    case VariantType => variantText(d.col)
-    case _ => d.col
-  }
 
   /** Boxed EAV binding struct<v: canonical string, vt: type tag> →
     * native-typed value, per ROW, via the variant channel: numbers and

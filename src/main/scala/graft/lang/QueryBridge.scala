@@ -175,8 +175,8 @@ object QueryBridge {
     * dropped), minus the driver materialization.
     */
   private def typedBsets(spark: SparkSession, boxed: DataFrame,
-      hints: Map[String, Set[org.apache.spark.sql.types.DataType]] =
-        Map.empty): DataFrame = {
+      hints: Map[String, Set[org.apache.spark.sql.types.DataType]])
+      : DataFrame = {
     import org.apache.spark.sql.types._
     val cols = boxed.columns
     if (cols.isEmpty) return boxed

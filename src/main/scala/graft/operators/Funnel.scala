@@ -52,19 +52,6 @@ object Funnel {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Step-level funnel summary from [[funnel]]'s per-user frame: one
-    * row per step with the user count whose chain reached at least
-    * that step — the conversion table. Tiny (L rows).
-    */
-  def funnelSummary(perUser: DataFrame, nSteps: Int): DataFrame = {
-    require(nSteps >= 1, "need at least one step")
-    perUser.select(explode(sequence(lit(1), lit(nSteps))).as("step"),
-        col("steps_reached"))
-      .groupBy("step")
-      .agg(count(when(col("steps_reached") >= col("step"), lit(1)))
-        .as("n_users"))
-  }
-
   /** Cohort retention: users grouped by the `bucket` (week/month/day)
     * of their FIRST event; for each (cohort, bucket offset) the
     * distinct active users. `cohort_size` rides along (= n_active at

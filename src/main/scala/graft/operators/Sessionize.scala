@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Batch gap-based sessionization — the batch twin of
-  * streaming.EventStreams.sessionize: a session closes after
+/** Batch gap-based sessionization: a session closes after
   * `gapMinutes` of per-user inactivity.
   *
   * Shape (100 TB): ONE shuffle on the user key serves everything —

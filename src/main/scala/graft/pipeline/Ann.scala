@@ -72,8 +72,8 @@ object Ann {
   }
 
   /** One bucket id per table (array of `tables` longs) — a single
-    * custom-expression pass over the vector (same seeding as
-    * Dedup.hyperplaneBucket with seed 7000+t).
+    * custom-expression pass over the vector (table t's planes seeded
+    * with 7000+t).
     */
   private def bucketSignatures(vec: Column, planes: Int,
       tables: Int, dim: Int): Column =
@@ -116,8 +116,8 @@ object Ann {
 
   /** IVF approximate top-k: probe lists → equi-join on centroid id →
     * exact cosine rank within candidates. At scale the corpus side is
-    * written bucketed by centroid id (sources.Bucketing), making the
-    * probe a co-located join with no corpus shuffle.
+    * written partitioned by centroid id ([[Indexes.writeIvfPqIndex]]'s
+    * layout), so a probe reads only its lists.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
       qId: String, cId: String, vecCol: String, k: Int,
@@ -196,15 +196,6 @@ object Ann {
     */
   def pqEncode(vec: Column, books: Array[Array[Array[Double]]]): Column =
     graft.functions.PqCodes(vec, books)
-
-  /** Reconstruction: concatenated codebook entries for a code array —
-    * the decoded approximation of the original vector (spec-level;
-    * search never materializes it). Native single-call kernel
-    * (graft.functions.PqDecode).
-    */
-  def pqDecode(codes: Column,
-      books: Array[Array[Array[Double]]]): Column =
-    graft.functions.PqDecode(codes, books)
 
   /** Query-side ADC lookup table: flat array of m×ks sub-dot-products
     * `lut[s*ks + c] = q_sub(s) · books(s)(c)`, each accumulated in

@@ -59,27 +59,13 @@ object Cluster {
 
   /** Cluster id of `vec` under `cents`: argmin over c of
     * |c|² − 2·v·c, ties to the smaller id. Native codegen'd loop
-    * (graft.functions.KmeansAssign) — [[assignCols]] is the Column
-    * reference form it is equivalence-tested against (which must NOT
-    * run in hot paths: the when-fold duplicates each dot-product tree
-    * per comparison level, a 2^k expression blowup).
+    * (graft.functions.KmeansAssign); ClusterSpec holds the Column
+    * reference form it is equivalence-tested against (a when-fold that
+    * duplicates each dot-product tree per comparison level, a 2^k
+    * expression blowup no hot path may run).
     */
   def assign(vec: Column, cents: Array[Array[Double]]): Column =
     graft.functions.KmeansAssign(vec, cents, cents.map(sqNorm))
-
-  /** Column-expression form of [[assign]] (executable spec). */
-  def assignCols(vec: Column, cents: Array[Array[Double]]): Column = {
-    val scored = cents.zipWithIndex.map { case (w, i) =>
-      (lit(sqNorm(w)) - lit(2.0d) * dot(vec, w), i)
-    }
-    val best = scored.tail.foldLeft(
-      struct(scored.head._1.as("d"), lit(0).as("c"))) {
-      case (b, (d, i)) =>
-        when(d < b.getField("d"),
-          struct(d.as("d"), lit(i).as("c"))).otherwise(b)
-    }
-    best.getField("c")
-  }
 
   /** `iters` assignment passes with `iters - 1` centroid updates
     * between them (Lloyd). Returns the final assignment frame
@@ -214,8 +200,8 @@ object Cluster {
     *
     * Scale shape (100 TB): the paper's within-cluster comparison is
     * still quadratic in cluster size, so clusters are sub-blocked by a
-    * random-hyperplane signature (same literal-matrix LSH as
-    * [[Dedup.hyperplaneBucket]]) and only (cluster, bucket) cells
+    * random-hyperplane signature (the literal-matrix LSH of
+    * graft.functions.HyperplaneBuckets) and only (cluster, bucket) cells
     * pair — the verify join's key is the cell, never the corpus, and a
     * cell is ~|cluster| / 2^planes rows. Like every LSH stage here the
     * sub-blocking trades bounded recall for a bounded join; planes=0

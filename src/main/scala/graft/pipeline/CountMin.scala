@@ -22,8 +22,8 @@ object CountMin {
 
   /** Cell column of (row, token): portable 60-bit md5 fold mod width. */
   def cell(row: Column, token: Column, width: Int, seed: Int): Column =
-    conv(substring(md5(concat(row.cast("string"), lit(":" + seed + ":"),
-      token)), 1, 15), 16, 10).cast("long") % width
+    graft.functions.Md5Fold60(concat(row.cast("string"),
+      lit(":" + seed + ":"), token)) % width
 
   /** Sketch cells from a (shard, token, cnt) frame — the shared tail
     * of buildSharded and heavyHitters (which stages the tokenized

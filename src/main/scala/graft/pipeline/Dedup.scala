@@ -50,14 +50,6 @@ object Dedup {
     df.groupBy(md5(normalize(col(textCol))).as("h"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Exact-dedup: keep one representative row per normalized text. */
-  def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = Window.partitionBy(md5(normalize(col(textCol))))
-      .orderBy(col(idCol))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
   // ---------- MinHash + LSH ----------
 
   /** Spread per-document compute across the cluster when the input
@@ -134,8 +126,8 @@ object Dedup {
     * bodies), so extracting all k elements this way costs k md5
     * passes. Single-element projections are fine (the optimizer
     * prunes to one branch); for full signatures stage the hashes in
-    * their own projection and use [[signatureOfHashes]] — as
-    * [[minhashCandidatesMd5]] does.
+    * their own projection and use [[signatureOfHashes]] (the native
+    * MinhashBandBuckets kernel fuses the whole chain instead).
     */
   def minhashSignatureMd5(sh: Column, k: Int = 32): Column =
     signatureOfHashes(transform(sh, shingleHash _), k)
@@ -173,65 +165,6 @@ object Dedup {
         md5(array_join(
           transform(slice(sig, j * r + 1, lit(r)), _.cast("string")),
           "|")).as("bucket")))
-
-  /** Candidate near-duplicate pairs (id1 < id2) via portable banded
-    * MinHash.
-    *
-    * @param maxBucket drop degenerate buckets larger than this (skew
-    *                  guard: boilerplate text at corpus scale)
-    */
-  def minhashCandidatesMd5(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 32, b: Int = 8,
-      maxBucket: Int = 1000): DataFrame = {
-    // the fused native expression computes shingles → one md5 per
-    // shingle → k permutation minima → b band buckets in ONE call per
-    // row (MinhashNativeSpec pins equality with the Column pipeline),
-    // so the staging exchange that kept the md5s from re-deriving per
-    // permutation branch is no longer needed
-    val bucketed = spread(df.select(col(idCol).as("id"),
-        col(textCol).as("__t")))
-      .select(col("id"),
-        explode(graft.functions.MinhashBandBuckets(col("__t"), n, k, b))
-          .as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bucket"))
-    val capped = graft.core.Caches.stage(bucketed
-      .withColumn("__n", count(lit(1))
-        .over(Window.partitionBy("band", "bucket")))
-      .filter(col("__n") <= maxBucket).drop("__n"))
-      // both self-join sides consume this frame: stage (persist +
-      // register) so the signature pipeline runs once (spillable,
-      // tiny rows). The returned plan consumes the cache lazily, so
-      // the operator has no post-action hook to unpersist — release
-      // happens at the harness level: Caches.releaseAll between
-      // queries (Bench/Verify do; CacheLifecycleSpec pins it).
-    val l = capped.as("l")
-    val rgt = capped.as("r")
-    l.join(rgt,
-        col("l.band") === col("r.band") &&
-        col("l.bucket") === col("r.bucket") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"))
-      .distinct()
-  }
-
-  /** Jaccard-verified near-dup pairs from portable candidates. */
-  def minhashDedupPairsMd5(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 32, b: Int = 8,
-      threshold: Double = 0.8): DataFrame = {
-    val sh = spread(df.select(col(idCol).as("id"),
-        col(textCol).as("__t")))
-      .select(col("id"),
-        graft.functions.Shingles(col("__t"), n).as("sh"))
-    val cands = minhashCandidatesMd5(df, idCol, textCol, n, k, b)
-    cands
-      .join(sh.withColumnsRenamed(Map("id" -> "id1", "sh" -> "sh1")), "id1")
-      .join(sh.withColumnsRenamed(Map("id" -> "id2", "sh" -> "sh2")), "id2")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          size(array_union(col("sh1"), col("sh2"))))
-      .filter(col("jaccard") >= threshold)
-      .select("id1", "id2", "jaccard")
-  }
 
   /** MinHash estimator calibration against exact Jaccard — the dedup
     * twin of the retrieval family's rank-metrics eval: before trusting
@@ -320,9 +253,8 @@ object Dedup {
 
   /** Portable band-bucket index of a corpus: (id, band, bucket) rows —
     * the write-once artifact incremental dedup joins new batches
-    * against. At warehouse scale this is persisted bucketed+sorted on
-    * (band, bucket) (sources.Bucketing), so the per-batch probe join
-    * is co-located and touches no corpus text.
+    * against ([[Indexes.writeMinhashIndex]] persists it), so the
+    * per-batch probe join touches no corpus text.
     */
   def minhashIndexMd5(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 32, b: Int = 8): DataFrame =
@@ -339,7 +271,7 @@ object Dedup {
     * (band, bucket) equi-join of batch×index, verified by exact
     * shingle Jaccard against just the matched corpus rows. The skew
     * cap applies on the INDEX side (boilerplate buckets at corpus
-    * scale), mirroring minhashCandidatesMd5's maxBucket.
+    * scale).
     *
     * Cost at 100 TB: batch-signature compute is |batch|-scan-local;
     * the probe is co-located when the index is bucketed on
@@ -628,9 +560,9 @@ object Dedup {
     * winnowed fingerprint index: docs sharing ≥ `minShared` DISTINCT
     * fingerprint hashes. The self-join runs on the sparse fingerprint
     * frame only; `maxBucket` drops boilerplate fingerprints shared by
-    * more than that many docs (the [[minhashCandidatesMd5]] skew guard —
-    * a corpus-wide header would otherwise quadratically fan out its
-    * bucket).
+    * more than that many docs (the [[incrementalDupPairsMd5]] skew
+    * guard — a corpus-wide header would otherwise quadratically fan out
+    * its bucket).
     *
     * Precondition: `idCol` is unique per row. Fingerprints are
     * deduplicated per row, not per id, so two rows sharing an id
@@ -708,34 +640,12 @@ object Dedup {
   // as a 64-char '0'/'1' string (bit 0 first): portable, and avoids
   // 2^63 sign issues a LongType packing would hit in SQL engines.
 
-  /** 64 ±1 contributions from the first 16 hex digits of an md5 hex
-    * string (4 bits per digit, LSB first within each digit).
-    */
-  private def md5BitSigns(m: Column): Column =
-    flatten(transform(sequence(lit(0), lit(15)), d => {
-      val v = conv(m.substr(d + 1, lit(1)), 16, 10).cast("int")
-      array(Seq(1, 2, 4, 8).map(mask =>
-        when(v.bitwiseAND(mask) =!= 0, 1).otherwise(-1)): _*)
-    }))
-
   /** Portable SimHash fingerprint as a 64-char bit string — native
-    * codegen'd expression; [[simhashMd5Cols]] is the Column-HOF
+    * codegen'd expression; TextHashNativeSpec holds the Column-HOF
     * reference form it is equivalence-tested against.
     */
   def simhashMd5(text: Column): Column =
     graft.functions.SimhashMd5(text)
-
-  /** Column-expression (interpreted-HOF) form of [[simhashMd5]]: one
-    * md5 + a 64-lane sign aggregate per token. ~10× slower than the
-    * native expression (HOF lambdas evaluate interpreted per element);
-    * kept as the executable spec for TextHashNativeSpec.
-    */
-  def simhashMd5Cols(text: Column): Column = {
-    val hashes = transform(tokens(text), t => md5(t))
-    val sums = aggregate(hashes, array_repeat(lit(0), 64),
-      (acc, m) => zip_with(acc, md5BitSigns(m), (a, c) => a + c))
-    array_join(transform(sums, s => when(s > 0, "1").otherwise("0")), "")
-  }
 
   /** Hamming distance between two 64-char bit-string fingerprints
     * (native; [[hammingBitsCols]] is the Column reference form).
@@ -846,39 +756,6 @@ object Dedup {
   def cosine(a: Column, bc: Column): Column =
     graft.functions.CosineSim(a, bc)
 
-  /** The Column-HOF cosine — kept as the executable specification the
-    * native [[graft.functions.CosineSim]] kernel is differentially
-    * tested against (VecSimSpec pins bit-identity; the kernel uses
-    * the same left-fold element order, so every oracle that mirrors
-    * this arithmetic is unaffected).
-    */
-  def cosineHof(a: Column, bc: Column): Column = {
-    val dot = aggregate(zip_with(a, bc, (x, y) => x * y),
-      lit(0.0d), (s, x) => s + x)
-    val na = sqrt(aggregate(a, lit(0.0d), (s, x) => s + x * x))
-    val nb = sqrt(aggregate(bc, lit(0.0d), (s, x) => s + x * x))
-    dot / (na * nb)
-  }
-
-  /** Random-hyperplane LSH bucket signature. Plane components are
-    * deterministic literals baked into the plan (seeded PRNG at plan
-    * construction) — a plain literal-array dot product per plane, no
-    * per-element hashing at runtime, reproducible across executors.
-    */
-  def hyperplaneBucket(vec: Column, planes: Int = 16,
-      seed: Int = 42, dim: Int = 64): Column =
-    (0 until planes).map { p =>
-      val dot = aggregate(
-        zip_with(vec, planeLit(seed, p, dim), (x, w) => x * w),
-        lit(0.0d), (s, x) => s + x)
-      when(dot > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  private[pipeline] def planeLit(seed: Int, p: Int, dim: Int): Column = {
-    val rnd = new scala.util.Random(seed.toLong * 1000003L + p)
-    array((0 until dim).map(_ => lit(rnd.nextDouble() * 2 - 1)): _*)
-  }
-
   /** C4-style boilerplate-paragraph removal: drop every paragraph that
     * appears (by md5 of its exact text) in at least `minDocs` distinct
     * documents, preserving the order of surviving paragraphs. Returns
@@ -933,25 +810,5 @@ object Dedup {
             .cast("long")).as("n_kept"),
         size(filter(col("__ps"), p => p.getField("__boiler")))
           .cast("long").as("n_dropped"))
-  }
-
-  /** Embedding near-dup pairs: bucket by hyperplane signature, verify
-    * cosine within buckets. One shuffle on the bucket key.
-    */
-  def embeddingDupPairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double = 0.95, planes: Int = 12,
-      dim: Int = 64): DataFrame = {
-    val v = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-      .withColumn("bucket", element_at(
-        graft.functions.HyperplaneBuckets(col("vec"), planes, 1, dim, 42),
-        1))
-    val l = v.as("l")
-    val r = v.as("r")
-    l.join(r, col("l.bucket") === col("r.bucket") &&
-        col("l.id") < col("r.id"))
-      .withColumn("cos", cosine(col("l.vec"), col("r.vec")))
-      .filter(col("cos") >= threshold)
-      .select(col("l.id").as("id1"), col("r.id").as("id2"), col("cos"))
   }
 }

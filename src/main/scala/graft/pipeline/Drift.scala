@@ -45,11 +45,9 @@ object Drift {
   }
 
   /** (col_name, value_s, cnt) value counts of `cols` — one unpivot +
-    * one aggregation, legal on a STREAMING frame too (a running
-    * aggregation with |columns| × |domain| state), which is how a
-    * live pipeline materializes the current-batch side of a drift
-    * check: stream this into an upsert/complete sink, then diff the
-    * sink against a reference manifest with [[l1FromCounts]]. */
+    * one aggregation with |columns| × |domain| output rows. Kept as a
+    * reference manifest, it is diffed against a later delivery's
+    * counts with [[l1FromCounts]]. */
   def valueCounts(df: DataFrame, cols: Seq[String]): DataFrame = {
     val entries = cols.map(c => struct(lit(c).as("col_name"),
       col(c).cast("string").as("value_s")))

@@ -49,23 +49,4 @@ object Embed {
       .filter(col("v") =!= 0L)
   }
 
-  /** Dense array rendering of [[hashedDocVector]]: one (doc_id, vec)
-    * row for EVERY input document — zero-token documents (and exact
-    * every-bucket sign cancellations) get the zero vector rather than
-    * silently vanishing, so downstream consumers (k-center, ANN,
-    * SemDeDup) see the whole corpus. Consumers cast to array<double>.
-    */
-  def hashedDocVectorDense(df: DataFrame, idCol: String,
-      textCol: String, dim: Int = 64): DataFrame = {
-    val dense = hashedDocVector(df, idCol, textCol, dim)
-      .groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col("b"), col("v"))))
-        .as("__m"))
-    df.select(col(idCol).as("doc_id")).distinct()
-      .join(dense, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          i => coalesce(element_at(col("__m"), i), lit(0L))).as("vec"))
-  }
-
 }

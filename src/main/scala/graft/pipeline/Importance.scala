@@ -114,8 +114,8 @@ object Importance {
     */
   /** Train the unigram LM: top-`vocabSize` (token, count) table by
     * (count DESC, token) plus the total token count — the whole model
-    * is `vocabSize`+1 driver cells, ready to bake into any batch OR
-    * streaming plan via [[crossEntropyCol]].
+    * is `vocabSize`+1 driver cells, ready to bake into any plan via
+    * [[crossEntropyCol]].
     */
   def trainUnigram(ref: DataFrame, textCol: String,
       vocabSize: Int): (Seq[(String, Long)], Long) = {
@@ -135,8 +135,7 @@ object Importance {
 
   /** Scan-local cross-entropy struct<ce_fix, n_tokens, cross_entropy>
     * of `text` under a trained unigram model — a pure projection (map
-    * literal + TokenCounts fold), so it runs unchanged under
-    * readStream (streaming.EventStreams.lmScoreStream).
+    * literal + TokenCounts fold), usable in any projection.
     */
   def crossEntropyCol(text: Column, vocab: Seq[(String, Long)],
       total: Long): Column = {
@@ -229,10 +228,10 @@ object Importance {
     * CASE projection (no join — the models ride as literals); the
     * tertile split is ntile(3) over ONE exchange keyed by language,
     * ordered by (cross_entropy, id) so ties and empty documents
-    * (null entropy → tail end) break deterministically. Batch-only by
-    * nature: the tertile boundary is a global per-language statistic
-    * (stream the scoring half via lmScoreStream and bucket against
-    * frozen boundaries instead).
+    * (null entropy → tail end) break deterministically. The tertile
+    * boundary is a global per-language statistic, so incremental
+    * scoring must score with [[crossEntropyCol]] and bucket against
+    * frozen boundaries instead.
     */
   def ccnetBuckets(docs: DataFrame, idCol: String, textCol: String,
       langCol: String, vocabSize: Int = 512): DataFrame = {
@@ -280,8 +279,7 @@ object Importance {
 
   /** Train the DSIR model alone: the one-scan dual histogram reduced
     * to the `dim`-cell fixed-point ratio table — ready to bake into
-    * any batch OR streaming plan (streaming.EventStreams
-    * .dsirScoreStream), the trainUnigram/crossEntropyCol split.
+    * any plan, the trainUnigram/crossEntropyCol split.
     */
   def trainDsir(docs: DataFrame, targetCond: Column, textCol: String,
       dim: Int = 256, gram: Int = 2): Array[Long] = {
@@ -372,14 +370,6 @@ object Importance {
             .cast("int")).as("pred_lang"),
         array_max(col("__s")).as("score_fix"))
   }
-
-  /** Score a corpus under a PRE-TRAINED ratio table ([[trainDsir]]) —
-    * one scan-local projection, usable on any batch frame (and the
-    * batch half of the streaming-twin pin).
-    */
-  def scoreDsir(docs: DataFrame, ratios: Array[Long], idCol: String,
-      textCol: String, gram: Int = 2): DataFrame =
-    scoreWith(docs, ratios, idCol, textCol, ratios.length, gram)
 
   /** Scoring pass: one scan-local projection; the per-document exact
     * long sum runs in the native [[graft.functions.DsirScore]] kernel

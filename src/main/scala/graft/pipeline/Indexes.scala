@@ -196,12 +196,6 @@ object Indexes {
       idManifest(index, indexId, shards),
       idManifest(corpus, corpusId, shards))
 
-  /** True iff every shard certifies ([[indexFreshness]] all-ok). */
-  def isFresh(index: DataFrame, indexId: String, corpus: DataFrame,
-      corpusId: String, shards: Int = 16): Boolean =
-    indexFreshness(index, indexId, corpus, corpusId, shards)
-      .filter(!col("ok")).isEmpty
-
   private def idManifest(df: DataFrame, id: String,
       shards: Int): DataFrame =
     Sampling.shardManifest(
@@ -404,24 +398,11 @@ object Indexes {
     TextFns.bm25QueryTail(matched, dfs, stats, qt, k1, b, topK, logIdf)
   }
 
-  /** Single-query convenience over [[bm25QueriesIndexed]]. */
-  def bm25Indexed(spark: SparkSession, path: String,
-      terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-      topK: Int = 100, logIdf: Boolean = true): DataFrame = {
-    require(terms.nonEmpty, "bm25 needs at least one query term")
-    import spark.implicits._
-    bm25QueriesIndexed(spark,
-      path, Seq((0L, terms)).toDF("query_id", "terms"), "query_id",
-      "terms", k1, b, topK, logIdf)
-      .select("rank", "doc_id", "score", "n_terms")
-  }
-
   // ---------- MinHash band-bucket index ----------
 
   /** Persist [[Dedup.minhashIndexMd5]]: (id, band, bucket) at `path`.
-    * At warehouse scale this is the bucketed+sorted-on-(band, bucket)
-    * table [[graft.sources.Bucketing]] describes; plain parquet here
-    * keeps the artifact splittable and the probe an equi-join.
+    * Plain parquet keeps the artifact splittable and the probe an
+    * equi-join.
     */
   def writeMinhashIndex(corpus: DataFrame, idCol: String,
       textCol: String, path: String, n: Int = 3, k: Int = 32,
@@ -432,84 +413,16 @@ object Indexes {
   def openMinhashIndex(spark: SparkSession, path: String): DataFrame =
     openRecursive(spark, path)
 
-  // ---------- idempotent per-batch appends (ingest loops) ----------
-
-  /** Read an index artifact INCLUDING its `batch_<id>` subdirectories
-    * ([[appendBatchDir]]'s layout). recursiveFileLookup disables
-    * partition inference — these artifacts are flat schemas, and the
+  /** Read every parquet file under an index artifact, nested
+    * directories included (earlier releases' per-batch appends wrote
+    * `batch_<id>` subdirectories). recursiveFileLookup disables
+    * partition inference — these artifacts are flat schemas, and a
     * mixed files-plus-subdirs layout would otherwise trip partition
     * discovery; underscore-prefixed staging dirs stay hidden.
     */
   private def openRecursive(spark: SparkSession, path: String)
       : DataFrame =
     spark.read.option("recursiveFileLookup", "true").parquet(path)
-
-  /** Has `batchId` already been folded into the artifact at `path`? */
-  def batchApplied(spark: SparkSession, path: String,
-      batchId: Long): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(root, s"batch_$batchId"))
-  }
-
-  /** Idempotently fold one micro-batch's rows into a parquet
-    * artifact: the rows land as a `batch_<id>` SUBDIRECTORY, written
-    * to an underscore-hidden staging dir and published by ONE atomic
-    * directory rename. foreachBatch is at-least-once — a batch
-    * retried after its append succeeded but before the checkpoint
-    * commit would otherwise append its rows a second time, silently
-    * diverging the artifact from the sequential-replay authority (and
-    * the retried probe, now seeing the batch's own rows, would emit
-    * self-candidates the replay never produces) — round-16 ADVICE.
-    * With the batch-keyed layout the retry is a no-op (returns
-    * false); a crash mid-write leaves only the hidden staging dir,
-    * which the next attempt deletes and rewrites. Readers must list
-    * recursively ([[openWinnowIndex]]/[[openMinhashIndex]] do).
-    */
-  private def appendBatchDir(rows: DataFrame, path: String,
-      batchId: Long): Boolean = {
-    val spark = rows.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(root, s"batch_$batchId")
-    if (fs.exists(target)) return false
-    val staging =
-      new org.apache.hadoop.fs.Path(root, s"_staging_batch_$batchId")
-    rows.write.mode("overwrite").parquet(staging.toString)
-    fs.rename(staging, target)
-    true
-  }
-
-  /** [[appendMinhashIndex]] keyed by micro-batch id — the idempotent
-    * form ingest loops use; no-op (false) on a replayed batch.
-    */
-  def appendMinhashIndexBatch(batch: DataFrame, idCol: String,
-      textCol: String, path: String, batchId: Long, n: Int = 3,
-      k: Int = 32, b: Int = 8): Boolean =
-    appendBatchDir(
-      Dedup.minhashIndexMd5(batch, idCol, textCol, n, k, b),
-      path, batchId)
-
-  /** [[appendWinnowIndex]] keyed by micro-batch id — the idempotent
-    * form ingest loops use; no-op (false) on a replayed batch.
-    */
-  def appendWinnowIndexBatch(batch: DataFrame, idCol: String,
-      textCol: String, path: String, batchId: Long, k: Int = 4,
-      w: Int = 8): Boolean =
-    appendBatchDir(winnowFrame(batch, idCol, textCol, k, w),
-      path, batchId)
-
-  /** Idempotently fold a batch's accepted DOCUMENT rows into a
-    * corpus-docs artifact (the text side the MinHash ingest loop's
-    * Jaccard verify reads). Same batch-keyed layout as the index
-    * appends; open with [[openIngestDocs]].
-    */
-  def appendIngestDocs(rows: DataFrame, path: String,
-      batchId: Long): Boolean =
-    appendBatchDir(rows, path, batchId)
-
-  def openIngestDocs(spark: SparkSession, path: String): DataFrame =
-    openRecursive(spark, path)
 
   /** Append a batch's band buckets to a [[writeMinhashIndex]]
     * artifact. Signatures are row-local (md5-derived, no corpus
@@ -663,16 +576,6 @@ object Indexes {
       mediaCol: String, path: String, kernel: String = "dhash"): Unit =
     mediaSigFrame(batch, idCol, mediaCol, kernel)
       .write.mode("append").parquet(path)
-
-  /** [[appendMediaIndex]] keyed by micro-batch id — the idempotent
-    * form the media ingest loop uses; no-op (false) on a replayed
-    * batch ([[appendBatchDir]]'s exactly-once contract).
-    */
-  def appendMediaIndexBatch(batch: DataFrame, idCol: String,
-      mediaCol: String, path: String, batchId: Long,
-      kernel: String = "dhash"): Boolean =
-    appendBatchDir(mediaSigFrame(batch, idCol, mediaCol, kernel),
-      path, batchId)
 
   private def mediaSigFrame(df: DataFrame, idCol: String,
       mediaCol: String, kernel: String): DataFrame = {

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Record linkage / entity resolution over structured records: the
   * blocking → verify → cluster pipeline (Fellegi–Sunter shape) that

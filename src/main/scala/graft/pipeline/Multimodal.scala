@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column plumbing for training-data
   * pipelines: media as opaque `binary` columns with typed metadata,
@@ -16,15 +15,6 @@ import org.apache.spark.sql.types._
   * carry the row id so downstream joins stay hash-partitioned).
   */
 object Multimodal {
-
-  /** media struct schema: binary payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("data", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("duration_ms", LongType))))))
 
   /** Deterministic fake media column derived from a text column (test
     * fixture builder — stands in for `spark.read.format("binaryFile")`).

@@ -32,34 +32,6 @@ object Privacy {
       .withColumn("ok", col("class_size") >= k)
   }
 
-  /** One-row summary for dashboards/gating: class counts, rows at
-    * risk (members of classes smaller than k), and the smallest
-    * class — the number that IS the dataset's k.
-    */
-  def kAnonymitySummary(df: DataFrame, quasi: Seq[Column],
-      k: Long): DataFrame =
-    kAnonymityClasses(df, quasi, k).agg(
-      count(lit(1)).as("n_classes"),
-      count(when(!col("ok"), lit(1))).as("n_violating_classes"),
-      coalesce(sum(when(!col("ok"), col("class_size"))), lit(0L))
-        .as("n_rows_at_risk"),
-      min(col("class_size")).as("min_class_size"))
-
-  /** Suppression remedy: drop every row whose equivalence class has
-    * fewer than k members — the released frame is k-anonymous by
-    * construction. ONE exchange (a count window over the class key);
-    * no join, no second scan of the input.
-    */
-  def suppressSmallClasses(df: DataFrame, quasi: Seq[Column],
-      k: Long): DataFrame = {
-    require(quasi.nonEmpty, "need at least one quasi-identifier")
-    require(k >= 1, "k must be positive")
-    val w = Window.partitionBy(quasi: _*)
-    df.withColumn("__csz", count(lit(1)).over(w))
-      .filter(col("__csz") >= k)
-      .drop("__csz")
-  }
-
   /** Distinct l-diversity per equivalence class (Machanavajjhala et
     * al., ICDE 2006): k-anonymity stops homogeneity attacks only if
     * each class also carries at least `l` DISTINCT sensitive values —

@@ -91,41 +91,6 @@ object Retrieval {
         "cand_label")
   }
 
-  /** The billion-vector form of [[hardNegatives]]: the scoring stage
-    * swaps for [[Ann.binaryTopK]]'s Hamming-shortlist + exact-cosine
-    * rerank, and the polarity split reuses the shortlist's cosine
-    * ordering (rank within polarity preserves overall rank order, so
-    * no re-scoring is needed). Approximate by construction — pairs
-    * are mined only within each anchor's `shortlist` — with the
-    * approximation measured against the exact miner in RetrievalSpec.
-    */
-  def hardNegativesApprox(anchors: DataFrame, corpus: DataFrame,
-      aId: String, cId: String, vecCol: String, labelCol: String,
-      nPos: Int = 3, nNeg: Int = 3, shortlist: Int = 100,
-      dim: Int = 64): DataFrame = {
-    val aIn = anchors.filter(col(labelCol).isNotNull)
-    val cIn = corpus.filter(col(labelCol).isNotNull)
-    val aLab = aIn.select(col(aId).as("anchor_id"),
-      col(labelCol).as("anchor_label"))
-    val cLab = cIn.select(col(cId).as("cand_id"),
-      col(labelCol).as("cand_label"))
-    val short = Ann.binaryTopK(aIn, cIn, aId, cId, vecCol,
-        k = shortlist, shortlist = shortlist, dim = dim)
-      .select(col("query_id").as("anchor_id"),
-        col("neighbor_id").as("cand_id"), col("rank"))
-    val w = Window.partitionBy("anchor_id", "is_positive")
-      .orderBy(col("rank"))
-    short.join(broadcast(aLab), "anchor_id")
-      .join(cLab, "cand_id")
-      .withColumn("is_positive",
-        col("cand_label") === col("anchor_label"))
-      .withColumn("prank", row_number().over(w))
-      .filter(when(col("is_positive"), col("prank") <= nPos)
-        .otherwise(col("prank") <= nNeg))
-      .select(col("anchor_id"), col("is_positive"),
-        col("prank").as("rank"), col("cand_id"), col("cand_label"))
-  }
-
   /** nDCG discount 1/log2(rank+1) for ranks 1..k, computed ONCE on
     * the driver and embedded as literals in the plan (and in oracle
     * SQL), so no engine's `ln` implementation — whose last ulp is

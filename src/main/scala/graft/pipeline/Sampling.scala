@@ -24,6 +24,17 @@ object Sampling {
   def sampleHash(id: Column, seed: Int): Column =
     md5(concat(id.cast("string"), lit(":" + seed)))
 
+  /** The 60-bit fold of [[sampleHash]]: its first 15 hex digits as a
+    * long, read straight from the digest ([[Md5Fold60]]). */
+  private def sampleFold(id: Column, seed: Int): Column =
+    Md5Fold60(concat(id.cast("string"), lit(":" + seed)))
+
+  /** [[sampleFold]] as a fraction in [0, 1): the integer value of 15
+    * hex digits / 16^15 (exact in double far beyond the thresholds'
+    * precision). */
+  private def sampleFrac(id: Column, seed: Int): Column =
+    sampleFold(id, seed).cast("double") / 1152921504606846976.0d
+
   /** Deterministic stratified sample: within each stratum, rows rank
     * by the seeded hash and the first ceil(frac × n) survive. Exact
     * per-stratum counts (unlike Bernoulli `df.sample`), reproducible
@@ -61,10 +72,7 @@ object Sampling {
     require(splits.nonEmpty && splits.forall(_._2 > 0),
       "need positive split weights")
     val total = splits.map(_._2).sum
-    // hash fraction in [0, 1): integer value of 15 hex digits / 16^15
-    // (exact in double far beyond the thresholds' precision)
-    val frac = conv(substring(sampleHash(col(idCol), seed), 1, 15),
-      16, 10).cast("long").cast("double") / 1152921504606846976.0d
+    val frac = sampleFrac(col(idCol), seed)
     val bounds = splits.scanLeft(0.0) { case (acc, (_, w)) =>
       acc + w / total
     }.tail
@@ -85,9 +93,7 @@ object Sampling {
     */
   def weighted(df: DataFrame, idCol: String, weight: Column,
       seed: Int = 42): DataFrame = {
-    val frac = conv(substring(sampleHash(col(idCol), seed), 1, 15),
-      16, 10).cast("long").cast("double") / 1152921504606846976.0d
-    df.filter(frac < weight)
+    df.filter(sampleFrac(col(idCol), seed) < weight)
   }
 
   /** Temperature-weighted source mixing — the "alpha sampling" of
@@ -127,10 +133,9 @@ object Sampling {
       .select(col(stratumCol),
         ((lit(targetFrac) * col("__n_total") *
           (col("__a") / col("__a_total"))) / col("__n")).as("__keep_p"))
-    val frac = conv(substring(sampleHash(col(idCol), seed), 1, 15),
-      16, 10).cast("long").cast("double") / 1152921504606846976.0d
     df.join(broadcast(rates), stratumCol)
-      .filter(col("__keep_p") >= 1.0 || frac < col("__keep_p"))
+      .filter(col("__keep_p") >= 1.0 ||
+        sampleFrac(col(idCol), seed) < col("__keep_p"))
       .drop("__keep_p")
   }
 
@@ -192,8 +197,7 @@ object Sampling {
       shards: Int, seed: Int = 42): DataFrame = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
     df.select(
-        pmod(Md5Fold60(concat(col(idCol).cast("string"), lit(":" + seed))),
-          lit(shards.toLong)).as("shard"),
+        pmod(sampleFold(col(idCol), seed), lit(shards.toLong)).as("shard"),
         length(col(textCol)).cast("long").as("len"),
         Md5Fold60(concat(col(idCol).cast("string"), lit("|"),
           md5(col(textCol)))).as("fp"))
@@ -344,14 +348,4 @@ object Sampling {
       (st, n, s1, s2.toString, alloc(i))
     }.toSeq.toDF("stratum", "n_rows", "s1", "s2", "alloc")
   }
-
-  def writeShards(df: DataFrame, idCol: String, path: String,
-      shards: Int, maxRecordsPerFile: Long = 1000000L,
-      seed: Int = 42): Unit =
-    df.repartitionByRange(shards, sampleHash(col(idCol), seed),
-        col(idCol))
-      .sortWithinPartitions(sampleHash(col(idCol), seed), col(idCol))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
 }

@@ -58,12 +58,12 @@ object SeenSet {
   private val MaskLits: Column =
     array((0 until 64).map(b => lit(1L << b)): _*)
 
-  /** 60-bit folds of md5 hex digits 1..15 and 16..30 (`conv` parses
-    * ≤ 2⁶⁰ exactly; Spark md5 emits lowercase hex, which conv
-    * accepts).
+  /** 60-bit folds of md5 hex digits 1..15 and 16..30. h1 is the shared
+    * [[graft.functions.Md5Fold60]]; h2 reads the digits past it, so it
+    * spells the chain out (`conv` parses ≤ 2⁶⁰ exactly; Spark md5 emits
+    * lowercase hex, which conv accepts).
     */
-  private def h1(k: Column): Column =
-    conv(substring(md5(k), 1, 15), 16, 10).cast("long")
+  private def h1(k: Column): Column = graft.functions.Md5Fold60(k)
   private def h2(k: Column): Column =
     conv(substring(md5(k), 16, 15), 16, 10).cast("long")
 

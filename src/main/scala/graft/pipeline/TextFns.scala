@@ -433,35 +433,6 @@ object TextFns {
       .toDF("doc_id", "idx", "n_tokens", "shard", "bin")
   }
 
-  /** Padding-waste accounting for a batch assignment frame
-    * ((shard, bin) batches of `n_tokens` chunks): per-batch fill,
-    * and the corpus-level padded-token fraction a trainer would burn —
-    * `1 − Σtokens / (n_batches · capacity)`. One aggregation; used to
-    * decide packing-order policy with data (PipelineSpec / ROADMAP).
-    */
-  def packingStats(assignment: org.apache.spark.sql.DataFrame,
-      capacity: Int): org.apache.spark.sql.DataFrame =
-    assignment.groupBy("shard", "bin")
-      .agg(sum("n_tokens").as("tokens"),
-        count(lit(1)).as("n_chunks"))
-      .agg(count(lit(1)).as("n_batches"),
-        sum("tokens").as("tokens"),
-        max("tokens").as("max_fill"))
-      .select(col("n_batches"), col("tokens"), col("max_fill"),
-        (lit(1.0d) - col("tokens") /
-          (col("n_batches") * capacity)).as("waste_frac"))
-
-  /** Corpus vocabulary statistics: per-token total occurrences (tf)
-    * and document frequency (df) — the vocabulary/idf-building pass of
-    * a training-data pipeline. The per-document counting happens
-    * row-locally (native TokenCounts: one pass builds the distinct
-    * tokens with their in-document counts), so the corpus pass is ONE
-    * scan → ONE explode of the distinct tokens per document → ONE hash
-    * aggregation with map-side partial agg (`sum(cnt)` = tf, `count` =
-    * df). No `count(distinct)` Expand, no second scan, no join. Top-N
-    * by (df desc, token) keeps the result bounded (TakeOrdered, no
-    * global sort) at any corpus size.
-    */
   /** Apply a learned BPE merge list to text — the tokenizer-encode
     * step a training pipeline runs over the whole corpus. Merges apply
     * sequentially in rank order, each replacing ALL its occurrences
@@ -486,27 +457,6 @@ object TextFns {
   def bpeEncode(text: Column, merges: Seq[(String, String)]): Column = {
     requireBpeSymbols(merges)
     graft.functions.BpeEncode(text, merges)
-  }
-
-  /** The original Column-composed form of [[bpeEncode]] -- ~13 literal
-    * `replace`/regex passes over a marker-inflated copy of the text
-    * (~2 s full-eval at sf0.1 for 10 merges). Kept, unused by any
-    * gate, as the executable specification the native kernel is
-    * differentially pinned against (PipelineSpec).
-    */
-  private[graft] def bpeEncodeChain(text: Column,
-      merges: Seq[(String, String)]): Column = {
-    val S = "\u0001"; val E = "\u0002"
-    requireBpeSymbols(merges)
-    val base = array_join(Dedup.tokens(text), " ")
-    val marked = replace(
-      regexp_replace(base, "(.)", S + "$1" + E), lit(S + " " + E),
-      lit(" "))
-    val folded = merges.foldLeft(marked) { case (s, (a, b)) =>
-      replace(s, lit(S + a + E + S + b + E), lit(S + a + b + E))
-    }
-    filter(split(regexp_replace(folded, "[" + S + E + "]", " "), " "),
-      t => length(t) > 0)
   }
 
   /** Gopher-style rule filter (Rae et al. 2021, arXiv:2112.11446
@@ -594,7 +544,7 @@ object TextFns {
     * the corpus-scan form (BpeNative tokenizes text and then works
     * word-by-word, so pairs-of(text) = ⋃ pairs-of(word) with
     * occurrence multiplicity = word count; TokenizerSpec pins
-    * equality against [[bpeTrainCorpusScan]]; the sf1 A/B recorded
+    * equality against the corpus-scan form; the sf1 A/B recorded
     * in BENCH_sf1_r12.json asserted trajectory equality at scale).
     * Measured A/B (warm medians, within-rep order alternated,
     * BENCH_sf1_r12.json `bpe_ab` records): sf1 4 merges
@@ -630,40 +580,6 @@ object TextFns {
           graft.functions.BpeAdjPairs(col("w"), merges)).as("pair"),
           col("cnt"))
         .groupBy("pair").agg(sum("cnt").as("cnt"))
-        .orderBy(col("cnt").desc, col("pair"))
-        .limit(1)
-        .collect()
-      if (best.isEmpty) dry = true // every word is one symbol
-      else {
-        val p = best(0).getString(0)
-        val sp = p.indexOf(' ')
-        out += ((p.substring(0, sp), p.substring(sp + 1),
-          best(0).getLong(1)))
-      }
-      k += 1
-    }
-    out.toSeq
-  }
-
-  /** The pre-round-11 corpus-scan trainer — each merge round re-reads
-    * full document text (O(merges × corpus)). Kept ONLY as the
-    * equivalence witness for [[bpeTrain]]'s distinct-word rewrite
-    * (TokenizerSpec pins identical merge trajectories); never call it
-    * on a real corpus.
-    */
-  private[graft] def bpeTrainCorpusScan(
-      df: org.apache.spark.sql.DataFrame, textCol: String,
-      nMerges: Int): Seq[(String, String, Long)] = {
-    require(nMerges > 0, "nMerges must be positive")
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Long)]
-    var k = 0
-    var dry = false
-    while (k < nMerges && !dry) {
-      val merges = out.toSeq.map { case (a, b, _) => (a, b) }
-      val best = df.select(explode(
-          graft.functions.BpeAdjPairs(col(textCol), merges)).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("pair"))
         .limit(1)
         .collect()
@@ -832,9 +748,8 @@ object TextFns {
   }
 
   /** Row-local form of [[linearQuality]]: struct<margin, n_tokens> as
-    * ONE scan-local expression — no explode, no shuffle, usable under
-    * readStream (the streaming quality-classifier twin) and inside any
-    * projection. Per-token terms round to DECIMAL scale 15 and then
+    * ONE scan-local expression — no explode, no shuffle, usable inside
+    * any projection. Per-token terms round to DECIMAL scale 15 and then
     * accumulate as exact scaled LONGS (|term| ≤ tf/dl sums to ≤ 1, so
     * the running sum is bounded by ±10^15 — far inside long range and
     * double-exact), so this computes bit-identical margins to the
@@ -858,16 +773,14 @@ object TextFns {
       "weights must be finite with |w| <= 1000 (fixed-point margin bound)")
     val tcs = graft.functions.TokenCounts(text)
     def wOf(tok: Column): Column = {
-      val bucket = conv(org.apache.spark.sql.functions.substring(
-        md5(tok), 1, 15), 16, 10).cast("long") % dim
+      val bucket = graft.functions.Md5Fold60(tok) % dim
       weights match {
         case Some(ws) =>
           element_at(lit(ws.toArray), (bucket + 1).cast("int"))
         case None =>
-          conv(org.apache.spark.sql.functions.substring(
-            md5(concat(lit(s"w:$seed:"), bucket.cast("string"))), 1, 15),
-            16, 10)
-            .cast("long").cast("double") / 1152921504606846976.0d * 2 - 1
+          graft.functions.Md5Fold60(
+              concat(lit(s"w:$seed:"), bucket.cast("string")))
+            .cast("double") / 1152921504606846976.0d * 2 - 1
       }
     }
     // scale-15 fixed point: (term → decimal(20,15)) × 10^15 is an
@@ -928,8 +841,7 @@ object TextFns {
             graft.functions.TokenCounts(col(textCol)).as("tcs"))
           .withColumn("r",
             lit(1.0d) / (lit(1.0d) + exp(-col("mg"))) - col("y")))
-      val bucket = conv(org.apache.spark.sql.functions.substring(
-        md5(col("tc.token")), 1, 15), 16, 10).cast("long") % dim
+      val bucket = graft.functions.Md5Fold60(col("tc.token")) % dim
       // ONE action per iteration (r17): the bias gradient and the doc
       // count ride the same grouped aggregate as the weight buckets —
       // a per-doc synthetic bucket −1 row unioned under the exploded
@@ -1122,6 +1034,17 @@ object TextFns {
       .select("query_id", "rank", "doc_id", "score", "n_terms")
   }
 
+  /** Corpus vocabulary statistics: per-token total occurrences (tf)
+    * and document frequency (df) — the vocabulary/idf-building pass of
+    * a training-data pipeline. The per-document counting happens
+    * row-locally (native TokenCounts: one pass builds the distinct
+    * tokens with their in-document counts), so the corpus pass is ONE
+    * scan → ONE explode of the distinct tokens per document → ONE hash
+    * aggregation with map-side partial agg (`sum(cnt)` = tf, `count` =
+    * df). No `count(distinct)` Expand, no second scan, no join. Top-N
+    * by (df desc, token) keeps the result bounded (TakeOrdered, no
+    * global sort) at any corpus size.
+    */
   def docFrequency(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, topN: Int = 200): org.apache.spark.sql.DataFrame =
     df.select(explode(graft.functions.TokenCounts(col(textCol))).as("tc"))

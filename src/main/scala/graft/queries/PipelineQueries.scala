@@ -2378,8 +2378,6 @@ object PipelineQueries {
     "comme", "par", "un", "une", "des")
   private val toks =
     """list_filter(str_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"""
-  private def swCount(ws: Seq[String]) =
-    s"len(list_filter($toks, x -> x IN ${swList(ws)}))"
 
   /** Unicode-letter token variant mirroring TextFns.lowerTokens
     * ([^\p{L}0-9]+ — RE2 supports \p{L}): ONLY the stopword-ratio /

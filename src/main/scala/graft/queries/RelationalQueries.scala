@@ -146,8 +146,8 @@ object RelationalQueries {
       .orderBy("nationkey", "rk")
   }
 
-  /** Tumbling-hour event rollup — the batch shape of the streaming agg
-    * (graft.streaming mirrors this with a watermark). */
+  /** Tumbling-hour event rollup: event counts and value sums per
+    * (hour window, event type). */
   def qEventsHourly(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .groupBy(date_format(col("ts"), "yyyy-MM-dd HH").as("hour"),

@@ -39,7 +39,7 @@ object QueryCompiler {
   final case class Pattern(e: Term, a: Term, v: Term, src: String = "default")
 
   /** Canonical encoding of a pattern constant (must match Shred.canon). */
-  private def canonConst(x: Any): (String, String) = x match {
+  private[query] def canonConst(x: Any): (String, String) = x match {
     case s: String => (s, "str")
     case b: Boolean => (b.toString, "bool")
     case n: Double =>
@@ -52,49 +52,7 @@ object QueryCompiler {
     case other => (other.toString, "str")
   }
 
-  /** Compile one pattern to a frame with one struct column per qvar
-    * (the legacy canonical-string form, kept as the differential
-    * authority for [[runBoxed]]'s typed route). A qvar repeated WITHIN
-    * the pattern ([?x :a ?x]) projects once; later occurrences become
-    * row-local struct-equality filters — the same semantics the
-    * across-pattern join gives shared qvars (struct `===` treats null
-    * fields as equal, matching join/distinct).
-    */
-  private def patternFrame(triples: DataFrame, p: Pattern): DataFrame = {
-    var f = triples
-    p.a match {
-      case C(name) => f = f.filter(col("a") === name.toString)
-      case _ => ()
-    }
-    p.v match {
-      case C(value) =>
-        val (v, vt) = canonConst(value)
-        f = f.filter(col("v") === v && col("vt") === vt)
-      case _ => ()
-    }
-    val cols = Seq.newBuilder[Column]
-    val seen = scala.collection.mutable.Map.empty[String, Column]
-    def bind(n: String, s: Column): Unit = seen.get(n) match {
-      case Some(prev) => f = f.filter(prev === s)
-      case None => seen(n) = s; cols += s.as(n)
-    }
-    p.e match {
-      case V(n) => bind(n, struct(col("e").as("v"), lit("ref").as("vt")))
-      case C(id) => f = f.filter(col("e") === id.toString)
-      case W => ()
-    }
-    p.a match {
-      case V(n) => bind(n, struct(col("a").as("v"), lit("str").as("vt")))
-      case _ => ()
-    }
-    p.v match {
-      case V(n) => bind(n, struct(col("v").as("v"), col("vt").as("vt")))
-      case _ => ()
-    }
-    f.select(cols.result(): _*)
-  }
-
-  /** Typed twin of [[patternFrame]]: four flat native columns per qvar
+  /** One pattern's frame: four flat native columns per qvar
     * ([[TypedEnc]]), encoded row-locally AFTER the pattern's constant
     * filters, so the join/distinct exchanges above carry natives. The
     * within-pattern repeated-qvar filter compares the encoded tuples —
@@ -214,9 +172,10 @@ object QueryCompiler {
     *     instead of two strings — and the boxed struct<v,vt> is
     *     decoded AFTER the distinct as a row-local projection.
     *
-    * Both tiers are bit-identical to [[runBoxedCanonical]], which is
-    * retained as the differential authority (EavTypedProps pins the
-    * typed route; EavRegroupSpec pins the regrouped one).
+    * Both tiers are bit-identical to the canonical-string execution
+    * (struct<v, vt> bindings through the joins and the distinct), which
+    * the tests keep as the differential authority (EavTypedProps pins
+    * the typed route; EavRegroupSpec pins the regrouped one).
     */
   def runBoxed(sources: Map[String, DataFrame], patterns: Seq[Pattern],
       predicates: Seq[Map[String, Column] => Column] = Nil,
@@ -297,7 +256,7 @@ object QueryCompiler {
       // the generator emits NOTHING for a null entity id, so null-id
       // document rows must not participate; after the filter the
       // column is provably non-null (KnownNotNull), which is what
-      // runDocsNative's id eligibility needs on parquet sources
+      // the native binder's id eligibility needs on parquet sources
       // (their schemas mark every column nullable)
       val base =
         if (eExpr.nullable)
@@ -390,32 +349,6 @@ object QueryCompiler {
       TypedEnc.boxedOf(distinctAll, n).as(n)): _*)
   }
 
-  /** The legacy canonical-string execution of [[runBoxed]]: binding
-    * structs <v: string, vt: string> travel through the join chain and
-    * the distinct. Retained as the differential authority the typed
-    * route is property-checked against; not used by any query path.
-    */
-  private[graft] def runBoxedCanonical(sources: Map[String, DataFrame],
-      patterns: Seq[Pattern],
-      predicates: Seq[Map[String, Column] => Column] = Nil,
-      keepDBid: Boolean = false,
-      boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
-      : DataFrame = {
-    require(patterns.nonEmpty, "query{} needs at least one pattern")
-    val joined = patterns.map(p => patternFrame(sources(p.src), p))
-      .reduceLeft(joinShared)
-    val filtered = filterBindings(joined,
-      joined.columns.map(n => n -> joined(n)).toMap,
-      predicates, boxedPredicates)
-    // Datalog set semantics over ALL found qvars, THEN drop entity vars
-    // (so residual duplicate bsets survive, as in the reference).
-    val entityVars = entityVarsOf(patterns)
-    val distinctAll = filtered.distinct()
-    val out = distinctAll.columns
-      .filter(c => keepDBid || !entityVars.contains(c))
-    distinctAll.select(out.toSeq.map(distinctAll(_)): _*)
-  }
-
   /** Single-source convenience. */
   def run(triples: DataFrame, patterns: Seq[Pattern]): DataFrame =
     run(Map("default" -> triples), patterns)
@@ -423,7 +356,7 @@ object QueryCompiler {
   /** Natural join on the shared binding columns (cross join when none
     * are shared) — the conjunction of two binding frames.
     */
-  private def joinShared(acc: DataFrame, next: DataFrame): DataFrame = {
+  private[query] def joinShared(acc: DataFrame, next: DataFrame): DataFrame = {
     val shared = acc.columns.toSet.intersect(next.columns.toSet).toSeq
     if (shared.nonEmpty) acc.join(next, shared) else acc.crossJoin(next)
   }
@@ -432,7 +365,7 @@ object QueryCompiler {
     * qvar's canonical string, `boxedPredicates` its struct<v,vt> view
     * (`boxed`, by qvar name).
     */
-  private def filterBindings(f: DataFrame, boxed: Map[String, Column],
+  private[query] def filterBindings(f: DataFrame, boxed: Map[String, Column],
       predicates: Seq[Map[String, Column] => Column],
       boxedPredicates: Seq[Map[String, Column] => Column]): DataFrame = {
     val bound = boxed.map { case (n, s) => n -> s.getField("v") }
@@ -442,7 +375,7 @@ object QueryCompiler {
   }
 
   /** The qvars in entity position. */
-  private def entityVarsOf(patterns: Seq[Pattern]): Set[String] =
+  private[query] def entityVarsOf(patterns: Seq[Pattern]): Set[String] =
     patterns.flatMap(_.e match {
       case V(n) => Some(n); case _ => None
     }).toSet
@@ -1046,7 +979,7 @@ object QueryCompiler {
     }
   }
 
-  /** The authority's output column order, replayed: runBoxedCanonical
+  /** The authority's output column order, replayed: the canonical form
     * binds per pattern (e, attr-var, value) and folds frames with
     * using-column joins, which move the SHARED vars to the front at
     * each step — the direct path compiles groups, so its intermediate
@@ -1093,30 +1026,6 @@ object QueryCompiler {
     boxed.select(boxed.columns.toSeq
       .map(c => boxed(c).getField("v").as(c)): _*)
   }
-
-  /** The boxed build of [[planDocs]] alone — the authority the native
-    * build is checked against. None when the shape does not resolve.
-    */
-  private[graft] def runDocsBoxedOpt(sources: Map[String, DocSource],
-      patterns: Seq[Pattern],
-      predicates: Seq[Map[String, Column] => Column] = Nil,
-      keepDBid: Boolean = false,
-      boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
-      : Option[DataFrame] =
-    planDocs(sources, patterns, predicates, keepDBid, _ => boxedPredicates,
-      native = false).map(_.bsets)
-
-  /** The native build of [[planDocs]] alone. None when the shape does
-    * not resolve or its qvar types cannot travel natively.
-    */
-  def runDocsNative(sources: Map[String, DocSource],
-      patterns: Seq[Pattern],
-      predicates: Seq[Map[String, Column] => Column] = Nil,
-      keepDBid: Boolean = false,
-      boxedPredicates: Seq[Map[String, Column] => Column] = Nil)
-      : Option[DataFrame] =
-    planDocs(sources, patterns, predicates, keepDBid, _ => boxedPredicates,
-      boxed = false).map(_.bsets)
 
   /** The document tier: resolve the patterns once ([[resolveGroups]]),
     * then build the binding frame with the NATIVE binder when the

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
   * vt: string tag)` as FOUR flat non-null columns, so Datalog joins and
   * the set-semantics distinct shuffle 8-byte natives instead of
   * canonical-string structs — the EAV-path twin of
-  * [[QueryCompiler.runDocsNative]]'s source-typed travel.
+  * the document tier's native binder.
   *
   * Layout per qvar `n` (column names `n#t`, `n#l`, `n#s`, `n#x`):
   *

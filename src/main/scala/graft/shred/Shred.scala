@@ -573,7 +573,7 @@ object Shred {
     val spark = triples.sparkSession
     val names = Seq("e", "a", "v", "vt", "vn")
     def relOf(plan: LogicalPlan): Option[LogicalRelation] = plan match {
-      case p @ Project(pl, lr: LogicalRelation)
+      case Project(pl, lr: LogicalRelation)
           if pl.forall(_.isInstanceOf[AttributeReference]) &&
             pl.map(_.name) == names => Some(lr)
       case lr: LogicalRelation

@@ -307,19 +307,4 @@ object Ingest {
           payload.stripSuffix("\r\n\r\n").stripSuffix("\r\n"))
       }.toDF()
   }
-
-  /** WARC → documents-table shape: conversion/response records become
-    * (doc_id, url, text) rows ready for the curation pipeline
-    * (doc_id = stable content-derived id, like Shred's).
-    */
-  def warcDocuments(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    readWarc(spark, path)
-      .filter(col("warcType").isin("conversion", "response") &&
-        length(col("payload")) > 0)
-      .select(
-        org.apache.spark.sql.functions.abs(
-          xxhash64(col("recordId"), col("payload"))).as("doc_id"),
-        col("targetUri").as("url"), col("payload").as("text"))
-  }
 }

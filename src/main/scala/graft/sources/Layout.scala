@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.graftglue.ColumnGlue
 
 /** Multi-dimensional clustering layout: Morton (Z-order) interleaving,
-  * the write-time complement to [[Bucketing]]'s hash layout.
+  * a write-time layout for multi-column data skipping.
   *
   * WHY at 100 TB: parquet/ORC data skipping works off per-file (and
   * per-row-group) min/max spans. Sorting by ONE column makes its

@@ -22,7 +22,6 @@ object GenScale {
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val src = "/root/testdata/sf0.1"
     val spark = graft.Sessions.local()
-    import spark.implicits._
 
     def h(c: Column, salt: Int): Column =
       abs(hash(c, lit(42), lit(salt)).cast("long"))

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
-import graft.pipeline.{Importance, TextFns}
+import graft.pipeline.{BpeReference, Importance, TextFns}
 
 /** The round-7 native kernels (DSIR grams, BPE, char grams, positional
   * gram hashes) must be bit-identical to Column reference forms over
@@ -56,7 +56,7 @@ class ImportanceNativeSpec extends SparkSpec {
       ("s", "t"), ("th", "e"), ("t", "h"))
     val diff = corpus.select(
         TextFns.bpeEncode(col("text"), merges).as("n"),
-        TextFns.bpeEncodeChain(col("text"), merges).as("c"))
+        BpeReference.encodeChain(col("text"), merges).as("c"))
       .filter(not(col("n") <=> col("c")))
       .count()
     assert(diff == 0)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 import graft.pipeline.{Dedup, TextFns}
@@ -10,6 +11,27 @@ import graft.pipeline.{Dedup, TextFns}
   * plus hand-picked edge shapes.
   */
 class TextHashNativeSpec extends SparkSpec {
+
+  /** 64 ±1 contributions from the first 16 hex digits of an md5 hex
+    * string (4 bits per digit, LSB first within each digit).
+    */
+  private def md5BitSigns(m: Column): Column =
+    flatten(transform(sequence(lit(0), lit(15)), d => {
+      val v = conv(m.substr(d + 1, lit(1)), 16, 10).cast("int")
+      array(Seq(1, 2, 4, 8).map(mask =>
+        when(v.bitwiseAND(mask) =!= 0, 1).otherwise(-1)): _*)
+    }))
+
+  /** Column-expression (interpreted-HOF) form of [[Dedup.simhashMd5]]:
+    * one md5 + a 64-lane sign aggregate per token — the executable
+    * spec the native kernel must match.
+    */
+  private def simhashMd5Cols(text: Column): Column = {
+    val hashes = transform(Dedup.tokens(text), t => md5(t))
+    val sums = aggregate(hashes, array_repeat(lit(0), 64),
+      (acc, m) => zip_with(acc, md5BitSigns(m), (a, c) => a + c))
+    array_join(transform(sums, s => when(s > 0, "1").otherwise("0")), "")
+  }
 
   private def edgeDf = {
     import spark.implicits._
@@ -33,7 +55,7 @@ class TextHashNativeSpec extends SparkSpec {
       .union(edgeDf)
     val diff = doc.select(
         Dedup.simhashMd5(col("text")).as("n"),
-        Dedup.simhashMd5Cols(col("text")).as("c"))
+        simhashMd5Cols(col("text")).as("c"))
       .filter(not(col("n") <=> col("c")))
       .count()
     assert(diff == 0)
@@ -79,7 +101,7 @@ class TextHashNativeSpec extends SparkSpec {
     val df = strings.toDF("text")
     val diff = df.select(
         Dedup.simhashMd5(col("text")).as("sn"),
-        Dedup.simhashMd5Cols(col("text")).as("sc"),
+        simhashMd5Cols(col("text")).as("sc"),
         TextFns.fingerprintMd5(col("text")).as("fn"),
         TextFns.fingerprintMd5Cols(col("text")).as("fc"),
         Shingles(col("text"), 3).as("gn"),

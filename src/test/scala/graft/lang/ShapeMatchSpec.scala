@@ -213,6 +213,19 @@ class ShapeMatchSpec extends SparkSpec {
       105.0)
   }
 
+  test("$reduceByKey: a non-commutative fold runs in ascending value order") {
+    // acc*2 + x over the sorted values 1, 2, 4: seed 1, 1*2+2 = 4,
+    // 4*2+4 = 12; any other order gives a different result
+    import spark.implicits._
+    val df = Seq(("a", 4.0), ("a", 1.0), ("a", 2.0), ("b", 5.0))
+      .toDF("k", "n")
+    val out = RM.queryFrame(
+        "$reduceByKey($frame, 'k', function($a, $x) { $a * 2 + $x })",
+        spark, Map("frame" -> df))
+      .orderBy("k").as[(String, Double)].collect().toSeq
+    assert(out == Seq(("a", 12.0), ("b", 5.0)), out)
+  }
+
   test("$reduceByKey: all-null value group folds to null, not an error") {
     // collect_list drops nulls, so a key whose values are ALL null
     // folds over an EMPTY array — the no-init seed must be

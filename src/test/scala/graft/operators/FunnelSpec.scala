@@ -41,12 +41,6 @@ class FunnelSpec extends SparkSpec {
     assert(out(5L)._1 == 2)
     assert(out(5L)._3.contains(ts("2024-01-01 10:10:00")),
       "the tied click is rejected; the later one qualifies")
-    // summary agrees with the per-user frame
-    val per = Funnel.funnel(ev, "user_id", "event_type", "ts",
-      Seq("view", "click", "purchase"), windowMinutes = 120)
-    val sm = Funnel.funnelSummary(per, 3)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(sm == Map(1 -> 4L, 2 -> 3L, 3 -> 1L))
   }
 
   test("funnel: earliest chain is used, not any chain") {
@@ -61,6 +55,31 @@ class FunnelSpec extends SparkSpec {
       Seq("view", "click"), windowMinutes = 60).head
     assert(r.getInt(1) == 1)
     assert(r.getTimestamp(2) == ts("2024-01-01 08:00:00"))
+  }
+
+  test("funnel: a later-listed earlier view re-anchors the chain; t0 " +
+      "keeps its microseconds") {
+    val ev = Seq(
+      // user 1: the click is listed before the view that anchors it
+      (1L, "click", ts("2026-01-01 10:30:00")),
+      (1L, "view", ts("2026-01-01 10:00:00")),
+      (1L, "purchase", ts("2026-01-01 11:00:00")),
+      // user 2: a purchase with no click stops the chain at 1
+      (2L, "view", ts("2026-01-01 10:00:00.000123")),
+      (2L, "purchase", ts("2026-01-01 10:20:00")),
+      // user 4: the click precedes the first view, but an even
+      // earlier view re-anchors the chain before it
+      (4L, "view", ts("2026-01-01 10:30:00")),
+      (4L, "click", ts("2026-01-01 10:00:00")),
+      (4L, "view", ts("2026-01-01 09:50:00"))
+    ).toDF("user_id", "event_type", "ts")
+    val out = Funnel.funnel(ev, "user_id", "event_type", "ts",
+        Seq("view", "click", "purchase"), windowMinutes = 120)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getInt(1), r.getTimestamp(2)))).toMap
+    assert(out(1L) == ((3, ts("2026-01-01 10:00:00"))))
+    assert(out(2L) == ((1, ts("2026-01-01 10:00:00.000123"))))
+    assert(out(4L) == ((2, ts("2026-01-01 09:50:00"))))
   }
 
   test("cohort retention: offsets, sizes, and distinct-user counting") {

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 
@@ -10,6 +11,27 @@ import graft.{SparkSpec, Tables}
 class ClusterSpec extends SparkSpec {
 
   private def emb = Tables.embeddings(spark, sf("sf0.001"))
+
+  /** Column-expression form of [[Cluster.assign]] (executable spec):
+    * |w|² − 2·v·w per centroid, summed in index order, folded to the
+    * argmin with ties to the smaller id.
+    */
+  private def assignCols(vec: Column, cents: Array[Array[Double]])
+      : Column = {
+    val scored = cents.zipWithIndex.map { case (w, i) =>
+      val sq = w.foldLeft(0.0d)((s, x) => s + x * x)
+      val dot = w.indices.map(j => element_at(vec, j + 1) * lit(w(j)))
+        .reduceLeft(_ + _)
+      (lit(sq) - lit(2.0d) * dot, i)
+    }
+    val best = scored.tail.foldLeft(
+      struct(scored.head._1.as("d"), lit(0).as("c"))) {
+      case (b, (d, i)) =>
+        when(d < b.getField("d"),
+          struct(d.as("d"), lit(i).as("c"))).otherwise(b)
+    }
+    best.getField("c")
+  }
 
   test("kmeans assignments are identical under repartitioning") {
     val (a1, c1) = Cluster.kmeans(emb, "vec_id", "embedding",
@@ -58,7 +80,7 @@ class ClusterSpec extends SparkSpec {
       col("embedding").cast("array<double>").as("v"))
     val diff = v.select(
         Cluster.assign(col("v"), cents).as("n"),
-        Cluster.assignCols(col("v"), cents).as("c"))
+        assignCols(col("v"), cents).as("c"))
       .filter(col("n") =!= col("c")).count()
     assert(diff == 0)
   }

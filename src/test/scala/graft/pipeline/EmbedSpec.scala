@@ -31,34 +31,19 @@ class EmbedSpec extends SparkSpec {
     assert(out == expected)
   }
 
-  test("dense form carries the sparse components with zeros " +
-      "elsewhere; zero-token docs keep a (zero) row") {
-    import spark.implicits._
-    val doc = Tables.documents(spark, sf()).limit(50)
-      .select(col("doc_id"), col("text"))
-      .union(Seq((999999L, ""), (999998L, "?!.,")).toDF("doc_id", "text"))
-    val sparse = Embed.hashedDocVector(doc, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
-      .toMap
-    val dense = Embed.hashedDocVectorDense(doc, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(dense.size == 52, "every document gets a dense row")
-    assert(dense(999999L).forall(_ == 0L) &&
-      dense(999998L).forall(_ == 0L),
-      "zero-token documents embed as the zero vector, not a missing row")
-    dense.foreach { case (id, vec) =>
-      assert(vec.length == 64)
-      vec.zipWithIndex.foreach { case (v, b) =>
-        assert(v == sparse.getOrElse((id, b), 0L),
-          s"doc $id bucket $b")
-      }
-    }
-  }
-
   test("hashed vectors feed the embedding family end to end") {
+    val dim = 64
     val doc = Tables.documents(spark, sf()).limit(100)
-    val vecs = Embed.hashedDocVectorDense(doc, "doc_id", "text")
-      .select(col("doc_id"), col("vec").cast("array<double>").as("v"))
+    // the dense rendering of the sparse form: absent buckets are 0,
+    // and a document with no tokens gets the zero vector, not no row
+    val sparse = Embed.hashedDocVector(doc, "doc_id", "text", dim)
+      .groupBy("doc_id")
+      .agg(map_from_entries(collect_list(struct(col("b"), col("v"))))
+        .as("m"))
+    val vecs = doc.select("doc_id").join(sparse, Seq("doc_id"), "left")
+      .select(col("doc_id"), transform(sequence(lit(0), lit(dim - 1)),
+          i => coalesce(element_at(col("m"), i), lit(0L)))
+        .cast("array<double>").as("v"))
     val (assigned, centers) =
       Cluster.kcenterGreedy(vecs, "doc_id", "v", k = 3)
     assert(centers.size == 3)

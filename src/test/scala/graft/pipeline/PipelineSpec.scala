@@ -1,11 +1,29 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Padding-waste accounting for a batch assignment frame
+    * ((shard, bin) batches of `n_tokens` chunks): the padded-token
+    * fraction a trainer would burn, `1 − Σtokens / (n_batches ·
+    * capacity)`.
+    */
+  private def packingStats(assignment: DataFrame, capacity: Int)
+      : DataFrame =
+    assignment.groupBy("shard", "bin")
+      .agg(sum("n_tokens").as("tokens"))
+      .agg(count(lit(1)).as("n_batches"), sum("tokens").as("tokens"))
+      .select((lit(1.0d) - col("tokens") /
+        (col("n_batches") * capacity)).as("waste_frac"))
+
+  /** PQ reconstruction: the concatenated codebook entries of `codes`. */
+  private def pqDecode(codes: Seq[Int],
+      books: Array[Array[Array[Double]]]): Seq[Double] =
+    codes.zipWithIndex.flatMap { case (c, s) => books(s)(c).toSeq }
 
   private val docs = Seq(
     (1L, "The quick brown fox jumps over the lazy dog near the river bank"),
@@ -20,15 +38,19 @@ class PipelineSpec extends SparkSpec {
     // 1, 4 and 5 (case/whitespace) normalize equal → one group of 3
     assert(g.filter($"n_dups" === 3).select("keep_id")
       .head().getLong(0) == 1L)
-    assert(Dedup.exactDedup(docs, "doc_id", "text").count() == 3)
+    // one group per distinct normalized text: the dedup keeps 3 rows
+    assert(g.count() == 3)
   }
 
   test("minhash LSH finds near-dup pair, skips unrelated") {
-    val pairs = Dedup.minhashDedupPairsMd5(docs, "doc_id", "text",
-      n = 3, k = 64, b = 16, threshold = 0.5)
-      .select("id1", "id2").as[(Long, Long)].collect().toSet
+    // the corpus against itself: self pairs are excluded, so every
+    // near-dup pair shows in both orientations
+    val pairs = Dedup.incrementalDupPairsMd5(docs, "doc_id", docs,
+        "doc_id", "text", n = 3, k = 64, b = 16, threshold = 0.5)
+      .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L))) // one word differs
     assert(pairs.contains((1L, 4L))) // identical
+    assert(pairs.forall { case (a, b) => pairs.contains((b, a)) })
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
@@ -339,9 +361,16 @@ class PipelineSpec extends SparkSpec {
         $"b.embedding".cast("array<double>")))
       .head().getDouble(0)
     assert(cos12 > 0.999)
-    val pairs = Dedup.embeddingDupPairs(vecs, "vec_id", "embedding",
-      threshold = 0.99, planes = 4, dim = 4)
-      .select("id1", "id2").as[(Long, Long)].collect().toSet
+    // bucket by one hyperplane signature (p_embed_dup's kernel), then
+    // verify by cosine within buckets
+    val v = vecs.select($"vec_id", $"embedding".cast("array<double>")
+        .as("vec"))
+      .withColumn("bucket", element_at(
+        graft.functions.HyperplaneBuckets($"vec", 4, 1, 4, 42), 1))
+    val pairs = v.as("l").join(v.as("r"),
+        $"l.bucket" === $"r.bucket" && $"l.vec_id" < $"r.vec_id")
+      .filter(Dedup.cosine($"l.vec", $"r.vec") >= 0.99)
+      .select($"l.vec_id", $"r.vec_id").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }
 
@@ -400,7 +429,7 @@ class PipelineSpec extends SparkSpec {
     assert(base.size.toLong == nChunks)
     // size-sorted (next-fit-decreasing) waste ≤ doc-order waste
     def waste(bySize: Boolean): Double =
-      TextFns.packingStats(run(bySize), capacity = 80)
+      packingStats(run(bySize), capacity = 80)
         .select("waste_frac").head().getDouble(0)
     val (doc, nfd) = (waste(false), waste(true))
     info(f"padding waste: doc-order $doc%.4f vs size-sorted $nfd%.4f")
@@ -410,7 +439,7 @@ class PipelineSpec extends SparkSpec {
     // a strict win — 11.3% → 3.8% padded tokens on this corpus
     // (COVERAGE.md records the capacity-ratio sweep)
     def waste128(bySize: Boolean): Double =
-      TextFns.packingStats(TextFns.assembleBatchesStrict(d, "doc_id",
+      packingStats(TextFns.assembleBatchesStrict(d, "doc_id",
         "text", 32, 128, 8, bySize), 128)
         .select("waste_frac").head().getDouble(0)
     assert(waste128(true) < waste128(false),
@@ -479,29 +508,29 @@ class PipelineSpec extends SparkSpec {
     val df = rows.toDF("id", "v")
     val out = df.select($"id",
       Ann.pqEncode($"v", books).as("codes"))
-      .select($"id", $"codes",
-        Ann.pqDecode($"codes", books).as("dec"))
       .collect()
     out.foreach { r =>
       val c = r.getSeq[Int](1)
       assert(c == Seq.fill(4)(r.getLong(0).toInt),
         s"codes must recover the entry id, got $c for id ${r.getLong(0)}")
       val orig = rows(r.getLong(0).toInt)._2
-      val dec = r.getSeq[Double](2)
-      assert(dec == orig.toSeq, "decode must be bit-exact on entries")
+      assert(pqDecode(c, books) == orig.toSeq,
+        "decode must be bit-exact on entries")
     }
   }
 
   test("PQ: trained codebooks reduce reconstruction distortion") {
     val emb = spark.read.parquet(s"${sf("sf0.001")}/embeddings.parquet")
       .limit(200).cache()
-    def distortion(books: Array[Array[Array[Double]]]): Double =
-      emb.select(Ann.pqDecode(
-          Ann.pqEncode($"embedding", books), books).as("dec"),
-          $"embedding".cast("array<double>").as("v"))
-        .select(aggregate(zip_with($"v", $"dec",
-          (a, b) => (a - b) * (a - b)), lit(0.0d), _ + _).as("e"))
-        .agg(avg($"e")).head().getDouble(0)
+    def distortion(books: Array[Array[Array[Double]]]): Double = {
+      val errs = emb.select(Ann.pqEncode($"embedding", books),
+          $"embedding".cast("array<double>"))
+        .collect().map { r =>
+          r.getSeq[Double](1).zip(pqDecode(r.getSeq[Int](0), books))
+            .foldLeft(0.0d) { case (s, (a, b)) => s + (a - b) * (a - b) }
+        }
+      errs.sum / errs.length
+    }
     val seeded = distortion(Ann.pqBooks(8, 16, 8, seed = 9090))
     val trained = distortion(Ann.pqTrain(emb, "embedding",
       m = 8, ks = 16, subDim = 8, iters = 3, seed = 9090))
@@ -750,20 +779,6 @@ class PipelineSpec extends SparkSpec {
       "doc_id", 9).select("doc_id").as[Long].collect().toSeq
     assert(order1 == order2 && order1.toSet == (1L to 100L).toSet)
     assert(order1 != (1L to 100L).toSeq, "order should be shuffled")
-  }
-
-  test("shard writer: reproducible range shards with a per-file cap") {
-    val docs = (1L to 200L).map(i => (i, s"text $i")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
-    Sampling.writeShards(docs, "doc_id", dir, shards = 4,
-      maxRecordsPerFile = 30L, seed = 3)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(files.length >= 7, // 200 rows / 30-cap => >= 7 files
-      s"expected capped files, got ${files.length}")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 200)
-    assert(files.forall(f => spark.read.parquet(f.getPath).count() <= 30))
   }
 
   test("docFrequency: tf counts occurrences, df counts documents") {
@@ -1112,7 +1127,7 @@ class PipelineSpec extends SparkSpec {
         TextFns.bpeEncode($"text", merges).as("e"))
       .as[(Long, Seq[String])].collect().toMap
     val chain = df.select($"id",
-        TextFns.bpeEncodeChain($"text", merges).as("e"))
+        BpeReference.encodeChain($"text", merges).as("e"))
       .as[(Long, Seq[String])].collect().toMap
     assert(native == chain)
   }

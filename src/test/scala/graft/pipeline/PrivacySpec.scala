@@ -1,42 +1,9 @@
 package graft.pipeline
 
-import graft.{SparkSpec, Tables}
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class PrivacySpec extends SparkSpec {
-
-  private def quasi = Seq(col("c_mktsegment"), col("c_nationkey"))
-
-  test("summary agrees with the class report") {
-    val cust = Tables.customer(spark, sf())
-    val classes = Privacy.kAnonymityClasses(cust, quasi, 8).collect()
-    val s = Privacy.kAnonymitySummary(cust, quasi, 8).head
-    assert(s.getLong(0) == classes.length)
-    assert(s.getLong(1) == classes.count(!_.getBoolean(3)))
-    assert(s.getLong(2) == classes.filter(!_.getBoolean(3))
-      .map(_.getLong(2)).sum)
-    assert(s.getLong(3) == classes.map(_.getLong(2)).min)
-  }
-
-  test("suppression yields a k-anonymous frame with exactly the ok " +
-      "classes' rows") {
-    // single-column quasi so both verdicts occur at sf0.001
-    // (segment sizes there: 23,23,30,34,40 — k=30 keeps three)
-    val quasi = Seq(col("c_mktsegment"))
-    val cust = Tables.customer(spark, sf())
-    val k = 30L
-    val kept = Privacy.suppressSmallClasses(cust, quasi, k)
-    // released frame is k-anonymous by construction
-    val minClass = Privacy.kAnonymitySummary(kept, quasi, k)
-      .head.getLong(3)
-    assert(minClass >= k)
-    // row count = sum of ok class sizes (nothing else dropped)
-    val okRows = Privacy.kAnonymityClasses(cust, quasi, k)
-      .filter(col("ok")).agg(sum("class_size")).head.getLong(0)
-    assert(kept.count() == okRows)
-    assert(kept.columns.toSeq == cust.columns.toSeq,
-      "helper column must not leak")
-  }
 
   test("l-diversity: distinct and recursive verdicts on known classes") {
     import spark.implicits._

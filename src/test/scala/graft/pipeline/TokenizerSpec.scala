@@ -6,7 +6,7 @@ import graft.SparkSpec
   * rewrite: BPE pair statistics are word-internal, so training over
   * the staged (distinct word, count) frame must replay the EXACT
   * merge trajectory of the pre-rewrite corpus-scan trainer
-  * ([[TextFns.bpeTrainCorpusScan]], kept only as this witness) —
+  * ([[BpeReference.trainCorpusScan]], kept only as this witness) —
   * same merges, same order, same counts-at-selection.
   */
 class TokenizerSpec extends SparkSpec {
@@ -23,7 +23,7 @@ class TokenizerSpec extends SparkSpec {
 
   test("bpeTrain replays the corpus-scan merge trajectory exactly") {
     val fast = TextFns.bpeTrain(docs, "text", nMerges = 8)
-    val slow = TextFns.bpeTrainCorpusScan(docs, "text", nMerges = 8)
+    val slow = BpeReference.trainCorpusScan(docs, "text", nMerges = 8)
     assert(fast == slow,
       s"distinct-word and corpus-scan trajectories diverged:\n" +
         s"  fast: $fast\n  slow: $slow")
@@ -39,7 +39,7 @@ class TokenizerSpec extends SparkSpec {
   test("single-symbol corpus dries out identically in both forms") {
     val tiny = Seq("a a b", "b a").toDF("text")
     val fast = TextFns.bpeTrain(tiny, "text", nMerges = 4)
-    val slow = TextFns.bpeTrainCorpusScan(tiny, "text", nMerges = 4)
+    val slow = BpeReference.trainCorpusScan(tiny, "text", nMerges = 4)
     assert(fast == slow)
     assert(fast.isEmpty, "one-letter words have no adjacent pairs")
   }

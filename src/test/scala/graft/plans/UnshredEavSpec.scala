@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.shred.Shred
-import graft.query.QueryCompiler
+import graft.query.{QueryCompiler, QueryReference}
 import graft.query.QueryCompiler.{C, Pattern, V}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -175,10 +175,10 @@ class UnshredEavSpec extends SparkSpec {
     val pats = Seq(
       Pattern(V("e"), C("x"), V("d")),
       Pattern(V("e"), C("big"), V("b")))
-    val want = rows(QueryCompiler.runBoxedCanonical(
+    val want = rows(QueryReference.runBoxedCanonical(
       Map("default" -> Shred.shredExpr(wide, Some("id"))), pats))
     val srcs = Map("default" -> Shred.shred(wide, Some("id")))
-    assert(rows(QueryCompiler.runBoxedCanonical(srcs, pats)) == want)
+    assert(rows(QueryReference.runBoxedCanonical(srcs, pats)) == want)
     assert(rows(QueryCompiler.runBoxedEav(srcs, pats)) == want)
     assert(rows(QueryCompiler.runBoxed(srcs, pats)) == want)
     assert(want.size == 3 &&

@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{classify, forAll}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import graft.query.QueryCompiler
+import graft.query.{QueryCompiler, QueryReference}
 import graft.query.QueryCompiler.{C, DocSource, Pattern, V, W}
 
 /** Generative differential test for the r14 native-typed direct path:
@@ -14,9 +14,9 @@ import graft.query.QueryCompiler.{C, DocSource, Pattern, V, W}
   * string entity-id columns) and ARBITRARY constant-attribute pattern
   * conjunctions (1–2 sources, shared value vars, deliberate
   * repeated-qvar-within-a-group cases, constants, wildcards),
-  * [[QueryCompiler.runDocsNative]] — whenever it engages — must
+  * [[QueryReference.runDocsNative]] — whenever it engages — must
   * return row-for-row and schema-for-schema exactly what the boxed
-  * authority [[QueryCompiler.runDocsBoxedOpt]] returns. When it declines
+  * authority [[QueryReference.runDocsBoxedOpt]] returns. When it declines
   * (mixed integral+fractional vars, mixed decimal scales etc.), the
   * boxed form must still evaluate — the caller's fallback is always
   * sound.
@@ -149,7 +149,7 @@ object DirectNativeProps extends Properties("graft.query.native") {
           spark.createDataFrame(
             spark.sparkContext.parallelize(s.rows, 2), s.schema),
           "rid")).toMap
-        val boxed = QueryCompiler.runDocsBoxedOpt(sources, pats).get
+        val boxed = QueryReference.runDocsBoxedOpt(sources, pats).get
         val planned = QueryCompiler.planDocs(sources, pats, Nil,
           keepDBid = false, _ => Nil, boxed = false)
         val nativeOpt = planned.map(_.bsets)

@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{classify, forAll}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import graft.query.QueryCompiler
+import graft.query.{QueryCompiler, QueryReference}
 import graft.query.QueryCompiler.{C, Pattern, V, W}
 import graft.shred.Shred
 
@@ -195,11 +195,11 @@ object EavRegroupProps extends Properties("graft.query.regroup") {
             // explicit idCol: duplicates possible → product plans
             val srcs = Map("default" -> Shred.shred(df, Some("rid")))
             val got = render(QueryCompiler.runBoxed(srcs, pats))
-            val want = render(QueryCompiler.runBoxedCanonical(srcs, pats))
+            val want = render(QueryReference.runBoxedCanonical(srcs, pats))
             // content-derived ids: fused row-local plans
             val srcs2 = Map("default" -> Shred.shred(df))
             val got2 = render(QueryCompiler.runBoxed(srcs2, pats))
-            val want2 = render(QueryCompiler.runBoxedCanonical(srcs2, pats))
+            val want2 = render(QueryReference.runBoxedCanonical(srcs2, pats))
             // r17: the VERIFIED entry point — unique ids license the
             // fused plan from the write-time proof, duplicate ids fail
             // the proof and keep the product plan; triples (and so the

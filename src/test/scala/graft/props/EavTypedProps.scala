@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import graft.query.QueryCompiler
+import graft.query.{QueryCompiler, QueryReference}
 import graft.query.QueryCompiler.{C, Pattern, V, W}
 
 /** Generative differential test for the r15 typed EAV route: on
@@ -16,7 +16,7 @@ import graft.query.QueryCompiler.{C, Pattern, V, W}
   * pattern, entity-var-as-value-var collisions, keepDBid), the typed
   * execution [[QueryCompiler.runBoxed]] must return row-for-row and
   * schema-for-schema exactly what the canonical-string authority
-  * [[QueryCompiler.runBoxedCanonical]] returns. This pins the
+  * [[QueryReference.runBoxedCanonical]] returns. This pins the
   * TypedEnc bijection END-TO-END, including Spark's struct-field null
   * equality (null fields join/distinct as equal), which the typed
   * route must reproduce through its null bits.
@@ -101,7 +101,7 @@ object EavTypedProps extends Properties("graft.query.eavtyped") {
         }.toMap
         val typed = QueryCompiler.runBoxed(sources, pats,
           keepDBid = keep)
-        val canon = QueryCompiler.runBoxedCanonical(sources, pats,
+        val canon = QueryReference.runBoxedCanonical(sources, pats,
           keepDBid = keep)
         val (ts, cs) = (render(typed), render(canon))
         // names+types must agree; nullability may not (legacy lit("ref")

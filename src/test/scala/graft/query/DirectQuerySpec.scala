@@ -73,12 +73,12 @@ class DirectQuerySpec extends SparkSpec {
     "devices" -> DocSource(devices, "did"))
 
   test("native path engages and equals the boxed path bit-for-bit") {
-    val native = QueryCompiler.runDocsNative(srcs, pats)
+    val native = QueryReference.runDocsNative(srcs, pats)
     assert(native.isDefined, "typical long/string patterns must be " +
       "native-eligible")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("who", "dev").collect().toSeq
-    assert(rows(native.get) == rows(QueryCompiler.runDocsBoxedOpt(srcs, pats).get))
+    assert(rows(native.get) == rows(QueryReference.runDocsBoxedOpt(srcs, pats).get))
     // schemas agree modulo nullability: the product plan's explode of
     // a null-gated collect_set legitimately NARROWS v to non-null on
     // the native route (stronger, value-identical)
@@ -90,10 +90,10 @@ class DirectQuerySpec extends SparkSpec {
           case d => d
         })))
     assert(norm(native.get.schema) ==
-      norm(QueryCompiler.runDocsBoxedOpt(srcs, pats).get.schema))
+      norm(QueryReference.runDocsBoxedOpt(srcs, pats).get.schema))
     // keepDBid: entity-id boxing (long → string, vt ref) also agrees
-    val nk = QueryCompiler.runDocsNative(srcs, pats, keepDBid = true).get
-    val bk = QueryCompiler.runDocsBoxedOpt(srcs, pats, keepDBid = true).get
+    val nk = QueryReference.runDocsNative(srcs, pats, keepDBid = true).get
+    val bk = QueryReference.runDocsBoxedOpt(srcs, pats, keepDBid = true).get
     assert(nk.orderBy("who", "dev").collect().toSeq ==
       bk.orderBy("who", "dev").collect().toSeq)
   }
@@ -101,9 +101,9 @@ class DirectQuerySpec extends SparkSpec {
   test("native path agrees under boxed predicates") {
     val pred = (bound: Map[String, org.apache.spark.sql.Column]) =>
       bound("pid").getField("v").cast("long") < 3L
-    val native = QueryCompiler.runDocsNative(srcs, pats,
+    val native = QueryReference.runDocsNative(srcs, pats,
       boxedPredicates = Seq(pred)).get
-    val boxed = QueryCompiler.runDocsBoxedOpt(srcs, pats,
+    val boxed = QueryReference.runDocsBoxedOpt(srcs, pats,
       boxedPredicates = Seq(pred)).get
     assert(native.orderBy("who", "dev").collect().toSeq ==
       boxed.orderBy("who", "dev").collect().toSeq)
@@ -113,7 +113,7 @@ class DirectQuerySpec extends SparkSpec {
   test("native distinct shuffles native types, boxing is post-distinct") {
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     import org.apache.spark.sql.types.{LongType, StringType}
-    val native = QueryCompiler.runDocsNative(srcs, pats).get
+    val native = QueryReference.runDocsNative(srcs, pats).get
     val aggs = native.queryExecution.optimizedPlan.collect {
       case a: Aggregate => a
     }
@@ -149,10 +149,10 @@ class DirectQuerySpec extends SparkSpec {
     assert(direct == eav && direct == Seq("2", "5"), (direct, eav))
     // native engages here (singleton long) and agrees with boxed
     val srcs2 = Map("t" -> DocSource(rows, "rid"))
-    assert(QueryCompiler.runDocsNative(srcs2, pats2).isDefined)
-    assert(QueryCompiler.runDocsNative(srcs2, pats2).get.collect()
+    assert(QueryReference.runDocsNative(srcs2, pats2).isDefined)
+    assert(QueryReference.runDocsNative(srcs2, pats2).get.collect()
       .toSeq.map(_.toString).sorted ==
-      QueryCompiler.runDocsBoxedOpt(srcs2, pats2).get.collect()
+      QueryReference.runDocsBoxedOpt(srcs2, pats2).get.collect()
         .toSeq.map(_.toString).sorted)
     // statically mismatched KINDS (num vs bool) never match — the
     // boxed vt-tag semantics, constant-folded on the native route
@@ -182,7 +182,7 @@ class DirectQuerySpec extends SparkSpec {
     assert(eav.size == 9, eav)
     assert(direct == eav, (direct, eav))
     // native engages and agrees too
-    val nat = QueryCompiler.runDocsNative(
+    val nat = QueryReference.runDocsNative(
       Map("t" -> DocSource(rows, "id")), wpats)
     assert(nat.isDefined)
     assert(nat.get.count() == 9)
@@ -206,17 +206,17 @@ class DirectQuerySpec extends SparkSpec {
     val evPats = Seq(
       Pattern(V("p"), C("id"), V("pid"), "people"),
       Pattern(V("pid"), C("dname"), V("dev"), "devices"))
-    assert(QueryCompiler.runDocsNative(srcs, evPats).isEmpty)
+    assert(QueryReference.runDocsNative(srcs, evPats).isEmpty)
     // mixed integral+fractional sources for one var: canonical strings
     // join 5 with 5.0 exactly at any magnitude; doubles would not
     val mixPats = Seq(
       Pattern(V("p"), C("id"), V("x"), "people"),
       Pattern(V("d"), C("score"), V("x"), "scored"))
     val scored = Seq((1L, 1.0), (2L, 7.5)).toDF("sid", "score")
-    assert(QueryCompiler.runDocsNative(
+    assert(QueryReference.runDocsNative(
       srcs + ("scored" -> DocSource(scored, "sid")), mixPats).isEmpty)
     // and the equivalent boxed query still runs (the caller's fallback)
-    val fb = QueryCompiler.runDocsBoxedOpt(
+    val fb = QueryReference.runDocsBoxedOpt(
       srcs + ("scored" -> DocSource(scored, "sid")), mixPats).get
     assert(fb.collect().length == 1) // id 1 joins score 1.0 canonically
   }

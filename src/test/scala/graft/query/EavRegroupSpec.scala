@@ -36,7 +36,7 @@ class EavRegroupSpec extends SparkSpec {
       pats: Seq[Pattern], expectRegroup: Boolean,
       keepDBid: Boolean = false): Unit = {
     val got = QueryCompiler.runBoxed(sources, pats, keepDBid = keepDBid)
-    val want = QueryCompiler.runBoxedCanonical(sources, pats,
+    val want = QueryReference.runBoxedCanonical(sources, pats,
       keepDBid = keepDBid)
     assert(got.columns.toSeq == want.columns.toSeq)
     assert(rows(got) == rows(want))
@@ -435,7 +435,7 @@ class EavRegroupSpec extends SparkSpec {
     val src = Map("t" -> Shred.shred(t, Some("rid")))
     val got = QueryCompiler.runBoxed(src, pats,
       predicates = Seq(m => QueryCompiler.num(m("x")) > 3))
-    val want = QueryCompiler.runBoxedCanonical(src, pats,
+    val want = QueryReference.runBoxedCanonical(src, pats,
       predicates = Seq(m => QueryCompiler.num(m("x")) > 3))
     assert(rows(got) == rows(want))
     assert(regrouped(got))

@@ -219,20 +219,4 @@ class IngestSpec extends SparkSpec {
     assert(rows(0).getAs[String]("recordId") == "<urn:uuid:v11>")
     assert(rows(1).getAs[String]("payload") == "Second record text.")
   }
-
-  test("warcDocuments: conversion records become curation-ready rows") {
-    val docs = Ingest.warcDocuments(spark, warcFixture())
-      .orderBy("url").collect()
-    assert(docs.length == 2) // warcinfo record dropped
-    assert(docs.map(_.getAs[String]("url")).toSeq ==
-      Seq("https://example.com/a", "https://example.com/b"))
-    assert(docs.forall(_.getAs[Long]("doc_id") >= 0))
-    assert(docs(1).getAs[String]("text") == "Page B text.")
-    // ids are content-derived: re-reading gives identical ids
-    val again = Ingest.warcDocuments(spark, warcFixture())
-      .orderBy("url").collect()
-    // (fixture path differs but content is identical)
-    assert(again.map(_.getAs[Long]("doc_id")).toSeq ==
-      docs.map(_.getAs[Long]("doc_id")).toSeq)
-  }
 }
